@@ -289,21 +289,26 @@ def format_bench_output(timings: dict[str, float], sf: float) -> tuple[str, str]
     ranked = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
     # continuity names first (still slowest-first among themselves so
     # the printed map reads ranked), then the rest slowest-first; the
-    # shrink loop drops from the TAIL, i.e. non-pinned fillers go
-    # before any pinned name — a pinned name is only dropped in the
-    # degenerate case where the pinned set alone overflows the budget.
+    # shrink loop drops non-pinned fillers from the TAIL and never a
+    # pinned name: if the pinned set alone overflows the budget, the
+    # continuity contract cannot hold, so fail loudly instead of
+    # printing a map with silent phantom drops.
     pinned = [kv for kv in ranked if kv[0] in PRINTED_CONTINUITY]
     filler = [kv for kv in ranked if kv[0] not in PRINTED_CONTINUITY]
     ordered = pinned + filler
     k = len(ordered)
-    while k > 0:
+    while True:
         payload["queries"] = dict(ordered[:k])
         stdout_line = json.dumps(payload)
         if len(stdout_line) <= STDOUT_LINE_BUDGET:
             return full_line, stdout_line
+        if k == len(pinned):
+            raise ValueError(
+                f"the {len(pinned)} PRINTED_CONTINUITY names alone print "
+                f"{len(stdout_line)} chars, over STDOUT_LINE_BUDGET="
+                f"{STDOUT_LINE_BUDGET}; shrink the pinned set"
+            )
         k -= 1
-    payload["queries"] = {}
-    return full_line, json.dumps(payload)
 
 
 def ab_summary(

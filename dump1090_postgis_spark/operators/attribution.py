@@ -279,7 +279,7 @@ def grid_bbox_cells(
 
 
 def runway_dirs(runways: DataFrame) -> DataFrame:
-    """One-row (\_\_dirs ordered (ord, name, direction) array) frame —
+    """One-row (``__dirs``: ordered (ord, name, direction) array) frame —
     the heading-only fallback the bbox tier scans."""
     return _ordered_runways(runways).agg(
         F.array_sort(

@@ -285,35 +285,41 @@ def q_dedup_minhash_lsh_fast(spark, sf):
             )
 
     threading.Thread(target=_audit, daemon=True).start()
-    if rows_at_least(
-        docs, _MINHASH_VECTORIZE_MIN_DOCS,
-        size_hint=table_rows(sf, "documents"),  # footer: jobless gate
-    ):
-        # scale engine (round 7): bucketed Python-set Jaccard straight
-        # from the persisted banded frame — no 27M-pair distinct, no
-        # shingle-carrying pair joins (×100: 121 → 42.8 s, identical
-        # pairs; see BASELINE).  Every oracle scale stays below the
-        # gate on the bit-exact candidate-join path; engine
-        # equivalence is pytest-pinned.  (rows_at_least = the shared
-        # bounded size probe — the break-even is measured in DOCS at
-        # the test shingle profile, so rows is the right unit here;
-        # per-row width is carried by the measured threshold.)
-        pairs = dd.bucketed_jaccard_pairs(
-            docs, banded, threshold=0.5
-        ).localCheckpoint(eager=True)
-    else:
-        cands = dd.banded_candidate_pairs(banded)
-        pairs = dd.jaccard_pairs(docs, cands, threshold=0.5).localCheckpoint(
-            eager=True
-        )
-    # Pair derivation ran CONCURRENTLY with the artifact write above
-    # (both consume the checkpointed signature blocks); re-join the
-    # writer so the artifact is complete — and any write failure loud —
-    # before the pairs leave this function.  The eager pin on `pairs`
-    # is what buys the overlap: a lazy return would only materialize
-    # at the caller's action, after this join.  Output-bounded by the
-    # near-dup family structure (same frame every consumer collects).
-    _writer.join()
+    try:
+        if rows_at_least(
+            docs, _MINHASH_VECTORIZE_MIN_DOCS,
+            size_hint=table_rows(sf, "documents"),  # footer: jobless gate
+        ):
+            # scale engine (round 7): bucketed Python-set Jaccard
+            # straight from the persisted banded frame — no 27M-pair
+            # distinct, no shingle-carrying pair joins (×100: 121 →
+            # 42.8 s, identical pairs; see BASELINE).  Every oracle
+            # scale stays below the gate on the bit-exact candidate-join
+            # path; engine equivalence is pytest-pinned.  (rows_at_least
+            # = the shared bounded size probe — the break-even is
+            # measured in DOCS at the test shingle profile, so rows is
+            # the right unit here; per-row width is carried by the
+            # measured threshold.)
+            pairs = dd.bucketed_jaccard_pairs(
+                docs, banded, threshold=0.5
+            ).localCheckpoint(eager=True)
+        else:
+            cands = dd.banded_candidate_pairs(banded)
+            pairs = dd.jaccard_pairs(
+                docs, cands, threshold=0.5
+            ).localCheckpoint(eager=True)
+    finally:
+        # Pair derivation ran CONCURRENTLY with the artifact write
+        # above (both consume the checkpointed signature blocks);
+        # re-join the writer on EVERY exit so no write outlives this
+        # call — on success the artifact is complete before the pairs
+        # leave, on failure the pair error propagates (not masked by a
+        # write error) after the writer has finished.  The eager pin on
+        # `pairs` is what buys the overlap: a lazy return would only
+        # materialize at the caller's action, after this join.
+        # Output-bounded by the near-dup family structure (same frame
+        # every consumer collects).
+        _writer.join()
     if _write_err:
         raise _write_err[0]
     return pairs

@@ -211,7 +211,11 @@ def start_pipeline(
 ):
     """Wire the stages and start the query.  ``sink_fn(batch_df,
     epoch_id)`` receives each micro-batch of events (foreachBatch =
-    SNK-1's transactional batched writes).  Pass ``runways`` (and
+    SNK-1's transactional batched writes).  ``batch_df`` is not
+    cached: a ``sink_fn`` that takes more than one action on it must
+    persist it (and unpersist it when done), or each action re-runs
+    the whole micro-batch, stateful session operator included — see
+    :func:`..streaming.sinks.parquet_event_sink`.  Pass ``runways`` (and
     optionally ``airport_bbox``) to run STATE-5 runway attribution
     inside the batch sink — ``sink_fn`` then receives events WITH the
     ``runway`` column, matching the batch ETL's attributed edges.

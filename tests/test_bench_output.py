@@ -125,3 +125,18 @@ def test_r13_subtotal_pins_current_full_set():
         assert parsed[key] == round(sum(timings[n] for n in pinned), 3)
     assert parsed["value_r13_set"] == parsed["value"]
     assert parsed["value_r12_set"] < parsed["value"]
+
+
+def test_pinned_set_overflowing_budget_raises(monkeypatch):
+    """If the PRINTED_CONTINUITY names alone cannot fit the capture
+    window, the continuity contract cannot hold: formatting must fail
+    loudly rather than silently drop pinned names from the printed
+    map.  Pin every timed name to force the overflow."""
+    import pytest
+
+    import bench
+
+    timings = _fake_timings(len(BENCH_QUERIES))
+    monkeypatch.setattr(bench, "PRINTED_CONTINUITY", frozenset(timings))
+    with pytest.raises(ValueError, match="PRINTED_CONTINUITY"):
+        bench.format_bench_output(timings, 0.1)

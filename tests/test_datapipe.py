@@ -2,6 +2,8 @@
 rejects unrelated docs; SimHash similarity; embedding LSH + cosine;
 IVF recall vs brute force; text analysis; multimodal decode plumbing."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -172,6 +174,42 @@ def test_minhash_fast_oracle_is_order_independent(spark, tmp_path, monkeypatch):
         for r in fn(spark, "/root/testdata/sf0.001").collect()
     }
     assert oracle == got
+
+
+def test_minhash_fast_joins_writer_when_pair_derivation_raises(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The artifact writer thread runs concurrently with candidate-pair
+    derivation.  When derivation raises, the writer must still be
+    joined before the call returns (no write outlives the query), and
+    the caller must see the derivation error itself."""
+    import threading
+
+    import dump1090_postgis_spark.plans.datapipe_queries as dq
+
+    class PairsFailed(RuntimeError):
+        pass
+
+    def fail(*_args, **_kwargs):
+        raise PairsFailed("pair derivation failed")
+
+    joined = []
+
+    class RecordingThread(threading.Thread):
+        def join(self, timeout=None):
+            super().join(timeout)
+            joined.append(self.name)
+
+    monkeypatch.setattr(dq, "_ARTIFACTS_DIR", str(tmp_path / "artifacts"))
+    monkeypatch.setattr(dq.dd, "banded_candidate_pairs", fail)
+    monkeypatch.setattr(dq.dd, "bucketed_jaccard_pairs", fail)
+    monkeypatch.setattr(dq.threading, "Thread", RecordingThread)
+    with pytest.raises(PairsFailed):
+        dq.q_dedup_minhash_lsh_fast(spark, sf_dir)
+    assert any("_write_artifact" in name for name in joined)
+    # joined means finished: the artifact write completed in full
+    artifact = dq.lsh_banded_artifact(sf_dir)
+    assert os.path.exists(os.path.join(artifact, "_SUCCESS"))
 
 
 def test_embedding_lsh_skewed_bucket(spark):

@@ -21,7 +21,13 @@ LINES = [
 ]
 
 
-def test_parquet_event_sink_end_to_end(spark, tmp_path):
+@pytest.mark.parametrize("engine", ["tws", "legacy"])
+def test_parquet_event_sink_end_to_end(spark, tmp_path, engine):
+    """The sink writes two tables from one micro-batch; both writes
+    must read one persisted copy, so the stateful session operator
+    runs once per trigger.  Spark's own progress counter shows it: the
+    fixture's single aircraft updates its state row once, where a
+    second execution of the batch would count it twice."""
     drop = tmp_path / "drop"
     drop.mkdir()
     (drop / "cap.txt").write_text("\n".join(LINES))
@@ -31,21 +37,26 @@ def test_parquet_event_sink_end_to_end(spark, tmp_path):
         parquet_event_sink(str(out)),
         checkpoint_dir=str(tmp_path / "ckpt"),
         trigger="1 second",
+        engine=engine,
     )
     deadline = time.time() + 90
-    rows = []
-    while time.time() < deadline:
-        try:
-            rows = spark.read.parquet(str(out / "events")).collect()
-            if rows:
-                break
-        except Exception:
-            pass
-        time.sleep(2)
-    q.stop()
+    progress = None
+    try:
+        while time.time() < deadline and progress is None:
+            progress = next(
+                (p for p in q.recentProgress if p["numInputRows"] > 0), None
+            )
+            if q.exception() is not None:
+                raise q.exception()
+            time.sleep(1)
+    finally:
+        q.stop()
+    assert progress is not None, "the data batch never completed"
+    assert progress["stateOperators"][0]["numRowsUpdated"] == 1
+    rows = spark.read.parquet(str(out / "events")).collect()
     assert len(rows) == 1
     assert rows[0].kind == "landing" and rows[0].hexident == "5AC001"
-    assert rows[0].epoch >= 0  # epoch tag present for idempotence auditing
+    assert rows[0].epoch >= 0  # epoch tag present for replay auditing
 
 
 def test_normalize_vectors(spark):
