@@ -80,15 +80,6 @@ DRIVER_WINDOW: list[str] = [
 ]
 
 
-# Legacy view of the degraded-oracle map: a snapshot of the MOST
-# RECENT full_registry() build, kept for callers that still read the
-# module global.  It is rebuilt wholesale per build, so interleaved
-# builds swap it — consumers that need a consistent record must use
-# full_registry_with_degraded(), which returns THIS build's map as a
-# value (round-9 advisor finding).
-DEGRADED_ORACLES: dict[str, str] = {}
-
-
 def full_registry():
     """name -> (spark_fn(spark, sf_dir) -> DataFrame, oracle_sql|None).
 
@@ -139,8 +130,7 @@ def full_registry_with_degraded():
     # introduced into a builder — propagates and fails the registry
     # build loudly rather than silently removing value-hash
     # verification for that query (round-8 advisor finding).  Degraded
-    # entries are recorded in the per-build map returned to the caller
-    # (DEGRADED_ORACLES keeps a legacy copy of the latest build).
+    # entries are recorded in the per-build map returned to the caller.
     degraded: dict[str, str] = {}
 
     def _resolve(name, sql):
@@ -161,6 +151,4 @@ def full_registry_with_degraded():
             return None
 
     resolved = {n: (fn, _resolve(n, sql)) for n, (fn, sql) in reg.items()}
-    DEGRADED_ORACLES.clear()
-    DEGRADED_ORACLES.update(degraded)
     return resolved, degraded

@@ -68,7 +68,7 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
 
-    # transformWithStateInPandas needs a google.protobuf runtime in the
+    # transformWithState needs a google.protobuf runtime in the
     # driver AND every Python worker; workers inherit PYTHONPATH from
     # the JVM environment, so discovery must happen before getOrCreate.
     # No-op when protobuf is installed normally (the cluster case).

@@ -1,4 +1,4 @@
-"""Optional protobuf runtime discovery for ``transformWithStateInPandas``.
+"""Optional protobuf runtime discovery for ``transformWithState`` (TWS).
 
 pyspark 4.x ships TWS protobuf gencode (``sql/streaming/proto/
 StateMessage_pb2.py``) that hard-requires a ``google.protobuf``

@@ -182,9 +182,9 @@ def resolve_stream_engine(engine: str = "auto") -> str:
     """Resolve the stateful-session engine: ``'tws'`` |  ``'legacy'``.
 
     ``'auto'`` (the default) selects ``'tws'``
-    (``transformWithStateInPandas`` + RocksDB state store — the
+    (row-based ``transformWithState`` + RocksDB state store — the
     recommended 100 TB engine: off-heap spillable state, typed
-    ValueState, explicit timers, 0.93× legacy throughput measured)
+    ValueState, explicit timers, no pandas on the per-key path)
     whenever the Python↔JVM state-server transport is available
     (``pbcompat`` finds a same-major protobuf runtime), else falls
     back to the legacy ``applyInPandasWithState`` handler
@@ -223,10 +223,11 @@ def start_pipeline(
     ``engine``: ``'auto'`` (default — TWS when available, see
     :func:`resolve_stream_engine`), ``'tws'``, or ``'legacy'``.  On
     the TWS path this (a) verifies ``checkpoint_dir`` wasn't written
-    by an incompatibly-named state schema
+    by an incompatibly-named state schema or another stateful operator
     (:func:`..streaming.tws.assert_checkpoint_state_compatible` —
     Spark would otherwise restart CLEANLY and silently drop in-flight
-    sessions), and (b) sets the session's state-store provider to
+    sessions, or fail inside the query without saying how to
+    migrate), and (b) sets the session's state-store provider to
     RocksDB if no provider is configured (TWS requires it; RocksDB is
     also valid for any concurrently-started legacy query)."""
     resolved = resolve_stream_engine(engine)

@@ -88,9 +88,10 @@ def advance_session(
 ) -> tuple[bool, tuple, list[dict]]:
     """The pure state-transition core of the reference machine
     (STATE-2..5 + FLT-2 admission), shared by the legacy
-    ``applyInPandasWithState`` handler and the Spark-4
-    ``transformWithStateInPandas`` processor so the two APIs cannot
-    drift.  ``rows`` iterates time-ordered message tuples; returns
+    ``applyInPandasWithState`` handler and the Spark-4 row-based
+    ``transformWithState`` processor so the two APIs cannot drift.
+    ``rows`` iterates time-ordered messages with attribute access
+    (pandas ``itertuples`` or pyspark ``Row``); returns
     ``(admitted, new_state_tuple, event_rows)``.
     """
     if state_tuple is not None:

@@ -1,12 +1,24 @@
-"""Spark-4 ``transformWithStateInPandas`` twin of the session handler.
+"""Spark-4 ``transformWithState`` twin of the session handler.
 
 Same reference state machine as ``state.sessionize_updates`` (STATE-1..5,
 `flights.py:14-137` / `models.py:110-270`) expressed through the
-modern arbitrary-stateful-processing API: typed ``ValueState`` instead
-of a packed tuple-with-schema, explicit processing-time timers instead
-of ``GroupStateTimeout``, and a processor object whose lifecycle Spark
-manages.  The per-row transition logic is IMPORTED from
-``state.advance_session`` — one core, two APIs, no drift.
+row-based arbitrary-stateful-processing API,
+``groupBy("hexident").transformWithState(SessionProcessor(), ...)``
+(physical operator ``TransformWithStateInPySparkExec``): typed
+``ValueState`` instead of a packed tuple-with-schema, explicit
+processing-time timers instead of ``GroupStateTimeout``, and a
+processor object whose lifecycle Spark manages.  The per-row
+transition logic is IMPORTED from ``state.advance_session`` — one
+core, two APIs, no drift.
+
+Rows in, rows out: each key's input arrives as an iterator of
+``Row`` and each event leaves as one ``Row``, so no pandas object is
+built per key — on the live feed the per-key pandas frames and their
+pandas→Arrow conversion, not the session logic, dominated the
+stateful stage.  Timestamps arrive as tz-aware ``datetime`` and leave
+as naive UTC ``pd.Timestamp``, which Arrow stores as UTC — the event
+times are the same instants the legacy handler emits under any
+session time zone.
 
 Operationally this path requires the RocksDB state store
 (``spark.sql.streaming.stateStore.providerClass = ...RocksDBStateStoreProvider``)
@@ -18,33 +30,29 @@ dispatches ``engine='auto'`` to it; the legacy
 ``applyInPandasWithState`` handler remains for HDFS-backed state and
 protobuf-less environments.
 
-Round-trip budget (the round-6 verdict's 0.65×-of-legacy profiling
-task): every ValueState/timer call is ONE protobuf message over the
-Python↔JVM state-server socket (see
-``pyspark.sql.streaming.value_state_client``), so per-key-per-batch
-chatter dominates the gap.  Two cuts, measured together (paired
-same-process file replay, sf0.1): TWS 12,222 vs legacy 13,147 msg/s
-= **0.93× legacy**, from 0.65×:
+Per-key cost: every ValueState/timer call is ONE protobuf message over
+the Python↔JVM state-server socket (see
+``pyspark.sql.streaming.value_state_client``).  A key with input rows
+in a batch costs THREE round trips — the runtime's
+``set_implicit_key``, then ``get()`` and ``update()`` — plus one
+``registerTimer`` per session lifetime:
 
-- ``get()`` returns None for absent state — the ``exists()`` probe
-  was a pure extra round-trip;
-- LAZY timers: the eager pattern (listTimers + deleteTimer +
-  registerTimer per admitted key-batch, ≥3 round-trips) is replaced
-  by storing the eviction deadline IN the session state (zero extra
-  round-trips — it rides the existing update) and registering ONE
-  timer per session lifetime; when the timer fires early, the handler
-  compares against the stored deadline and re-arms to it.  Emission
-  times are unchanged (a summary still appears exactly
-  SESSION_TIMEOUT_MS after the last admitted message) — parity pinned
-  by the legacy-equality tests.
+- ``get()`` returns None for absent state — no ``exists()`` probe;
+- LAZY timers: the eviction deadline is stored IN the session state
+  (it rides the existing update) and ONE timer is registered per
+  session lifetime; when the timer fires early, the handler compares
+  against the stored deadline and re-arms to it.  Emission times are
+  unchanged (a summary still appears exactly SESSION_TIMEOUT_MS after
+  the last admitted message) — parity pinned by the legacy-equality
+  tests.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from operator import attrgetter
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.stateful_processor import (
     ExpiredTimerInfo,
@@ -87,6 +95,13 @@ ROCKSDB_PROVIDER = (
 #: the suffix AND keep the guard on any future schema change.
 TWS_STATE_SCHEMA = STATE_SCHEMA + ", deadline_ms long, timer_armed boolean"
 TWS_STATE_NAME = "session_v2"
+
+#: Physical operator that runs :class:`SessionProcessor` (row-based
+#: ``transformWithState``).  Spark refuses to restart a checkpoint
+#: written by another operator (``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_
+#: IN_STATE_METADATA``) — :func:`assert_checkpoint_state_compatible`
+#: turns that into a refusal that says how to migrate.
+TWS_OPERATOR_NAME = "transformWithStateInPySparkExec"
 
 
 def _latest_tws_metadata(checkpoint_dir: str, operator_id: int) -> str | None:
@@ -181,30 +196,38 @@ def assert_checkpoint_state_compatible(
     operator_id: int = 0,
 ) -> None:
     """Raise before restart if ``checkpoint_dir`` was written by a TWS
-    processor whose user state variables differ from this handler's.
+    processor whose user state variables or physical operator differ
+    from this handler's.
 
-    Spark records each stateful operator's state-variable names in
-    ``state/<op>/_metadata/v2/<batch>`` (``operatorPropertiesJson`` →
-    ``stateVariables``).  Restarting with a renamed state variable is
-    ACCEPTED by Spark (add/remove is legal schema evolution), which
-    here would silently drop every in-flight session — so this guard
-    turns the rename into the loud failure the version suffix was
-    meant to provide.  A fresh/absent checkpoint passes; internal
-    ``$procTimers_*`` variables are ignored; unreadable metadata CONTENT
-    is ignored (Spark's own validation owns malformed checkpoints),
-    while an UNINSPECTABLE directory logs a loud warning
+    Spark records each stateful operator's name (``operatorInfo`` →
+    ``operatorName``) and state-variable names
+    (``operatorPropertiesJson`` → ``stateVariables``) in
+    ``state/<op>/_metadata/v2/<batch>``.  Two mismatches are refused:
+
+    - a renamed state variable: ACCEPTED by Spark (add/remove is legal
+      schema evolution), which here would silently drop every
+      in-flight session — this guard turns the rename into the loud
+      failure the version suffix was meant to provide;
+    - another operator, e.g. ``transformWithStateInPandasExec`` from
+      the pandas flavour of this processor: Spark fails the restart
+      inside the query with an error that does not say what to do.
+
+    A fresh/absent checkpoint passes; internal ``$procTimers_*``
+    variables are ignored; unreadable metadata CONTENT is ignored
+    (Spark's own validation owns malformed checkpoints), while an
+    UNINSPECTABLE directory logs a loud warning
     (:func:`_latest_tws_metadata` — checked through the Hadoop
     FileSystem API, so remote ``hdfs://``/``s3a://`` checkpoints are
     covered too).
 
-    Migration from a pre-``session_v2`` checkpoint: either drain the
-    old query with the old handler (stop the feed, let every session
-    evict and emit) and start the upgraded handler on a FRESH
-    checkpoint directory, or carry the in-flight sessions across with
-    :func:`legacy_session_initial_state` + ``event_stream_tws(...,
-    initial_state=...)`` (reads the old ``session`` column family via
-    the state-store reader and replays it into the new checkpoint's
-    ``session_v2`` on the first batch).
+    Migration: either drain the old query with its old handler (stop
+    the feed, let every session evict and emit) and start this handler
+    on a FRESH checkpoint directory, or carry the in-flight sessions
+    across with :func:`legacy_session_initial_state` (naming the
+    recorded state variable) + ``event_stream_tws(...,
+    initial_state=...)``, which reads the old column family via the
+    state-store reader and replays it into the new checkpoint's
+    ``session_v2`` on the first batch.
     """
     import json
 
@@ -219,7 +242,8 @@ def assert_checkpoint_state_compatible(
             for v in props.get("stateVariables", [])
             if not v["stateName"].startswith("$")
         }
-    except (ValueError, KeyError, IndexError):
+        operator = meta.get("operatorInfo", {}).get("operatorName")
+    except (ValueError, KeyError, IndexError, AttributeError):
         return  # malformed metadata: defer to Spark's own validation
     if names and names != {expected_state_name}:
         raise RuntimeError(
@@ -232,38 +256,27 @@ def assert_checkpoint_state_compatible(
             "in-flight sessions with legacy_session_initial_state(...) + "
             "event_stream_tws(..., initial_state=...)."
         )
+    if operator and operator != TWS_OPERATOR_NAME:
+        raise RuntimeError(
+            f"checkpoint {checkpoint_dir!r} was written by the stateful "
+            f"operator {operator!r}, but this handler runs "
+            f"{TWS_OPERATOR_NAME!r}; Spark refuses that restart. Either "
+            "drain the old query with its original handler and restart "
+            "on a fresh checkpoint directory, or migrate the in-flight "
+            "sessions to a fresh checkpoint with "
+            "legacy_session_initial_state(spark, "
+            f"{checkpoint_dir!r}, state_name={expected_state_name!r}) + "
+            "event_stream_tws(..., initial_state=...)."
+        )
 
 
-#: STATE_SCHEMA (name, type) pairs, in declaration order — the column
+#: STATE_SCHEMA field names, in declaration order — the column
 #: contract between the state-store reader output and
 #: handleInitialState.
-_STATE_FIELDS = [
-    (s.strip().split()[0], s.strip().split()[1])
-    for s in STATE_SCHEMA.split(",")
-]
-_STATE_FIELD_NAMES = [f for f, _t in _STATE_FIELDS]
+_STATE_FIELD_NAMES = [f.split()[0] for f in STATE_SCHEMA.split(", ")]
 
-
-def _py_scalar(v, typ: str):
-    """Plain-Python scalar for a state tuple slot: the initial-state
-    frame arrives as a pandas row (numpy dtypes, NaN/NaT for NULL —
-    nullable longs surface as float64), but ValueState.update pickles
-    the tuple for the JVM state server, which accepts only exact
-    Python scalars of the declared type."""
-    if v is None:
-        return None
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
-    if typ == "long":
-        return int(v)
-    if typ == "double":
-        return float(v)
-    if typ == "boolean":
-        return bool(v)
-    return str(v)
+#: Sort key of the handler's whole-group sort.
+_BY_TIME = attrgetter("gen_date_time")
 
 
 def legacy_session_initial_state(
@@ -293,6 +306,13 @@ def legacy_session_initial_state(
     Scale: the reader is a parallel scan of the state store's
     partitions (no driver collect); the initial-state frame shuffles
     once on the grouping key, same as any first batch.
+
+    Time zone: the session's ``first_seen``/``last_seen``/
+    ``last_event`` are UTC epoch microseconds.  The pandas flavour of
+    the processor derived them from session-local wall-clock values,
+    so a checkpoint it wrote under a non-UTC
+    ``spark.sql.session.timeZone`` carries them shifted by that zone's
+    offset (``session.get_spark`` pins UTC, where the two agree).
     """
     df = (
         spark.read.format("statestore")
@@ -309,38 +329,34 @@ def legacy_session_initial_state(
 
 
 class SessionProcessor(StatefulProcessor):
-    """Keyed session machine as a StatefulProcessor (lazy timers —
-    see module docstring for the round-trip budget)."""
+    """Keyed session machine as a row-based StatefulProcessor (lazy
+    timers — see module docstring for the round-trip budget)."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._handle = handle
         self._sess = handle.getValueState(TWS_STATE_NAME, TWS_STATE_SCHEMA)
 
     def handleInitialState(
-        self, key, initialState, timerValues: TimerValues
+        self, key, initialState: Row, timerValues: TimerValues
     ) -> None:
-        """Seed ``session_v2`` from a migrated legacy session row
+        """Seed ``session_v2`` from one migrated legacy session row
         (:func:`legacy_session_initial_state`): the shared
         STATE_SCHEMA tuple rides in by field name, the lazy-timer
         fields are re-based to now + SESSION_TIMEOUT_MS, and the one
         physical timer per session lifetime is armed."""
-        if hasattr(initialState, "iloc"):
-            if len(initialState) > 1:
-                # One session state per key, by definition — silently
-                # taking the first row would drop the other's
-                # n_messages/first_seen/callsign with no error, the
-                # exact silent-loss mode this module guards against
-                # (e.g. a union of two legacy checkpoints).
-                raise ValueError(
-                    f"initial state for key {key!r} has "
-                    f"{len(initialState)} rows; sessions are one row "
-                    "per hexident — dedupe (or merge) the frame before "
-                    "migration"
-                )
-            row = initialState.iloc[0]
-        else:
-            row = initialState
-        legacy = tuple(_py_scalar(row[f], t) for f, t in _STATE_FIELDS)
+        if self._sess.exists():
+            # Called once per initial-state row, and only on the first
+            # batch of a fresh checkpoint: existing state means a second
+            # row for this key.  Overwriting would drop the first row's
+            # n_messages/first_seen/callsign with no error, the exact
+            # silent-loss mode this module guards against (e.g. a union
+            # of two legacy checkpoints).
+            raise ValueError(
+                f"initial state for key {key!r} has more than one row; "
+                "sessions are one row per hexident — dedupe (or merge) "
+                "the frame before migration"
+            )
+        legacy = tuple(initialState[f] for f in _STATE_FIELD_NAMES)
         deadline = (
             timerValues.getCurrentProcessingTimeInMs() + SESSION_TIMEOUT_MS
         )
@@ -348,8 +364,8 @@ class SessionProcessor(StatefulProcessor):
         self._handle.registerTimer(deadline)
 
     def handleInputRows(
-        self, key, rows, timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
+        self, key, rows: Iterator[Row], timerValues: TimerValues
+    ) -> Iterator[Row]:
         hexident = key[0]
         packed = self._sess.get()  # None when absent — no exists() probe
         if packed is None:
@@ -357,21 +373,14 @@ class SessionProcessor(StatefulProcessor):
         else:
             prior, armed = tuple(packed[:-2]), bool(packed[-1])
 
-        # whole-group sort, not per-Arrow-chunk: see
-        # state.sessionize_updates — cross-chunk disorder corrupts the
-        # edge machine; stable sort keeps arrival order on ties.
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                "gen_date_time", kind="stable"
-            )
-            rows_iter = batch.itertuples(index=False)
-        else:
-            rows_iter = iter(())
-
-        admitted, new_state, out_rows = advance_session(
-            hexident, prior, rows_iter
+        # whole-group sort: see state.sessionize_updates — disorder
+        # corrupts the edge machine; the stable sort keeps arrival order
+        # on ties.  A NULL timestamp (PRJ-3 parse failure) cannot be
+        # ordered, and advance_session would skip it anyway.
+        batch = sorted(
+            (r for r in rows if r.gen_date_time is not None), key=_BY_TIME
         )
+        admitted, new_state, out_rows = advance_session(hexident, prior, batch)
 
         if admitted:
             # Reset the eviction clock by advancing the deadline IN
@@ -384,12 +393,12 @@ class SessionProcessor(StatefulProcessor):
             if not armed:
                 self._handle.registerTimer(deadline)
 
-        if out_rows:
-            yield pd.DataFrame(out_rows)
+        for r in out_rows:
+            yield Row(**r)
 
     def handleExpiredTimer(
         self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
+    ) -> Iterator[Row]:
         packed = self._sess.get()
         if packed is None:
             # session already evicted (or never existed): a stale timer
@@ -397,7 +406,7 @@ class SessionProcessor(StatefulProcessor):
             return
         deadline = packed[-2]
         if timerValues.getCurrentProcessingTimeInMs() >= deadline:
-            yield pd.DataFrame([summary_row(key[0], tuple(packed[:-2]))])
+            yield Row(**summary_row(key[0], tuple(packed[:-2])))
             self._sess.clear()
         else:
             # fired against a deadline the session has since advanced
@@ -413,7 +422,7 @@ class SessionProcessor(StatefulProcessor):
 def event_stream_tws(
     parsed: DataFrame, initial_state: DataFrame | None = None
 ) -> DataFrame:
-    """``transformWithStateInPandas`` pipeline stage — drop-in twin of
+    """``transformWithState`` pipeline stage — drop-in twin of
     ``pipeline.event_stream``.  Start the query with the RocksDB
     provider (see ``ROCKSDB_PROVIDER``).
 
@@ -421,7 +430,7 @@ def event_stream_tws(
     normally :func:`legacy_session_initial_state` — replayed into
     ``session_v2`` on the first batch of a FRESH checkpoint (the
     pre-rename migration path)."""
-    return parsed.groupBy("hexident").transformWithStateInPandas(
+    return parsed.groupBy("hexident").transformWithState(
         SessionProcessor(),
         outputStructType=EVENT_OUTPUT_SCHEMA,
         outputMode="append",

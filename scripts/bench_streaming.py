@@ -122,7 +122,7 @@ def bench_file_replay(spark, drop: str) -> dict:
 
 
 def bench_file_replay_tws(spark, drop: str) -> dict:
-    """bench_file_replay through the transformWithStateInPandas twin
+    """bench_file_replay through the transformWithState twin
     (streaming/tws.py) over the RocksDB state store — the modern
     stateful API's throughput next to the legacy handler's.  Returns
     {} when no protobuf runtime is discoverable (pbcompat), so the

@@ -135,10 +135,10 @@ def test_oracle_builder_degradation_contract(monkeypatch):
     """Lazy oracle builders (callable SQL slots): ENVIRONMENTAL
     failures (OSError / RuntimeError — missing SF_DIR, over-budget
     pure-Python artifact pass) degrade THAT entry to a rows-only check
-    and are recorded in DEGRADED_ORACLES for visible reporting; any
-    other exception is a coding bug and fails the registry build
-    loudly (round-8 advisor: a blanket except silently removed
-    value-hash verification)."""
+    and are recorded in the per-build degraded map for visible
+    reporting; any other exception is a coding bug and fails the
+    registry build loudly (round-8 advisor: a blanket except silently
+    removed value-hash verification)."""
     import dump1090_postgis_spark.plans as plans
     from dump1090_postgis_spark.plans import datapipe_queries
 
@@ -156,8 +156,6 @@ def test_oracle_builder_degradation_contract(monkeypatch):
     built, degraded = plans.full_registry_with_degraded()
     assert built["_probe_env_fail"][1] is None
     assert "RuntimeError" in degraded["_probe_env_fail"]
-    # legacy module-global view still mirrors the latest build
-    assert "RuntimeError" in plans.DEGRADED_ORACLES["_probe_env_fail"]
     # untouched entries keep their oracles
     assert isinstance(built["dedup_exact"][1], str)
 
@@ -167,7 +165,6 @@ def test_oracle_builder_degradation_contract(monkeypatch):
     monkeypatch.setattr(datapipe_queries, "REGISTRY", dict(orig_registry))
     plans.full_registry()  # rebuild without the probe entry
     assert degraded == snapshot and "_probe_env_fail" in degraded
-    assert "_probe_env_fail" not in plans.DEGRADED_ORACLES
 
     def _bug():
         raise TypeError("a coding bug in a builder")

@@ -625,62 +625,64 @@ def _has_protobuf() -> bool:
     return prepare_env() and tws_available()
 
 
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs a google.protobuf runtime "
-    "and pbcompat found none on disk — the shared advance_session core "
-    "is pinned by test_advance_session_core_* and the processor "
-    "lifecycle by test_tws_processor_full_lifecycle_matches_legacy",
-)
-def test_transform_with_state_matches_legacy_handler(spark):
-    """The transformWithStateInPandas twin (streaming/tws.py) must emit
-    the same debounced events as the applyInPandasWithState path on
-    the replayed capture — one shared advance_session core."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
+def _stream_events_into_memory(spark, stage, name: str) -> list:
+    """Run ``stage(parsed_stream)`` over the LINES capture into a memory
+    sink, on the RocksDB state store (required by TWS, valid for the
+    legacy handler), until the two debounced landings arrive; return
+    the event rows (summaries excluded) ordered by event time."""
     from dump1090_postgis_spark.streaming.pipeline import parsed_stream
-    from dump1090_postgis_spark.streaming.tws import (
-        ROCKSDB_PROVIDER,
-        event_stream_tws,
-    )
+    from dump1090_postgis_spark.streaming.tws import ROCKSDB_PROVIDER
 
-    drop = tempfile.mkdtemp(prefix="sbs1twsdrop")
-    ckpt = tempfile.mkdtemp(prefix="sbs1twsckpt")
+    drop = tempfile.mkdtemp(prefix="sbs1memdrop")
+    ckpt = tempfile.mkdtemp(prefix="sbs1memckpt")
     with open(os.path.join(drop, "capture.txt"), "w") as f:
         f.write("\n".join(LINES))
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, ROCKSDB_PROVIDER)
     try:
-        raw = spark.readStream.text(drop)
         q = (
-            event_stream_tws(parsed_stream(raw))
+            stage(parsed_stream(spark.readStream.text(drop)))
             .writeStream.outputMode("append")
             .format("memory")
-            .queryName("tws_ev")
+            .queryName(name)
             .option("checkpointLocation", ckpt)
             .start()
         )
         deadline = time.time() + 120
         while time.time() < deadline:
-            if spark.sql("select * from tws_ev").count() >= 2:
+            if spark.sql(f"select * from {name}").count() >= 2:
                 break
             time.sleep(2)
-        rows = spark.sql(
-            "select * from tws_ev where kind != 'flight_summary'"
+        q.stop()
+        q.awaitTermination(60)
+        return spark.sql(
+            f"select * from {name} where kind != 'flight_summary'"
             " order by event_time"
         ).collect()
-        q.stop()
     finally:
         if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(key)
         else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+            spark.conf.set(key, prev)
         shutil.rmtree(drop, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@pytest.mark.skipif(
+    not _has_protobuf(),
+    reason="transformWithState needs a google.protobuf runtime "
+    "and pbcompat found none on disk — the shared advance_session core "
+    "is pinned by test_advance_session_core_* and the processor "
+    "lifecycle by test_tws_processor_full_lifecycle_matches_legacy",
+)
+def test_transform_with_state_matches_legacy_handler(spark):
+    """The transformWithState twin (streaming/tws.py) must emit
+    the same debounced events as the applyInPandasWithState path on
+    the replayed capture — one shared advance_session core."""
+    from dump1090_postgis_spark.streaming.tws import event_stream_tws
+
+    rows = _stream_events_into_memory(spark, event_stream_tws, "tws_ev")
 
     # identical expectations to test_stream_emits_debounced_edges:
     # two landings (the 1.5 s bounce takeoff suppressed), AAA111 only
@@ -688,6 +690,48 @@ def test_transform_with_state_matches_legacy_handler(spark):
     assert {r.hexident for r in rows} == {"AAA111"}
     assert rows[0].event_time.second == 10 and rows[1].event_time.second == 21
     assert rows[0].callsign == "TST100"
+
+
+@pytest.mark.skipif(
+    not _has_protobuf(),
+    reason="transformWithState needs a google.protobuf runtime and "
+    "pbcompat found none on disk",
+)
+def test_tws_timestamps_match_legacy_in_non_utc_session(spark):
+    """The row-based TWS receives timestamps as tz-aware datetimes,
+    while the legacy pandas handler sees naive session-local values.
+    Under a non-UTC session time zone both must still emit the same
+    event_time/first_seen/last_seen instants — the wall clock of the
+    capture, read in that zone."""
+    import datetime as dt
+
+    from dump1090_postgis_spark.streaming.pipeline import event_stream
+    from dump1090_postgis_spark.streaming.tws import event_stream_tws
+
+    spark.conf.set("spark.sql.session.timeZone", "Europe/Paris")
+    try:
+        tws = _stream_events_into_memory(spark, event_stream_tws, "tz_tws")
+        legacy = _stream_events_into_memory(spark, event_stream, "tz_legacy")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+    def times(rows):
+        return [
+            (r.hexident, r.kind, r.event_time, r.first_seen, r.last_seen)
+            for r in rows
+        ]
+
+    assert times(tws) == times(legacy)
+    # collect() renders instants in the driver's local zone; compare
+    # epochs: the capture's 10:00 wall clock in Paris is 08:00 UTC
+    def utc(*hms):
+        return dt.datetime(2024, 5, 1, *hms, tzinfo=dt.timezone.utc).timestamp()
+
+    assert [r.event_time.timestamp() for r in tws] == [
+        utc(8, 0, 10),
+        utc(8, 0, 21, 500_000),
+    ]
+    assert tws[0].first_seen.timestamp() == utc(8, 0, 0)
 
 
 def _msg(ts_us, tt=3, onground=False, lon=-1.6, lat=47.1, alt=100.0, callsign=None):
@@ -748,17 +792,17 @@ def test_tws_processor_full_lifecycle_matches_legacy(spark):
     real handle is a protobuf transport client; this twin keeps the
     lifecycle pinned even on hosts where pbcompat finds no protobuf
     runtime and test_transform_with_state_matches_legacy_handler
-    skips).  Uses the REAL
-    pyspark TimerValues/ExpiredTimerInfo values.  Output must equal
-    the applyInPandasWithState path on the same capture, and eviction
-    must emit exactly one flight summary per live session.
+    skips).  Uses the REAL pyspark TimerValues/ExpiredTimerInfo values
+    and feeds/reads ``Row``s, as the row-based transformWithState
+    runtime does.  Output must equal the applyInPandasWithState path
+    on the same capture, and eviction must emit exactly one flight
+    summary per live session.
 
     Lazy-timer contract (round 7): ONE physical timer per session
     lifetime, anchored at the first admitted batch; the advancing
     eviction deadline lives in state (packed[-2]); an early fire
     re-arms to the stored deadline and only a fire at/after it emits
     the summary."""
-    import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         ExpiredTimerInfo,
         TimerValues,
@@ -811,8 +855,8 @@ def test_tws_processor_full_lifecycle_matches_legacy(spark):
             "hexident", "gen_date_time", "transmission_type", "onground",
             "longitude", "latitude", "altitude", "callsign",
         )
-        .toPandas()
-        .sort_values("gen_date_time")
+        .orderBy("gen_date_time")
+        .collect()
     )
 
     proc = SessionProcessor()
@@ -822,10 +866,9 @@ def test_tws_processor_full_lifecycle_matches_legacy(spark):
     emitted = []
     now_ms = 1_000_000
     first_deadline = None
-    for _, row in parsed.iterrows():
-        pdf = pd.DataFrame([row])
-        key = (row["hexident"],)
-        for out in proc.handleInputRows(key, iter([pdf]), TimerValues(now_ms)):
+    for row in parsed:
+        key = (row.hexident,)
+        for out in proc.handleInputRows(key, iter([row]), TimerValues(now_ms)):
             emitted.append(out)
         sess = handle.states[TWS_STATE_NAME]
         if sess.exists():
@@ -838,11 +881,7 @@ def test_tws_processor_full_lifecycle_matches_legacy(spark):
             assert sess.get()[-2] == now_ms + SESSION_TIMEOUT_MS
         now_ms += 1_000
 
-    events = pd.concat(emitted, ignore_index=True) if emitted else pd.DataFrame()
-    got = {
-        (r["hexident"], r["kind"], str(r["event_time"]))
-        for _, r in events.iterrows()
-    }
+    got = {(r.hexident, r.kind, str(r.event_time)) for r in emitted}
 
     # parity with the applyInPandasWithState path on the same lines:
     # two landings (second debounced from the bounce), nothing else
@@ -880,8 +919,7 @@ def test_tws_processor_full_lifecycle_matches_legacy(spark):
     if live:
         assert fires == 2  # one early fire (re-arm), one true eviction
         assert len(summaries) == 1
-        srow = summaries[0].iloc[0]
-        assert srow["kind"] == "flight_summary"
+        assert summaries[0].kind == "flight_summary"
         assert not handle.states[TWS_STATE_NAME].exists()
         # a stale timer after the clear is a no-op (no crash, no rows)
         assert list(
@@ -1007,7 +1045,11 @@ def test_resolve_stream_engine():
     assert resolve_stream_engine() == expected
 
 
-def _write_tws_metadata(ckpt: str, state_names: list[str]) -> None:
+def _write_tws_metadata(
+    ckpt: str,
+    state_names: list[str],
+    operator_name: str = "transformWithStateInPySparkExec",
+) -> None:
     """Synthesize the state/<op>/_metadata/v2/<batch> file Spark writes
     for a TWS operator (shape copied from a real Spark-4 checkpoint)."""
     import json
@@ -1032,7 +1074,7 @@ def _write_tws_metadata(ckpt: str, state_names: list[str]) -> None:
     meta = {
         "operatorInfo": {
             "operatorId": 0,
-            "operatorName": "transformWithStateInPandasExec",
+            "operatorName": operator_name,
         },
         "stateStoreInfo": [{"storeName": "default", "numPartitions": 4}],
         "operatorPropertiesJson": json.dumps(props),
@@ -1041,10 +1083,12 @@ def _write_tws_metadata(ckpt: str, state_names: list[str]) -> None:
         fh.write("v2\n" + json.dumps(meta))
 
 
-def _legacy_name_processor_cls():
-    """Pre-lazy-timer TWS processor shape: bare STATE_SCHEMA under the
-    old 'session' state name — the checkpoint writer for the rename
-    guard and migration tests."""
+def _legacy_name_processor_cls(state_name: str = "session"):
+    """Pandas-flavour TWS processor (``transformWithStateInPandas``) —
+    the checkpoint writer for the guard and migration tests.  With the
+    default ``state_name`` it is the pre-lazy-timer shape: bare
+    STATE_SCHEMA under the old 'session' name; with ``'session_v2'`` it
+    stores the current TWS_STATE_SCHEMA (deadline fields zeroed)."""
     import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor
 
@@ -1052,14 +1096,19 @@ def _legacy_name_processor_cls():
         STATE_SCHEMA,
         advance_session,
     )
+    from dump1090_postgis_spark.streaming.tws import TWS_STATE_SCHEMA
+
+    v2 = state_name == "session_v2"
 
     class LegacyNameProcessor(StatefulProcessor):
         def init(self, handle):
-            self._sess = handle.getValueState("session", STATE_SCHEMA)
+            self._sess = handle.getValueState(
+                state_name, TWS_STATE_SCHEMA if v2 else STATE_SCHEMA
+            )
 
         def handleInputRows(self, key, rows, timerValues):
             packed = self._sess.get()
-            prior = tuple(packed) if packed is not None else None
+            prior = None if packed is None else tuple(packed)[:10]
 
             def _rows():
                 for pdf in rows:
@@ -1071,7 +1120,7 @@ def _legacy_name_processor_cls():
                 key[0], prior, _rows()
             )
             if admitted:
-                self._sess.update(tuple(new_state))
+                self._sess.update(tuple(new_state) + ((0, False) if v2 else ()))
             if out_rows:
                 yield pd.DataFrame(out_rows)
 
@@ -1085,9 +1134,12 @@ def _legacy_name_processor_cls():
     return LegacyNameProcessor
 
 
-def _run_legacy_name_checkpoint(spark, drop: str, ckpt: str) -> None:
-    """Run the legacy-named processor over the text drop dir until at
-    least two batches commit, writing a REAL pre-rename checkpoint."""
+def _run_legacy_name_checkpoint(
+    spark, drop: str, ckpt: str, state_name: str = "session"
+) -> None:
+    """Run the pandas-flavour processor over the text drop dir until at
+    least two batches commit, writing a REAL checkpoint of that
+    operator (pre-rename by default)."""
     from dump1090_postgis_spark.streaming.pipeline import parsed_stream
     from dump1090_postgis_spark.streaming.state import EVENT_OUTPUT_SCHEMA
     from dump1090_postgis_spark.streaming.tws import ROCKSDB_PROVIDER
@@ -1101,7 +1153,7 @@ def _run_legacy_name_checkpoint(spark, drop: str, ckpt: str) -> None:
             parsed_stream(spark.readStream.text(drop))
             .groupBy("hexident")
             .transformWithStateInPandas(
-                _legacy_name_processor_cls()(),
+                _legacy_name_processor_cls(state_name)(),
                 outputStructType=EVENT_OUTPUT_SCHEMA,
                 outputMode="append",
                 timeMode="ProcessingTime",
@@ -1164,6 +1216,18 @@ def test_checkpoint_state_guard_unit(tmp_path, caplog):
     with pytest.raises(RuntimeError, match="session_v2"):
         assert_checkpoint_state_compatible(old)
 
+    # a checkpoint of the pandas operator is refused before start, and
+    # the message names both ways out
+    pandas_op = str(tmp_path / "pandas_op")
+    _write_tws_metadata(
+        pandas_op, ["session_v2"], operator_name="transformWithStateInPandasExec"
+    )
+    with pytest.raises(RuntimeError, match="transformWithStateInPandasExec") as ei:
+        assert_checkpoint_state_compatible(pandas_op)
+    assert "fresh checkpoint" in str(ei.value)
+    assert "state_name='session_v2'" in str(ei.value)
+    assert "initial_state=" in str(ei.value)
+
     # internal $procTimers_* variables alone (no user state recorded
     # yet) pass — nothing user-visible to drop
     onlyt = str(tmp_path / "onlyt")
@@ -1214,6 +1278,48 @@ def test_tws_restart_from_legacy_name_checkpoint_fails_loudly(spark, tmp_path):
             ckpt,
             engine="tws",
         )
+
+
+@pytest.mark.skipif(
+    not _has_protobuf(),
+    reason="needs the TWS transport to write a real pandas-operator checkpoint",
+)
+def test_tws_restart_from_pandas_operator_checkpoint_fails_loudly(spark, tmp_path):
+    """A checkpoint of the pandas operator (transformWithStateInPandas)
+    with the CURRENT state name: Spark would refuse the row-based
+    restart inside the query with an operator-mismatch error that does
+    not say what to do.  The guard refuses it before start, and the
+    migration call its message names reads the in-flight session."""
+    from dump1090_postgis_spark.streaming.pipeline import start_pipeline
+    from dump1090_postgis_spark.streaming.tws import (
+        assert_checkpoint_state_compatible,
+        legacy_session_initial_state,
+    )
+
+    drop = str(tmp_path / "drop")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(drop)
+    with open(os.path.join(drop, "a.txt"), "w") as f:
+        f.write("\n".join([LINES[0], LINES[1], LINES[2]]))
+
+    _run_legacy_name_checkpoint(spark, drop, ckpt, state_name="session_v2")
+
+    with pytest.raises(RuntimeError, match="transformWithStateInPandasExec"):
+        assert_checkpoint_state_compatible(ckpt)
+    with pytest.raises(RuntimeError, match="state_name='session_v2'"):
+        start_pipeline(
+            spark.readStream.text(drop),
+            lambda bdf, eid: None,
+            ckpt,
+            engine="tws",
+        )
+
+    rows = legacy_session_initial_state(
+        spark, ckpt, state_name="session_v2"
+    ).collect()
+    assert [(r.hexident, r.n_messages, r.callsign) for r in rows] == [
+        ("AAA111", 3, "TST100")
+    ]
 
 
 @pytest.mark.skipif(
@@ -1300,23 +1406,46 @@ def test_tws_legacy_checkpoint_migration_preserves_sessions(spark, tmp_path):
 
 
 def test_tws_initial_state_rejects_duplicate_key_rows():
-    """handleInitialState must REJECT a multi-row initial-state frame
-    for one key instead of silently seeding from the first row — a
-    union of two legacy checkpoints (or a manual seed on top of a
-    migration) would otherwise lose the second row's
-    n_messages/first_seen/callsign with no error, the exact silent
-    drop the state-name guard exists to prevent."""
-    import pandas as pd
+    """handleInitialState must REJECT a second initial-state row for
+    one key instead of silently overwriting the first — a union of two
+    legacy checkpoints (or a manual seed on top of a migration) would
+    otherwise lose the first row's n_messages/first_seen/callsign with
+    no error, the exact silent drop the state-name guard exists to
+    prevent.  The row-based runtime calls handleInitialState once per
+    row, so the second call for the key is the one that must raise."""
     import pytest
+    from pyspark.sql import Row
+    from pyspark.sql.streaming.stateful_processor import TimerValues
 
-    from dump1090_postgis_spark.streaming.tws import SessionProcessor
+    from dump1090_postgis_spark.streaming.tws import (
+        _STATE_FIELD_NAMES,
+        SessionProcessor,
+    )
+
+    class _State:
+        def __init__(self):
+            self.v = None
+
+        def exists(self):
+            return self.v is not None
+
+        def update(self, v):
+            self.v = tuple(v)
+
+    class _Handle:
+        def getValueState(self, name, schema):
+            return _State()
+
+        def registerTimer(self, ts):
+            pass
 
     proc = SessionProcessor()
-    dup = pd.DataFrame(
-        {"first_seen": [1_700_000_000_000, 1_700_000_100_000]}
-    )
+    proc.init(_Handle())
+    row = Row(**{f: None for f in _STATE_FIELD_NAMES})
+    first = row.asDict() | {"first_seen": 1_700_000_000_000, "n_messages": 3}
+    proc.handleInitialState(("AAA111",), Row(**first), TimerValues(0))
     with pytest.raises(ValueError, match="one row"):
-        proc.handleInitialState(("AAA111",), dup, None)
+        proc.handleInitialState(("AAA111",), row, TimerValues(0))
 
 
 def test_handler_sorts_across_arrow_chunks():
