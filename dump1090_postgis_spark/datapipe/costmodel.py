@@ -1,10 +1,16 @@
-"""Shared cost model for the ``engine='auto'`` dispatch gates.
+"""Shared cost model for the engine dispatch gates.
 
 Every vectorized/scale engine in this package (blocked brute-force
-ANN, bucketed LSH verifies, the BLAS centroid assignment) is gated so
-that oracle-checked scales stay on the bit-exact declarative path and
-only genuinely large inputs pay the Arrow seam.  Until round 8 each
-gate made that decision with its own eager ``df.count()`` — at 100 TB
+ANN, bucketed LSH verifies, the BLAS centroid assignment) is chosen
+by size, not by the caller — the operators take no engine argument
+(``semantic_dedup(pairwise=)`` is kept as the one explicit opt-in,
+because the approximate assignment tree exists only on its vectorized
+pairwise).  Oracle-checked scales stay on the bit-exact declarative
+path and only genuinely large inputs pay the Arrow seam.  A caller
+that knows its corpus size passes it as the ``corpus_rows`` hint;
+that hint, or in tests a monkeypatched budget constant, is what moves
+a call across a gate.  Until round 8 each gate made that decision
+with its own eager ``df.count()`` — at 100 TB
 that is a full scan (or at best a parquet-footer pass) just to pick an
 engine, and a row-count threshold is blind to per-row width (a 4k-dim
 corpus hits the interpreted-expression wall at far fewer rows than a
@@ -12,8 +18,8 @@ corpus hits the interpreted-expression wall at far fewer rows than a
 
 This module is the one place the decision is made:
 
-- the size source is hint → Catalyst plan statistics → a BOUNDED
-  limit-probe (never an unbounded count);
+- the size source is the ``corpus_rows`` hint → Catalyst plan
+  statistics → a BOUNDED limit-probe (never an unbounded count);
 - the unit is WORK (rows × units-per-row: dim for dense vectors,
   n·k·dim for assignment FLOPs), with plain rows as the degenerate
   case where per-row width genuinely doesn't matter (the minhash

@@ -759,7 +759,7 @@ def hyperplane_weights(
     ]
 
 
-#: embedding_near_dup_pairs engine='auto' switches to the bucketed
+#: embedding_near_dup_pairs switches to the bucketed
 #: Arrow/numpy verify once rows × dim exceeds this work budget —
 #: calibrated to the round-8 measured flip (50k rows at dim 64 =
 #: 3.2e6), expressed in rows×dim so a wide-embedding corpus flips
@@ -885,7 +885,6 @@ def embedding_near_dup_pairs(
     bits_per_band: int = 8,
     seed: int = 7,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    engine: str = "auto",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup: banded random-hyperplane LSH candidates +
@@ -912,38 +911,21 @@ def embedding_near_dup_pairs(
     with no error — so the plan fails fast (raise_error) on the first
     row whose vector length differs from `dim`.
 
-    ``engine``: ``'join'`` is the candidate-pair + sort-merge-verify
-    shape (bit-exact vs the DuckDB oracle); ``'vectorized'`` verifies
-    buckets directly with numpy matmuls
+    Two verify engines, chosen by size: up to the rows×dim work
+    budget ``_EMB_JOIN_MAX_WORK`` the candidate-pair + join-verify
+    shape (bit-exact vs the DuckDB oracle); past it buckets are
+    verified directly with numpy matmuls
     (:func:`_bucket_verify_vectorized` — no 144M-pair distinct, no
-    vector-carrying pair joins); ``'auto'`` (default) dispatches on
-    the rows×dim work budget ``_EMB_JOIN_MAX_WORK`` with the shared
-    size source (``corpus_rows`` hint → plan stats → bounded probe,
-    :func:`.costmodel.work_exceeds` — no unbounded count) — every
+    vector-carrying pair joins).  The size source is the
+    ``corpus_rows`` hint → plan stats → bounded probe
+    (:func:`.costmodel.work_exceeds` — no unbounded count); every
     oracle scale stays on the join engine.
     """
     from .costmodel import work_exceeds
 
-    if engine not in ("auto", "join", "vectorized"):
-        raise ValueError(f"engine must be auto|join|vectorized, got {engine!r}")
-    # small_proven: the corpus is KNOWN to fit the join-engine work
-    # budget (≤ _EMB_JOIN_MAX_WORK rows×dim ⇒ ≤ ~26 MB of doubles per
-    # verify side) — either the auto gate just proved it, or a forced
-    # 'join' caller supplied a corpus_rows hint under the budget.
-    # Decides the verify JOIN STRATEGY below (round-13, guide §3):
-    # proven-small sides take a deliberate F.broadcast (two
-    # BroadcastHashJoins, no corpus sort — measured exec ×0.42 at
-    # sf0.1); unproven keeps the merge hint (the ×100 lesson: AQE's
-    # runtime broadcast conversion picked a corpus-sized side on a
-    # size mis-estimate and aborted at maxResultSize).  Strategy only
-    # — the per-pair floats are identical either way.
-    small_proven = False
-    if engine == "auto":
-        big = work_exceeds(emb, _EMB_JOIN_MAX_WORK, dim, size_hint=corpus_rows)
-        engine = "vectorized" if big else "join"
-        small_proven = not big
-    elif engine == "join" and corpus_rows is not None:
-        small_proven = corpus_rows * dim <= _EMB_JOIN_MAX_WORK
+    vectorized = work_exceeds(
+        emb, _EMB_JOIN_MAX_WORK, dim, size_hint=corpus_rows
+    )
     planes = hyperplane_weights(dim, bands, bits_per_band, seed)
     n_parts = emb.sparkSession.sparkContext.defaultParallelism
     base = emb.select(
@@ -1007,7 +989,7 @@ def embedding_near_dup_pairs(
         ).alias(f"_key{b}")
         for b in range(bands)
     ]
-    if engine == "vectorized":
+    if vectorized:
         # band membership as ID-ONLY rows first, live-bucket filter
         # (2 <= size <= cap) BEFORE the vector column is attached —
         # the verify drops dead buckets anyway, so their members'
@@ -1091,22 +1073,16 @@ def embedding_near_dup_pairs(
     cos = dot_ab / (F.col("_na") * F.col("_nb"))
     # Verify join strategy (round-13, guide §3 "pick deliberately"):
     # the pairs side is output-sized and the vector sides are
-    # corpus-sized.  When small_proven (see the gate above) each
-    # vector side is ≤ _EMB_JOIN_MAX_WORK×8 bytes ≈ 26 MB — a
-    # deliberate F.broadcast turns both verifies into
+    # corpus-sized, but the gate above just proved the corpus fits the
+    # work budget — each vector side is ≤ _EMB_JOIN_MAX_WORK×8 bytes
+    # ≈ 26 MB — so a deliberate F.broadcast turns both verifies into
     # BroadcastHashJoins with no corpus sort (measured exec ×0.42 at
-    # sf0.1, identical rows).  Otherwise (forced 'join' with no size
-    # proof) keep the merge hints: at ×100 AQE's runtime broadcast
-    # conversion picked a corpus-sized side on a size mis-estimate and
-    # aborted collecting 1028 MiB of rows to the driver
-    # (maxResultSize) — never leave the choice to an estimate.
-    if small_proven:
-        va_j, vb_j = F.broadcast(va), F.broadcast(vb)
-    else:
-        va_j, vb_j = va.hint("merge"), vb.hint("merge")
+    # sf0.1, identical rows).  Never leave the choice to AQE: at ×100
+    # its runtime broadcast conversion picked a corpus-sized side on a
+    # size mis-estimate and aborted at maxResultSize.
     return (
-        pairs.join(va_j, "id_a")
-        .join(vb_j, "id_b")
+        pairs.join(F.broadcast(va), "id_a")
+        .join(F.broadcast(vb), "id_b")
         .withColumn("cosine", F.round(cos, 4) + F.lit(0.0))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -1246,9 +1222,8 @@ def bucket_cap_stats(
     )
     # coalesce: sum/max over ZERO rows (empty corpus, or a cap audit
     # on an empty banded frame) return NULL while count returns 0 — a
-    # NULL here breaks the %d-formatted audit log line and makes the
-    # one-row report ambiguous; every statistic of an empty frame is
-    # genuinely 0.
+    # NULL here makes the one-row report ambiguous; every statistic of
+    # an empty frame is genuinely 0.
     return sizes.agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.coalesce(

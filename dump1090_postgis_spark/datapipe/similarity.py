@@ -26,7 +26,6 @@ def brute_force_topk(
     k: int = 5,
     vec: str = "embedding",
     id_col: str = "vec_id",
-    engine: str = "auto",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k neighbors (self excluded) for each query row.
@@ -34,39 +33,29 @@ def brute_force_topk(
     Returns (query_id, rank, neighbor_id, cosine) — rank 1..k by cosine
     desc with neighbor-id tiebreak (deterministic).
 
-    ``engine``: ``'join'`` is the broadcast theta join with the
-    interpreted staged-cosine (bit-exact vs the DuckDB oracle);
-    ``'blocked'`` is :func:`brute_force_topk_blocked` (Arrow blocked
-    BLAS scan, per-batch top-k emission — same rows, ~50× less per-dot
-    cost); ``'auto'`` (default) dispatches on the FLOPs budget
-    ``_BF_JOIN_MAX_FLOPS`` (corpus rows × queries × dim — both engines
-    are O(n·q·d), so the crossover where the blocked engine's fixed
-    Arrow overhead amortizes is a FLOPs wall, not a row wall).  The
-    corpus size comes from ``corpus_rows`` (caller hint) → Catalyst
-    plan stats → a bounded limit-probe, never an unbounded count
-    (:func:`.costmodel.rows_at_least`); nq/dim come from one tiny agg
-    over the query side — the driver-small side by contract (the
-    blocked engine collects it whole).  Same oracle-gate discipline as
-    every other vectorized engine here: all DuckDB-checked scales stay
-    on the join path.
+    Two engines, chosen by size: below the FLOPs budget
+    ``_BF_JOIN_MAX_FLOPS`` (corpus rows × queries × dim) the broadcast
+    theta join with the interpreted staged-cosine (bit-exact vs the
+    DuckDB oracle); past it :func:`brute_force_topk_blocked` (Arrow
+    blocked BLAS scan, per-batch top-k emission — same rows, ~50× less
+    per-dot cost).  Both engines are O(n·q·d), so the crossover where
+    the blocked engine's fixed Arrow overhead amortizes is a FLOPs
+    wall, not a row wall.  The corpus size comes from ``corpus_rows``
+    (caller hint) → Catalyst plan stats → a bounded limit-probe, never
+    an unbounded count (:func:`.costmodel.rows_at_least`); nq/dim come
+    from one tiny agg over the query side — the driver-small side by
+    contract (the blocked engine collects it whole).  Same oracle-gate
+    discipline as every other vectorized engine here: all
+    DuckDB-checked scales stay on the join path.
     """
-    if engine not in ("auto", "join", "blocked"):
-        raise ValueError(f"engine must be auto|join|blocked, got {engine!r}")
-    if engine == "auto":
-        qstat = queries.agg(
-            F.count(F.lit(1)).alias("_nq"),
-            F.first(F.size(F.col(vec)), ignorenulls=True).alias("_dim"),
-        ).first()
-        units = (qstat["_nq"] or 0) * (qstat["_dim"] or 0)
-        engine = (
-            "blocked"
-            if units > 0
-            and work_exceeds(
-                corpus, _BF_JOIN_MAX_FLOPS, units, size_hint=corpus_rows
-            )
-            else "join"
-        )
-    if engine == "blocked":
+    qstat = queries.agg(
+        F.count(F.lit(1)).alias("_nq"),
+        F.first(F.size(F.col(vec)), ignorenulls=True).alias("_dim"),
+    ).first()
+    units = (qstat["_nq"] or 0) * (qstat["_dim"] or 0)
+    if units > 0 and work_exceeds(
+        corpus, _BF_JOIN_MAX_FLOPS, units, size_hint=corpus_rows
+    ):
         return brute_force_topk_blocked(corpus, queries, k, vec, id_col)
     # Stage the double-cast vector AND its norm as named columns BEFORE
     # the broadcast theta join: the higher-order transform/aggregate
@@ -878,7 +867,7 @@ def with_probed_centroids(
 
 def build_centroids(corpus: DataFrame, num_centroids: int = 16,
                     vec: str = "embedding", id_col: str = "vec_id",
-                    iterations: int = 0, assign_engine: str = "auto",
+                    iterations: int = 0,
                     corpus_rows: int | None = None) -> DataFrame:
     """Deterministic IVF centroids: hash-assigned seed means, then
     `iterations` Lloyd (k-means) refinement steps — each step is one
@@ -888,9 +877,9 @@ def build_centroids(corpus: DataFrame, num_centroids: int = 16,
     The per-iteration REASSIGNMENT is FLOPs-budgeted exactly like the
     IVF query path (round-9: the ×10000 recall run put the query wall
     at 122 s and TRAINING at 632 s — the Lloyd loop was the last
-    literal-at-any-n assignment): ``assign_engine='auto'`` resolves
-    ONCE (n·k·dim vs :data:`_IVF_ASSIGN_LITERAL_MAX_FLOPS`, size
-    source hint → plan stats → bounded probe) — the literal
+    literal-at-any-n assignment): the engine is chosen ONCE by size
+    (n·k·dim vs :data:`_IVF_ASSIGN_LITERAL_MAX_FLOPS`, size source
+    ``corpus_rows`` hint → plan stats → bounded probe) — the literal
     interpreted projection on every oracle-checked scale
     (``kmeans_refine``'s DuckDB twin replays it bit-exactly), the
     blocked BLAS matmul (:func:`_assign_nearest_vectorized`) past the
@@ -911,29 +900,21 @@ def build_centroids(corpus: DataFrame, num_centroids: int = 16,
         return centroids
     from .costmodel import work_exceeds
 
-    if assign_engine not in ("auto", "literal", "vectorized"):
-        raise ValueError(
-            f"assign_engine must be auto|literal|vectorized, got "
-            f"{assign_engine!r}"
-        )
     base = corpus.select(
         F.transform(F.col(vec), lambda x: x.cast("double")).alias("_v")
     )
+    vectorized = None
     for _ in range(iterations):
         cen_rows = _collect_centroids(centroids)
-        if assign_engine == "auto":
+        if vectorized is None:
             kdim = len(cen_rows) * (
                 len(cen_rows[0].centroid) if cen_rows else 0
             )
-            assign_engine = (
-                "vectorized"
-                if work_exceeds(
-                    base, _IVF_ASSIGN_LITERAL_MAX_FLOPS, kdim,
-                    size_hint=corpus_rows,
-                )
-                else "literal"
+            vectorized = work_exceeds(
+                base, _IVF_ASSIGN_LITERAL_MAX_FLOPS, kdim,
+                size_hint=corpus_rows,
             )
-        if assign_engine == "vectorized" and cen_rows:
+        if vectorized and cen_rows:
             dim = len(cen_rows[0].centroid)
             min_id = int(cen_rows[0].centroid_id)
             deg = (
@@ -965,52 +946,36 @@ def _resolve_ivf_assignment(
     corpus: DataFrame,
     centroids: DataFrame,
     vec: str,
-    assign_engine: str,
     corpus_rows: int | None,
     _cen_rows: list | None = None,
 ):
     """Shared corpus-assignment dispatch for the IVF family: returns
-    ``(assigned_fn, cen_lit, cen_rows, engine)`` where
+    ``(assigned_fn, cen_lit, cen_rows, vectorized)`` where
     ``assigned_fn(df)`` attaches ``list_id`` to a ``_deg``-flagged
-    corpus frame and ``engine`` is the RESOLVED engine name
-    (``'literal'``/``'vectorized'`` — callers key scale-only defaults
-    like :func:`ivf_pq_topk`'s ``rerank='auto'`` off it, so the
-    budget decision is made exactly once).
+    corpus frame and ``vectorized`` is the RESOLVED engine (callers
+    key scale-only defaults like :func:`ivf_pq_topk`'s
+    ``rerank='auto'`` off it, so the budget decision is made exactly
+    once).
 
-    ``assign_engine='auto'`` is FLOPs-budgeted
-    (:data:`_IVF_ASSIGN_LITERAL_MAX_FLOPS` on n·k·dim; size source
-    hint → plan stats → bounded probe, never an unbounded count —
-    :func:`.costmodel.work_exceeds`): the literal projection evaluates
-    k INTERPRETED higher-order cosines per corpus row, a per-row cost
-    the 20k-LITERAL budget alone is blind to.  ``'literal'`` /
-    ``'vectorized'`` force an engine (the literal path falls back to
-    :func:`with_nearest_centroid`'s own over-budget dispatch when the
-    centroid table exceeds the literal compile limit)."""
+    The engine is chosen by size: the literal projection evaluates k
+    INTERPRETED higher-order cosines per corpus row, a per-row cost
+    the 20k-LITERAL budget alone is blind to, so it runs only while
+    n·k·dim fits :data:`_IVF_ASSIGN_LITERAL_MAX_FLOPS` (size source
+    ``corpus_rows`` hint → plan stats → bounded probe, never an
+    unbounded count — :func:`.costmodel.work_exceeds`) and the
+    centroid table fits the literal compile limit; otherwise the
+    blocked BLAS matmul (:func:`_assign_nearest_vectorized`)."""
     from .costmodel import work_exceeds
 
-    if assign_engine not in ("auto", "literal", "vectorized"):
-        raise ValueError(
-            f"assign_engine must be auto|literal|vectorized, got "
-            f"{assign_engine!r}"
-        )
     cen_rows = (
         _cen_rows if _cen_rows is not None else _collect_centroids(centroids)
     )
     cen_lit = _centroid_literal(centroids, _rows=cen_rows)
-    if assign_engine == "auto":
-        kdim = len(cen_rows) * (
-            len(cen_rows[0].centroid) if cen_rows else 0
-        )
-        assign_engine = (
-            "vectorized"
-            if cen_lit is None
-            or work_exceeds(
-                corpus, _IVF_ASSIGN_LITERAL_MAX_FLOPS, kdim,
-                size_hint=corpus_rows,
-            )
-            else "literal"
-        )
-    if assign_engine == "vectorized":
+    kdim = len(cen_rows) * (len(cen_rows[0].centroid) if cen_rows else 0)
+    vectorized = cen_lit is None or work_exceeds(
+        corpus, _IVF_ASSIGN_LITERAL_MAX_FLOPS, kdim, size_hint=corpus_rows
+    )
+    if vectorized:
         def assigned_fn(df):
             return _assign_nearest_vectorized(
                 df, centroids, vec, "list_id", _cen_rows=cen_rows
@@ -1020,7 +985,7 @@ def _resolve_ivf_assignment(
             return with_nearest_centroid(
                 df, centroids, vec, "list_id", _cen_lit=cen_lit
             )
-    return assigned_fn, cen_lit, cen_rows, assign_engine
+    return assigned_fn, cen_lit, cen_rows, vectorized
 
 
 def _exact_score_flags(vec: str):
@@ -1075,7 +1040,6 @@ def ivf_topk(
     probes: int = 4,
     vec: str = "embedding",
     id_col: str = "vec_id",
-    assign_engine: str = "auto",
     corpus_rows: int | None = None,
     corpus_store: str | None = None,
 ) -> DataFrame:
@@ -1091,11 +1055,11 @@ def ivf_topk(
     — not the corpus itself).
 
     The CORPUS assignment engine is FLOPs-budgeted (round-9, the
-    round-8 verdict's #1 lever): ``assign_engine='auto'`` dispatches
-    through :func:`_resolve_ivf_assignment` — the literal interpreted
-    projection while n·k·dim fits
-    :data:`_IVF_ASSIGN_LITERAL_MAX_FLOPS` (every oracle-checked scale
-    does, so DuckDB-audited plans stay bit-exact), the EXACT all-k
+    round-8 verdict's #1 lever): :func:`_resolve_ivf_assignment`
+    picks it by size — the literal interpreted projection while
+    n·k·dim fits :data:`_IVF_ASSIGN_LITERAL_MAX_FLOPS` (every
+    oracle-checked scale does, so DuckDB-audited plans stay
+    bit-exact), the EXACT all-k
     blocked BLAS matmul (:func:`_assign_nearest_vectorized`) past it —
     same cells on every geometry, so corpus and query sides agree; the
     recall loss vs brute force stays exactly the probes/nlist scan
@@ -1120,8 +1084,8 @@ def ivf_topk(
     contract as :func:`ivf_pq_topk`'s store path, results pinned
     identical to the storeless plan; the centroid sidecar is verified
     first)."""
-    assigned_fn, cen_lit, cen_rows_l, _eng = _resolve_ivf_assignment(
-        corpus, centroids, vec, assign_engine, corpus_rows
+    assigned_fn, cen_lit, cen_rows_l, _ = _resolve_ivf_assignment(
+        corpus, centroids, vec, corpus_rows
     )
     deg, nan_flag = _exact_score_flags(vec)
     query_probes = with_probed_centroids(
@@ -1164,8 +1128,7 @@ def pq_encode_residual(
     centroids: DataFrame,
     vec: str = "embedding",
     id_col: str = "vec_id",
-    _cen_lit=None,
-    assign_engine: str = "auto",
+    _assigned_fn=None,
     corpus_rows: int | None = None,
     _cen_rows: list | None = None,
     _keep_cols: tuple = (),
@@ -1207,28 +1170,21 @@ def pq_encode_residual(
     q_scale=1.0 endpoint (reconstruction NULL → cosine NULL → ranked
     last) instead of an engine-dependent raise-vs-NULL split.
 
-    ``assign_engine`` / ``corpus_rows``: the FLOPs-budgeted corpus
+    ``corpus_rows``: the size hint for the FLOPs-budgeted corpus
     assignment dispatch — see :func:`_resolve_ivf_assignment` /
-    :func:`ivf_topk`.  (``_cen_lit`` short-circuits the dispatch to
-    the literal engine for callers that already compiled it.)
+    :func:`ivf_topk`.  (``_assigned_fn`` with ``_cen_rows`` skips the
+    dispatch for callers that already resolved it.)
 
     ``_keep_cols``: extra input columns passed through to the output
     unchanged — :func:`write_ivf_cell_store` keeps the raw float
     vector alongside the codes so the persisted cell store serves
     BOTH the PQ scan and the exact-rerank fetch.
     """
-    if _cen_lit is not None:
-        cen_lit = _cen_lit
-        rows = _cen_rows
-
-        def assigned_fn(df):
-            return with_nearest_centroid(
-                df, centroids, vec, "list_id", _cen_lit=cen_lit
-            )
+    if _assigned_fn is not None:
+        assigned_fn, rows = _assigned_fn, _cen_rows
     else:
-        assigned_fn, cen_lit, rows, _eng = _resolve_ivf_assignment(
-            corpus, centroids, vec, assign_engine, corpus_rows,
-            _cen_rows=_cen_rows,
+        assigned_fn, _, rows, _ = _resolve_ivf_assignment(
+            corpus, centroids, vec, corpus_rows, _cen_rows=_cen_rows,
         )
     deg = (
         F.col(vec).isNull()
@@ -1411,7 +1367,6 @@ def write_ivf_cell_store(
     path: str,
     vec: str = "embedding",
     id_col: str = "vec_id",
-    assign_engine: str = "auto",
     corpus_rows: int | None = None,
     num_partitions: int | None = None,
     files_per_cell: int | None = None,
@@ -1505,8 +1460,7 @@ def write_ivf_cell_store(
         corpus.withColumn("_store_deg", deg).withColumn(
             "_store_nan", nan_flag
         ),
-        centroids, vec, id_col,
-        assign_engine=assign_engine, corpus_rows=corpus_rows,
+        centroids, vec, id_col, corpus_rows=corpus_rows,
         _cen_rows=cen_rows, _keep_cols=(vec, "_store_deg", "_store_nan"),
     ).withColumnRenamed("_store_deg", "_deg").withColumnRenamed(
         "_store_nan", "_nan"
@@ -1542,7 +1496,6 @@ def append_ivf_cell_store(
     path: str,
     vec: str = "embedding",
     id_col: str = "vec_id",
-    assign_engine: str = "auto",
     corpus_rows: int | None = None,
     num_partitions: int | None = None,
     files_per_cell: int | None = None,
@@ -1576,8 +1529,7 @@ def append_ivf_cell_store(
         new_vectors.withColumn("_store_deg", deg).withColumn(
             "_store_nan", nan_flag
         ),
-        cen, vec, id_col,
-        assign_engine=assign_engine, corpus_rows=corpus_rows,
+        cen, vec, id_col, corpus_rows=corpus_rows,
         _cen_rows=cen_rows, _keep_cols=(vec, "_store_deg", "_store_nan"),
     ).withColumnRenamed("_store_deg", "_deg").withColumnRenamed(
         "_store_nan", "_nan"
@@ -1739,7 +1691,6 @@ def ivf_pq_topk(
     probes: int = 4,
     vec: str = "embedding",
     id_col: str = "vec_id",
-    assign_engine: str = "auto",
     corpus_rows: int | None = None,
     rerank: bool | str = "auto",
     rerank_m: int = _PQ_RERANK_M,
@@ -1766,8 +1717,8 @@ def ivf_pq_topk(
     the final per-query ranking over probed candidates.
 
     The corpus-side ENCODE assignment is FLOPs-budgeted exactly like
-    :func:`ivf_topk` (``assign_engine``/``corpus_rows`` pass straight
-    through to :func:`pq_encode_residual`); query probing stays on the
+    :func:`ivf_topk` (one size decision, ``corpus_rows`` the hint,
+    shared with :func:`pq_encode_residual`); query probing stays on the
     literal projection — the query side is the small side.
 
     ``rerank`` — the two-stage refine leg (FAISS IndexRefineFlat
@@ -1778,14 +1729,11 @@ def ivf_pq_topk(
     confined to whatever falls outside PQ's top-m — measured at
     nprobe=1/×10000 (20M vectors): recall@5 0.91 → 1.00 with the
     default m (BASELINE.md round 10).  ``'auto'`` (default) enables
-    the leg exactly when the BUDGET dispatch (``assign_engine='auto'``)
-    resolves the corpus assignment to ``'vectorized'`` — i.e. past the
-    n·k·dim FLOPs budget, where the corpus is big enough for
-    quantization loss to matter — so every DuckDB-oracle scale keeps
-    the pure-PQ plan and its committed result hashes, unchanged.  A
-    caller-FORCED ``assign_engine`` is a mechanism knob, not a scale
-    declaration: it never flips rerank (the literal↔vectorized
-    output-equivalence pin depends on that).
+    the leg exactly when the size dispatch resolves the corpus
+    assignment to the vectorized engine — i.e. past the n·k·dim FLOPs
+    budget, where the corpus is big enough for quantization loss to
+    matter — so every DuckDB-oracle scale keeps the pure-PQ plan and
+    its committed result hashes, unchanged.
 
     Rerank plan shape: the candidate list (|queries|·m id pairs, a
     bounded driver-small frame by the family's query-side contract —
@@ -1831,12 +1779,11 @@ def ivf_pq_topk(
     # inside this function — measured 3 + 5 driver-blocking jobs per
     # call at sf0.1 (round-13 opt).  Same convention as
     # _resolve_ivf_assignment's _cen_rows: the caller owns coherence.
-    _, cen_lit, cen_rows, resolved_engine = _resolve_ivf_assignment(
-        corpus, centroids, vec, assign_engine, corpus_rows,
-        _cen_rows=_cen_rows,
+    assigned_fn, cen_lit, cen_rows, vectorized = _resolve_ivf_assignment(
+        corpus, centroids, vec, corpus_rows, _cen_rows=_cen_rows,
     )
     if rerank == "auto":
-        rerank = assign_engine == "auto" and resolved_engine == "vectorized"
+        rerank = vectorized
     query_probes = with_probed_centroids(
         queries, centroids, probes, vec, "list_id", _cen_lit=cen_lit
     )
@@ -1856,8 +1803,7 @@ def ivf_pq_topk(
     else:
         coded = pq_encode_residual(
             corpus, centroids, vec, id_col,
-            assign_engine=resolved_engine, corpus_rows=corpus_rows,
-            _cen_rows=cen_rows,
+            _assigned_fn=assigned_fn, _cen_rows=cen_rows,
         )
     # literal reconstruction dim from the rows _resolve_ivf_assignment
     # already collected — broadcasting the lazy centroids frame would
@@ -2657,7 +2603,7 @@ def semantic_dedup(
     )
 
 
-#: brute_force_topk engine='auto' switches to the Arrow blocked-matmul
+#: brute_force_topk switches to the Arrow blocked-matmul
 #: scan once corpus_rows × nq × dim exceeds this budget — calibrated
 #: to the round-8 measured flip (50k corpus rows at the bench shape of
 #: 5 queries × 64 dims = 1.6e7), now expressed in FLOPs so a wide-dim

@@ -94,9 +94,6 @@ def attribute_runway(
     heading: str = "interp_track",
     tolerance_deg: float = HEADING_TOLERANCE_DEG,
     keep_unmatched: bool = True,
-    branch_budget: int = BRANCH_BUDGET,
-    grid_deg: float = GRID_DEG,
-    strategy: str = "auto",
 ) -> DataFrame:
     """JOIN-5: attach `runway` (name) to each event.
 
@@ -108,17 +105,12 @@ def attribute_runway(
     Unmatched events get runway='UNK' when keep_unmatched (the
     reference's models.py:283-286 default), else are dropped.
 
-    ``strategy``: ``'auto'`` counts the dim at plan-build time (eager
-    driver work, bounded by the dim) to pick between the compiled
-    point-in-polygon coalesce and the grid-cell broadcast join;
-    callers that already know their dim's size pass ``'compile'`` or
-    ``'grid'`` to keep plan building fully lazy.
+    The physical strategy is picked by the dim's size
+    (:func:`resolve_strategy`): the compiled point-in-polygon coalesce
+    while runways × (1 + bboxes) fits :data:`BRANCH_BUDGET`, else the
+    grid-cell broadcast join.
     """
-    if strategy not in ("auto", "compile", "grid"):
-        raise ValueError(f"unknown attribution strategy: {strategy!r}")
-    if strategy == "auto":
-        strategy = resolve_strategy(runways, airport_bbox, branch_budget)
-    if strategy == "compile":
+    if resolve_strategy(runways, airport_bbox) == "compile":
         best = _compiled_coalesce(
             runways, airport_bbox, lon, lat, heading, tolerance_deg
         )
@@ -126,15 +118,13 @@ def attribute_runway(
     else:
         out = _grid_cell_join(
             events, runways, airport_bbox, lon, lat, heading,
-            tolerance_deg, grid_deg,
+            tolerance_deg,
         )
     return finish_unmatched(out, keep_unmatched)
 
 
 def resolve_strategy(
-    runways: DataFrame,
-    airport_bbox: DataFrame | None,
-    branch_budget: int = BRANCH_BUDGET,
+    runways: DataFrame, airport_bbox: DataFrame | None
 ) -> str:
     """The compile-vs-grid gate, factored to ONE place so the batch
     operator and the streaming sink cannot drift: compile the
@@ -159,7 +149,7 @@ def resolve_strategy(
         n_bb = plan_rows(airport_bbox)
         if n_bb is None:
             n_bb = airport_bbox.count()
-    return "compile" if n_rw * (1 + n_bb) <= branch_budget else "grid"
+    return "compile" if n_rw * (1 + n_bb) <= BRANCH_BUDGET else "grid"
 
 
 def finish_unmatched(out: DataFrame, keep_unmatched: bool = True) -> DataFrame:
@@ -249,31 +239,26 @@ def _ordered_runways(runways: DataFrame) -> DataFrame:
     )
 
 
-def grid_runway_cells(
-    runways: DataFrame, grid_deg: float = GRID_DEG
-) -> DataFrame:
+def grid_runway_cells(runways: DataFrame) -> DataFrame:
     """(__cx, __cy, __rw ordered-runway array) per occupied grid cell
     — the STATIC dim side of the grid join, factored out so a
     streaming sink can compute it ONCE at wire-up and reuse it every
     micro-batch (dim work per batch was pure waste: the round-13
     socket row measured the per-batch rebuild + a hot-cell dim at
     keep-up 0.161)."""
-    grid = F.lit(float(grid_deg))
     return _per_cell(
-        _ordered_runways(runways), "polygon", grid,
+        _ordered_runways(runways), "polygon", F.lit(float(GRID_DEG)),
         F.array_sort(
             F.collect_list(F.struct("__ord", "name", "direction", "polygon"))
         ).alias("__rw"),
     )
 
 
-def grid_bbox_cells(
-    airport_bbox: DataFrame, grid_deg: float = GRID_DEG
-) -> DataFrame:
+def grid_bbox_cells(airport_bbox: DataFrame) -> DataFrame:
     """(__cx, __cy, __bb bbox array) per occupied cell — static dim
     side of the bbox fallback tier."""
     return _per_cell(
-        airport_bbox.select("bbox"), "bbox", F.lit(float(grid_deg)),
+        airport_bbox.select("bbox"), "bbox", F.lit(float(GRID_DEG)),
         F.collect_list("bbox").alias("__bb"),
     )
 
@@ -350,7 +335,6 @@ def _grid_cell_join(
     lat: str,
     heading: str,
     tolerance_deg: float,
-    grid_deg: float,
     cell_rw: DataFrame | None = None,
     cell_bb: DataFrame | None = None,
     dirs: DataFrame | None = None,
@@ -364,11 +348,11 @@ def _grid_cell_join(
     copies from a per-micro-batch caller so the dim window + explode +
     collect_list aggregation runs once per stream, not once per
     batch."""
-    grid = F.lit(float(grid_deg))
+    grid = F.lit(float(GRID_DEG))
     plon, plat, phead = F.col(lon), F.col(lat), F.col(heading)
 
     if cell_rw is None:
-        cell_rw = grid_runway_cells(runways, grid_deg)
+        cell_rw = grid_runway_cells(runways)
 
     ev = events.withColumn("__cx", F.floor(plon / grid)).withColumn(
         "__cy", F.floor(plat / grid)
@@ -406,7 +390,7 @@ def _grid_cell_join(
     drop = ["__cx", "__cy", "__rw"]
     if airport_bbox is not None:
         if cell_bb is None:
-            cell_bb = grid_bbox_cells(airport_bbox, grid_deg)
+            cell_bb = grid_bbox_cells(airport_bbox)
         ev = ev.join(F.broadcast(cell_bb), ["__cx", "__cy"], "left")
         # Heading match is position-independent, so the reference's
         # (bbox-major, runway-order) first match reduces to: point in

@@ -217,8 +217,8 @@ def q_dedup_minhash_lsh_fast(spark, sf):
     (parquet under .artifacts/); candidate derivation + exact-Jaccard
     verification run from the materialized banded rows — at 100 TB the
     signature pass is the expensive scan, and every downstream consumer
-    (near-dup pairs, hot-bucket audit, incremental dedup) reuses the
-    same persisted frame instead of re-hashing the corpus.
+    (near-dup pairs, ``dd.bucket_cap_stats``, incremental dedup) reuses
+    the same persisted frame instead of re-hashing the corpus.
 
     Verification: the DuckDB oracle reads the SAME banded parquet and
     independently replays bucket-cap candidate generation and exact
@@ -255,36 +255,6 @@ def q_dedup_minhash_lsh_fast(spark, sf):
 
     _writer = threading.Thread(target=_write_artifact)
     _writer.start()
-    # Cap observability (the 1024 cap truncates mega-families SILENTLY
-    # by design): surface what it cost — one count-only groupBy over
-    # the id rows, logged so a 100 TB operator sees dropped-bucket /
-    # truncated-member counts next to the pair output.  The audit is
-    # observability-ONLY (nothing downstream reads it), so it runs on
-    # a daemon thread and overlaps the candidate/verify work instead
-    # of sitting as a driver barrier (guide §2.6 — job descriptions
-    # are thread-local).  It reads the checkpointed frame, not the
-    # parquet, so it needs no ordering against the write thread.
-    def _audit(sf_dir=sf):
-        try:
-            cap_row = dd.bucket_cap_stats(banded).first()
-            logging.getLogger(__name__).info(
-                "minhash-LSH bucket-cap audit (%s): %d buckets, %d live, "
-                "%d dropped over cap=%s (%d member rows truncated; largest "
-                "bucket %d)",
-                os.path.basename(os.path.normpath(sf_dir)),
-                cap_row["n_buckets"],
-                cap_row["n_buckets_live"],
-                cap_row["n_buckets_dropped"],
-                cap_row["cap"],
-                cap_row["n_members_dropped"],
-                cap_row["max_bucket_size_seen"],
-            )
-        except Exception:  # audit must never fail the query path
-            logging.getLogger(__name__).warning(
-                "minhash-LSH bucket-cap audit failed", exc_info=True
-            )
-
-    threading.Thread(target=_audit, daemon=True).start()
     try:
         if rows_at_least(
             docs, _MINHASH_VECTORIZE_MIN_DOCS,
@@ -820,7 +790,7 @@ def q_ann_topk_bruteforce(spark, sf):
 
     ``corpus_rows`` comes from the parquet footer (schemas.table_rows —
     driver-side, zero jobs): the registry owns its testdata, so the
-    engine='auto' gate never schedules even a bounded probe job.  The
+    engine gate never schedules even a bounded probe job.  The
     footer count is EXACT, so the dispatch decision — and therefore
     the output — is identical to the probe's (round-10 verdict #3;
     output-invariance pinned in tests)."""

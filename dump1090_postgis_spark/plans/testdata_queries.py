@@ -728,7 +728,7 @@ FROM pts
 
 # join5_runway_attribution_grid's dim: enough disjoint unit-square
 # runways that n_rw × (1 + n_bboxes) crosses attribution.BRANCH_BUDGET
-# (256), so strategy='auto' resolves to the GRID-CELL BROADCAST JOIN —
+# (256), so the size gate resolves to the GRID-CELL BROADCAST JOIN —
 # the production plan shape a real ourairports-scale dim (42k runways,
 # database/csv2db.sh:7-18) takes, which until round 12 had parity
 # pytests but no driver CORRECTNESS row (round-11 verdict #1).
@@ -739,7 +739,7 @@ def q_join5_runway_attribution_grid(spark, sf):
     """JOIN-5 grid twin (airports.py:90-125 at ourairports scale):
     same synthetic event coordinates as join5_runway_attribution but
     against a 300-runway dim — past the 256-branch compile budget, so
-    ``attribute_runway(strategy='auto')`` takes the grid-cell
+    ``attribute_runway``'s size gate takes the grid-cell
     broadcast-join path (attribution.py): runways bucketed into 0.25°
     cells, events hash-join their own cell's iteration-ordered runway
     array, first-match evaluates as a projection.  Runway i is the

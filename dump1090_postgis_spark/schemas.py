@@ -226,9 +226,10 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     metadata — a driver-side read of a few KiB, zero Spark jobs.
 
     This is the registry-side source for the ``corpus_rows`` hints the
-    ``engine='auto'`` operators accept (round-10 verdict #3): the
-    pipeline that owns the data KNOWS its size, so the cost-model gates
-    should never have to schedule even a bounded probe job.  The same
+    size-gated operators accept (round-10 verdict #3): each of them
+    picks its engine from the corpus size, and the pipeline that owns
+    the data KNOWS that size, so the cost-model gates should never
+    have to schedule even a bounded probe job.  The same
     calling convention scales to 100 TB — a production catalog serves
     the count; here the parquet footer is that catalog.  Returns None
     when the footer can't be read (caller falls back to the operator's

@@ -1,10 +1,14 @@
 """End-to-end streaming pipeline assembly (SURVEY §3.1 Spark shape):
 
 readStream(socket|text) → parse/normalize (select/filter, SRC-3 +
-PRJ-1..4 + FLT-1/3) → groupByKey(hexident) → applyInPandasWithState
-(sessions + edges + debounce, streaming.state) → [events stream] →
-foreachBatch: runway attribution join (JOIN-5) + sinks (SNK-1 pacing
-via trigger processingTime='1 second').
+PRJ-1..4 + FLT-1/3) → groupBy(hexident) → stateful session operator
+(sessions + edges + debounce, ``state.advance_session``): by default
+the row-based ``transformWithState`` processor (streaming.tws), with
+the legacy ``applyInPandasWithState`` handler (streaming.state) as
+the fallback when no compatible protobuf runtime is installed (see
+:func:`resolve_stream_engine`) → [events stream] → foreachBatch:
+runway attribution join (JOIN-5) + sinks (SNK-1 pacing via trigger
+processingTime='1 second').
 
 The reference's receiver thread + bounded queue + drop-all overflow
 (STATE-7) disappear: Spark's source buffering and micro-batch
@@ -120,7 +124,6 @@ def attributing_sink(
     batches).  ``tolerance_deg``/``keep_unmatched`` pass through to
     the same knobs the batch operator exposes."""
     from ..operators.attribution import (
-        GRID_DEG,
         HEADING_TOLERANCE_DEG,
         _compiled_coalesce,
         _grid_cell_join,
@@ -167,7 +170,7 @@ def attributing_sink(
                 finish_unmatched(
                     _grid_cell_join(
                         batch_df, runways, airport_bbox,
-                        lon, lat, heading, tol, GRID_DEG,
+                        lon, lat, heading, tol,
                         cell_rw=cell_rw, cell_bb=cell_bb, dirs=dirs,
                     ),
                     keep_unmatched,

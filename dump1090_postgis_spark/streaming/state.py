@@ -1,12 +1,18 @@
 """Keyed stateful sessionization for streaming (SURVEY §2.8
 STATE-1..5; reference flights.py:14-137, models.py:110-270).
 
-One ``applyInPandasWithState`` handler per hexident implements the
-whole reference state machine:
+:func:`advance_session` implements the whole reference state machine
+for one hexident.  Two stateful operators drive it: by default the
+row-based ``transformWithState`` processor
+(``streaming.tws.SessionProcessor``); when no compatible protobuf
+runtime is installed, the legacy ``applyInPandasWithState`` handler
+in this module (:func:`sessionize_updates`) is the fallback (see
+``pipeline.resolve_stream_engine``).  The state machine:
 
 - STATE-1 session pool with inactivity timeout (MAX_AGE 300 s,
-  processing-time — GroupStateTimeout.ProcessingTimeTimeout, exactly
-  the reference's eviction semantics);
+  processing-time, exactly the reference's eviction semantics: a
+  processing-time timer in the TWS processor,
+  GroupStateTimeout.ProcessingTimeTimeout in the legacy handler);
 - STATE-2 per-session accumulation (first/last_seen, last-non-null
   field values per the MSG-type dispatch);
 - STATE-3 onground edge detection (False→True landing, True→False
@@ -16,7 +22,7 @@ whole reference state machine:
 - STATE-5 emission of event rows for downstream attribution (the
   dataflow edge replaces the reference's pub/sub callbacks, STATE-6).
 
-The handler emits one row per detected (debounced) event plus, on
+Either operator emits one row per detected (debounced) event plus, on
 timeout, a final flight-summary row — mirroring SNK-1's batched
 upserts via foreachBatch on the caller side.
 """

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from dump1090_postgis_spark.datapipe import dedup as dd
 from dump1090_postgis_spark.datapipe import similarity as sim
 from dump1090_postgis_spark.datapipe import text as tx
+from dump1090_postgis_spark.datapipe.costmodel import work_rows_threshold
 from dump1090_postgis_spark.datapipe.multimodal import (
     attach_binary,
     decode_metadata,
@@ -212,6 +213,28 @@ def test_minhash_fast_joins_writer_when_pair_derivation_raises(
     assert os.path.exists(os.path.join(artifact, "_SUCCESS"))
 
 
+def test_minhash_fast_runs_no_bucket_cap_audit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The query derives pairs and writes the artifact, nothing else:
+    no side job computes dd.bucket_cap_stats (its numbers had no
+    reader)."""
+    import dump1090_postgis_spark.plans.datapipe_queries as dq
+
+    calls = []
+
+    def recording(*args, **kwargs):
+        calls.append(args)
+        raise AssertionError("bucket_cap_stats ran")
+
+    monkeypatch.setattr(dq, "_ARTIFACTS_DIR", str(tmp_path / "artifacts"))
+    monkeypatch.setattr(dq.dd, "bucket_cap_stats", recording)
+    sf001 = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+    pairs = dq.q_dedup_minhash_lsh_fast(spark, sf001)
+    assert pairs.count() > 0
+    assert calls == []
+
+
 def test_embedding_lsh_skewed_bucket(spark):
     """A pathological hot bucket (many identical vectors) must yield
     exactly the true duplicate pairs — the banded bucket-groupBy
@@ -262,15 +285,15 @@ def test_lsh_bucket_cap_drops_hot_bucket(spark):
 
 
 def test_embedding_lsh_vectorized_engine_matches_join(spark):
-    """The bucketed numpy verify (engine='vectorized') must emit the
-    same (id_a, id_b, cosine) rows as the candidate-join engine —
-    including exact-dup clusters, near-dups, cross-band dedup, the
-    bucket cap, NaN-component vectors (which Spark's nanSafeCompare
-    EMITS: round(NaN,4) >= threshold is TRUE), and NULL-element
-    vectors (which are INERT: the join engine's cosine over them is
-    NULL and the >= filter drops the pair — the Arrow transfer
-    rewrites NULL elements to NaN, so the vectorized engine needs the
-    pre-computed _deg flag to keep them inert)."""
+    """The bucketed numpy verify (taken past the rows×dim budget) must
+    emit the same (id_a, id_b, cosine) rows as the candidate-join
+    engine — including exact-dup clusters, near-dups, cross-band
+    dedup, the bucket cap, NaN-component vectors (which Spark's
+    nanSafeCompare EMITS: round(NaN,4) >= threshold is TRUE), and
+    NULL-element vectors (which are INERT: the join engine's cosine
+    over them is NULL and the >= filter drops the pair — the Arrow
+    transfer rewrites NULL elements to NaN, so the vectorized engine
+    needs the pre-computed _deg flag to keep them inert)."""
     import math
     import random
 
@@ -293,12 +316,14 @@ def test_embedding_lsh_vectorized_engine_matches_join(spark):
             for r in df_out.collect()
         }
 
+    # a corpus_rows hint past the budget selects the vectorized verify
+    past = work_rows_threshold(dd._EMB_JOIN_MAX_WORK, 8)
     for cap in (None, 8):
         j = norm(dd.embedding_near_dup_pairs(
-            df, threshold=0.9, dim=8, max_bucket_size=cap, engine="join"
+            df, threshold=0.9, dim=8, max_bucket_size=cap
         ))
         v = norm(dd.embedding_near_dup_pairs(
-            df, threshold=0.9, dim=8, max_bucket_size=cap, engine="vectorized"
+            df, threshold=0.9, dim=8, max_bucket_size=cap, corpus_rows=past
         ))
         assert v == j, f"cap={cap}"
         if cap is None:
@@ -351,7 +376,7 @@ def test_bucketed_jaccard_matches_candidate_join_engine(spark):
 
 
 def test_embedding_lsh_auto_gate(spark, monkeypatch):
-    """engine='auto' stays on the join engine below the corpus budget
+    """The engine gate stays on the join engine below the corpus budget
     and switches to the bucketed pandas verify past it."""
     df = spark.createDataFrame(
         [(i, [float(i % 5), 1.0, 0.5, 0.2, 0.1, 0.0, 1.0, 2.0]) for i in range(40)],
@@ -681,7 +706,7 @@ def test_ivf_cell_store_parity_and_partition_pruning(spark, tmp_path):
 
 
 def test_ivf_cell_store_vectorized_write_keeps_degenerate_strata(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """A store written through the VECTORIZED assignment engine
     round-trips the kept float column through Arrow, which rewrites
@@ -707,9 +732,23 @@ def test_ivf_cell_store_vectorized_write_keeps_degenerate_strata(
     queries = clean.filter(F.col("vec_id") < 2)
     cent = sim.build_centroids(clean, num_centroids=4)
     path = str(tmp_path / "vec_store")
+    # a corpus_rows hint past the FLOPs budget (k·dim = 4·8 per row)
+    # writes the store through the vectorized assignment; the recorder
+    # proves the hint took effect
+    vec_calls = []
+    assign_vec = sim._assign_nearest_vectorized
+
+    def _recording(*a, **kw):
+        vec_calls.append(1)
+        return assign_vec(*a, **kw)
+
+    monkeypatch.setattr(sim, "_assign_nearest_vectorized", _recording)
     sim.write_ivf_cell_store(
-        corpus, cent, path, assign_engine="vectorized", num_partitions=4
+        corpus, cent, path, num_partitions=4,
+        corpus_rows=work_rows_threshold(sim._IVF_ASSIGN_LITERAL_MAX_FLOPS, 4 * 8),
     )
+    monkeypatch.undo()
+    assert vec_calls
 
     def norm(df):
         out = set()
@@ -1060,9 +1099,10 @@ def test_ivf_pq_rerank_auto_gating(spark, monkeypatch):
     """rerank='auto' keys on the BUDGET dispatch: below the FLOPs
     budget the plan and rows are the pure-PQ path (oracle hashes
     unchanged); past it (collapsed budget + corpus_rows hint, no probe
-    job) the refine leg turns on and the output equals rerank=True.  A
-    caller-forced assign_engine never flips rerank — the
-    literal↔vectorized equivalence pin depends on that."""
+    job) the refine leg turns on and the output equals rerank=True.
+    rerank=False past the budget emits the same rows as rerank=False
+    below it — the literal↔vectorized equivalence pin depends on
+    that."""
     import random
 
     rnd = random.Random(78)
@@ -1115,19 +1155,15 @@ def test_ivf_pq_rerank_auto_gating(spark, monkeypatch):
             rerank=True,
         )
     )
-    # forced engine: no rerank flip (vectorized-forced output must
-    # still equal literal-forced output — both pure PQ)
-    monkeypatch.undo()
+    # rerank=False: the vectorized assignment past the budget emits the
+    # same pure-PQ rows as the literal one below it
     assert rows(
         sim.ivf_pq_topk(
-            corpus, queries, cent, k=5, probes=2,
-            assign_engine="vectorized",
+            corpus, queries, cent, k=5, probes=2, corpus_rows=60,
+            rerank=False,
         )
-    ) == rows(
-        sim.ivf_pq_topk(
-            corpus, queries, cent, k=5, probes=2, assign_engine="literal"
-        )
-    )
+    ) == rows(off_small)
+    monkeypatch.undo()
     with pytest.raises(ValueError, match="rerank"):
         sim.ivf_pq_topk(corpus, queries, cent, rerank="yes")
 
@@ -1861,7 +1897,7 @@ def test_brute_force_topk_blocked_matches_join_engine(spark):
 
 
 def test_brute_force_auto_gate(spark, monkeypatch):
-    """brute_force_topk engine='auto' stays on the join engine below
+    """brute_force_topk's engine gate stays on the join engine below
     the FLOPs budget (no Python seam in the plan) and switches to the
     blocked Arrow scan past it — same discipline as the LSH/semdedup
     vectorized gates.  Round 9: the gate is corpus_rows × nq × dim
@@ -1958,7 +1994,7 @@ def test_ivf_assign_engine_vectorized_matches_literal(spark, monkeypatch):
     neighbor_id, cosine) rows as the literal interpreted projection —
     including degenerate (NULL / NULL-element) and NaN-component
     corpus vectors (the _deg guard) — for both ivf_topk and
-    ivf_pq_topk; engine='auto' flips on the budget without an eager
+    ivf_pq_topk; the size gate flips on the budget without an eager
     count."""
     import math
     import random
@@ -1987,32 +2023,34 @@ def test_ivf_assign_engine_vectorized_matches_literal(spark, monkeypatch):
             out.add((r.query_id, r.rank, r.neighbor_id, c))
         return out
 
-    lit_ivf = norm(
-        sim.ivf_topk(corpus, queries, cent, k=5, probes=2,
-                     assign_engine="literal")
+    def plan(d):
+        return d._jdf.queryExecution().executedPlan().toString()
+
+    # below the budget: literal; a corpus_rows hint past it (k·dim =
+    # 4·8 per row): vectorized
+    past = work_rows_threshold(sim._IVF_ASSIGN_LITERAL_MAX_FLOPS, 4 * 8)
+    vec_ivf_df = sim.ivf_topk(
+        corpus, queries, cent, k=5, probes=2, corpus_rows=past
     )
-    vec_ivf = norm(
-        sim.ivf_topk(corpus, queries, cent, k=5, probes=2,
-                     assign_engine="vectorized")
-    )
+    assert "MapInPandas" in plan(vec_ivf_df)
+    lit_ivf = norm(sim.ivf_topk(corpus, queries, cent, k=5, probes=2))
+    vec_ivf = norm(vec_ivf_df)
     assert lit_ivf == vec_ivf and len(lit_ivf) == 4 * 5
 
+    # rerank=False on both sides: past the budget rerank='auto' would
+    # turn the refine leg on
     lit_pq = norm(
-        sim.ivf_pq_topk(corpus, queries, cent, k=5, probes=2,
-                        assign_engine="literal")
+        sim.ivf_pq_topk(corpus, queries, cent, k=5, probes=2, rerank=False)
     )
     vec_pq = norm(
         sim.ivf_pq_topk(corpus, queries, cent, k=5, probes=2,
-                        assign_engine="vectorized")
+                        corpus_rows=past, rerank=False)
     )
     assert lit_pq == vec_pq and len(lit_pq) == 4 * 5
 
     # auto dispatch: default budget keeps this tiny corpus literal (no
     # Python seam); a collapsed budget flips it — with a corpus_rows
     # hint, no probe job runs at all
-    def plan(d):
-        return d._jdf.queryExecution().executedPlan().toString()
-
     assert "MapInPandas" not in plan(
         sim.ivf_topk(corpus, queries, cent, k=5, probes=2)
     )
@@ -2053,7 +2091,7 @@ def test_blocked_bf_query_batching_matches_single(spark, monkeypatch):
     monkeypatch.setattr(sim, "_BF_MAX_QUERIES", 3)  # 8 queries → 3 chunks
     batched = norm(sim.brute_force_topk_blocked(corpus, queries, k=4))
     assert batched == single == norm(
-        sim.brute_force_topk(corpus, queries, k=4, engine="join")
+        sim.brute_force_topk(corpus, queries, k=4)
     )
     assert len(batched) == 8 * 4
 
@@ -2085,7 +2123,7 @@ def test_blocked_bf_mixed_length_and_all_null_queries(spark):
             out.add((r.query_id, r.rank, r.neighbor_id, c))
         return out
 
-    j = norm(sim.brute_force_topk(corpus, queries, k=5, engine="join"))
+    j = norm(sim.brute_force_topk(corpus, queries, k=5))
     b = norm(sim.brute_force_topk_blocked(corpus, queries, k=5))
     assert b == j and len(b) == 3 * 5
 
@@ -2094,7 +2132,7 @@ def test_blocked_bf_mixed_length_and_all_null_queries(spark):
     nullq = spark.createDataFrame(
         [(300, None), (301, None)], "vec_id long, embedding array<double>"
     )
-    jn = norm(sim.brute_force_topk(corpus, nullq, k=3, engine="join"))
+    jn = norm(sim.brute_force_topk(corpus, nullq, k=3))
     bn = norm(sim.brute_force_topk_blocked(corpus, nullq, k=3))
     assert bn == jn and len(bn) == 2 * 3
 
@@ -2120,11 +2158,13 @@ def test_build_centroids_engine_equivalence(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def run(engine):
-        out = sim.build_centroids(
-            df, num_centroids=4, iterations=2, assign_engine=engine
-        ).collect()
-        return sorted(out, key=lambda r: r.centroid_id)
+    def build(corpus_rows):
+        return sim.build_centroids(
+            df, num_centroids=4, iterations=2, corpus_rows=corpus_rows
+        )
+
+    def run(corpus_rows):
+        return sorted(build(corpus_rows).collect(), key=lambda r: r.centroid_id)
 
     def assert_same(xs, ys, rel):
         assert [r.centroid_id for r in xs] == [r.centroid_id for r in ys]
@@ -2138,20 +2178,20 @@ def test_build_centroids_engine_equivalence(spark):
                 else:
                     assert x == pytest.approx(y, rel=rel)
 
-    lit, vec = run("literal"), run("vectorized")
+    # the literal engine at this size (work ≪ budget); a corpus_rows
+    # hint past the FLOPs budget (k·dim = 4·6 per row) takes the
+    # vectorized one
+    edge = work_rows_threshold(sim._IVF_ASSIGN_LITERAL_MAX_FLOPS, 4 * 6)
+    plan = build(edge)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    lit, vec = run(None), run(edge)
     assert_same(lit, vec, rel=1e-9)
 
-    # auto resolves to literal at this size (work ≪ budget): bit-same
-    auto = run("auto")
-    assert_same(auto, lit, rel=0)
+    # just below the edge the gate stays literal: bit-same
+    assert_same(run(edge - 1), lit, rel=0)
 
-    # and to vectorized when the hint says the corpus is huge
-    big = sorted(
-        sim.build_centroids(
-            df, num_centroids=4, iterations=2, corpus_rows=10**12
-        ).collect(),
-        key=lambda r: r.centroid_id,
-    )
+    # and vectorized when the hint says the corpus is huge
+    big = run(10**12)
     assert [r.centroid_id for r in big] == [r.centroid_id for r in vec]
 
 
@@ -2315,13 +2355,14 @@ def test_bucketed_engines_handle_string_ids(spark):
     vec_pairs = {
         (r.id_a, r.id_b)
         for r in dd.embedding_near_dup_pairs(
-            emb, dim=4, threshold=0.9, engine="vectorized"
+            emb, dim=4, threshold=0.9,
+            corpus_rows=work_rows_threshold(dd._EMB_JOIN_MAX_WORK, 4),
         ).collect()
     }
     join_pairs = {
         (r.id_a, r.id_b)
         for r in dd.embedding_near_dup_pairs(
-            emb, dim=4, threshold=0.9, engine="join"
+            emb, dim=4, threshold=0.9
         ).collect()
     }
     assert vec_pairs == join_pairs == {("v-10", "v-9")}
@@ -2329,7 +2370,7 @@ def test_bucketed_engines_handle_string_ids(spark):
 
 def test_bucket_cap_stats_empty_frame_is_zeroes(spark, docs):
     """sum/max over zero rows are NULL in Spark; the one-row audit must
-    report 0s (the %d-formatted audit log line chokes on None)."""
+    report 0s, not None."""
     banded = dd.minhash_banded(docs).filter(F.lit(False))
     row = dd.bucket_cap_stats(banded).collect()[0]
     assert (

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dump1090_postgis_spark.functions.geo import point_in_polygon, same_heading
+from dump1090_postgis_spark.operators import attribution
 from dump1090_postgis_spark.operators.attribution import attribute_runway
 from dump1090_postgis_spark.sources.dims import nte_airport, nte_runways
 
@@ -96,29 +97,6 @@ def test_attribution_no_match(spark):
     assert dropped.count() == 0
 
 
-def test_attribution_explicit_strategy_skips_count_and_agrees(spark):
-    """strategy='compile' / 'grid' must bypass the eager dim count
-    (lazy plan building) and both must agree with 'auto' on the same
-    events; an unknown strategy raises."""
-    import pytest
-
-    ev = _events(
-        spark, [(1, *ON_RUNWAY, 32.0), (2, *ON_RUNWAY, 212.0), (3, *FAR_AWAY, 28.0)]
-    )
-    rw, ap = nte_runways(spark), nte_airport(spark)
-
-    def result(**kw):
-        return {
-            r.event_id: r.runway for r in attribute_runway(ev, rw, ap, **kw).collect()
-        }
-
-    auto = result()
-    assert result(strategy="compile") == auto
-    assert result(strategy="grid") == auto
-    with pytest.raises(ValueError, match="unknown attribution strategy"):
-        attribute_runway(ev, rw, ap, strategy="bogus")
-
-
 # ---------------------------------------------------------------------------
 # Grid-cell broadcast-join scale path (branch budget exceeded)
 # ---------------------------------------------------------------------------
@@ -134,31 +112,31 @@ def test_attribution_explicit_strategy_skips_count_and_agrees(spark):
         (ON_RUNWAY, 90.0, "UNK"),              # on strip, wrong heading
     ],
 )
-def test_attribution_join_path_parity(spark, point, heading, expected):
-    """branch_budget=0 forces the grid-cell join path; every compiled-path
-    scenario must attribute identically."""
+def test_attribution_join_path_parity(
+    spark, monkeypatch, point, heading, expected
+):
+    """A zero BRANCH_BUDGET sends the NTE dim down the grid-cell join
+    path; every compiled-path scenario must attribute identically."""
+    monkeypatch.setattr(attribution, "BRANCH_BUDGET", 0)
     ev = _events(spark, [(1, *point, heading)])
-    out = attribute_runway(
-        ev, nte_runways(spark), nte_airport(spark), branch_budget=0
-    ).collect()
+    out = attribute_runway(ev, nte_runways(spark), nte_airport(spark)).collect()
     assert out[0].runway == expected
 
 
-def test_attribution_join_path_plan_and_schema(spark):
+def test_attribution_join_path_plan_and_schema(spark, monkeypatch):
     """The join path must be a broadcast hash join on the grid cell (no
     nested-loop over the runway dim), preserve the event schema +
     row count, and leave no helper columns behind."""
+    monkeypatch.setattr(attribution, "BRANCH_BUDGET", 0)
     ev = _events(spark, [(1, *ON_RUNWAY, 32.0), (2, *FAR_AWAY, 10.0)])
-    out = attribute_runway(
-        ev, nte_runways(spark), nte_airport(spark), branch_budget=0
-    )
+    out = attribute_runway(ev, nte_runways(spark), nte_airport(spark))
     assert out.columns == ev.columns + ["runway"]
     assert out.count() == 2
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
-def test_attribution_null_coords_and_heading(spark):
+def test_attribution_null_coords_and_heading(spark, monkeypatch):
     """NULL lon/lat or heading rows stay rows and attribute to UNK in
     BOTH paths (compiled when() skips on NULL; join-path filter drops
     NULL predicates)."""
@@ -167,10 +145,11 @@ def test_attribution_null_coords_and_heading(spark):
         "event_id long, longitude double, latitude double, interp_track double",
     )
     for budget in (256, 0):
+        monkeypatch.setattr(attribution, "BRANCH_BUDGET", budget)
         out = {
             r.event_id: r.runway
             for r in attribute_runway(
-                ev, nte_runways(spark), nte_airport(spark), branch_budget=budget
+                ev, nte_runways(spark), nte_airport(spark)
             ).collect()
         }
         assert out == {1: "UNK", 2: "UNK"}
@@ -224,7 +203,7 @@ def test_point_in_polygon_sql_parity(spark):
         assert r.hof == r.unr, r
 
 
-def test_grid_first_match_unrolled_parity(spark):
+def test_grid_first_match_unrolled_parity(spark, monkeypatch):
     """Grid direct tier with MORE runways per cell than the unroll
     budget: 6 overlapping same-cell quads (only #4 and #6 match the
     heading) must still attribute first-match-in-iteration-order via
@@ -250,10 +229,11 @@ def test_grid_first_match_unrolled_parity(spark):
         "name string, direction double, polygon array<struct<lon:double,lat:double>>",
     )
     ev = _events(spark, [(1, 0.1, 0.1, 30.0), (2, 5.0, 5.0, 30.0)])
+    monkeypatch.setattr(attribution, "BRANCH_BUDGET", 0)  # grid path
     out = {
         r.event_id: r.runway
         for r in attribute_runway(
-            ev, rw, None, branch_budget=0,
+            ev, rw, None,
             lon="longitude", lat="latitude", heading="interp_track",
         ).collect()
     }

@@ -596,7 +596,9 @@ def test_ivf_vectorized_assignment_stays_mapside(spark):
     Arrow mapInPandas over the scan, zero Exchange / Join / Window
     before the probe join; and the whole ivf_topk plan's only
     exchange is the final per-query ranking over candidates."""
+    from dump1090_postgis_spark.datapipe.costmodel import work_rows_threshold
     from dump1090_postgis_spark.datapipe.similarity import (
+        _IVF_ASSIGN_LITERAL_MAX_FLOPS,
         _assign_nearest_vectorized,
         build_centroids,
         ivf_topk,
@@ -615,12 +617,14 @@ def test_ivf_vectorized_assignment_stays_mapside(spark):
     assert "Join" not in plan
     assert "Window" not in plan
 
-    # full query at forced-vectorized assignment: corpus side still has
+    # full query with a corpus_rows hint past the FLOPs budget (k·dim
+    # per row), so the assignment is vectorized: corpus side still has
     # no exchange upstream of the broadcast probe join; the only hash
     # exchange is the candidate ranking window
+    dim = len(emb.select("embedding").first()[0])
     out = ivf_topk(
         emb, emb.limit(2), centroids, k=3, probes=2,
-        assign_engine="vectorized",
+        corpus_rows=work_rows_threshold(_IVF_ASSIGN_LITERAL_MAX_FLOPS, 4 * dim),
     )
     qplan = plan_of(out)
     assert "MapInPandas" in qplan
@@ -630,7 +634,7 @@ def test_ivf_vectorized_assignment_stays_mapside(spark):
 
 def test_table_rows_footer_hint_exact_and_output_invariant(spark, tmp_path):
     """Round-10 verdict #3: the registry threads parquet-footer row
-    counts as corpus_rows hints into every engine='auto' call site.
+    counts as corpus_rows hints into every size-gated call site.
     The hint is jobs-not-answers ONLY because it is EXACT — pin that
     (a) table_rows == the Spark count for every testdata table, single
     file and Spark directory-of-parts layouts both; (b) a hinted

@@ -16,8 +16,9 @@ Targets:
   chain → banded keys, bit-identical on arbitrary text;
 - `bucketed_jaccard_pairs` (C-set verify, the ≥100k-doc fast path) vs
   `banded_candidate_pairs + jaccard_pairs` (the oracle join engine);
-- `embedding_near_dup_pairs(engine='vectorized')` (numpy bucket
-  matmul, the ≥50k-row fast path) vs `engine='join'`.
+- `embedding_near_dup_pairs` past its work budget (numpy bucket
+  matmul, the ≥50k-row fast path, selected by a `corpus_rows` hint) vs
+  the join engine below it.
 """
 
 import math
@@ -30,6 +31,7 @@ from hypothesis import strategies as st
 
 from dump1090_postgis_spark.datapipe import dedup as dd
 from dump1090_postgis_spark.datapipe import lsh_artifact as la
+from dump1090_postgis_spark.datapipe.costmodel import work_rows_threshold
 
 # Controlled alphabet: ASCII words + multi-byte UTF-8 (2/3-byte
 # sequences hit xxh64_bytes' 4-byte and tail lanes) + the Java-\s
@@ -131,12 +133,13 @@ def test_embedding_engines_agree_on_random_vectors(spark, vecs, cap):
 
     j = norm(
         dd.embedding_near_dup_pairs(
-            df, threshold=0.9, dim=8, max_bucket_size=cap, engine="join"
+            df, threshold=0.9, dim=8, max_bucket_size=cap
         )
     )
     v = norm(
         dd.embedding_near_dup_pairs(
-            df, threshold=0.9, dim=8, max_bucket_size=cap, engine="vectorized"
+            df, threshold=0.9, dim=8, max_bucket_size=cap,
+            corpus_rows=work_rows_threshold(dd._EMB_JOIN_MAX_WORK, 8),
         )
     )
     assert v == j
@@ -302,7 +305,7 @@ def test_parser_matches_reference_semantics_twin(spark, lines):
 def test_work_rows_threshold_boundary_is_exact(budget, units, delta):
     """The pure dispatch rule: deterministic, and for every n around
     the edge, `n >= threshold` ⟺ `n · units > budget` — the classic
-    off-by-one place where engine='auto' could flip between runs of
+    off-by-one place where an engine gate could flip between runs of
     slightly different inputs.  (Integer budgets/units in these ranges
     keep the float floor exact: n·units ≤ budget+units « 2^53.)"""
     from dump1090_postgis_spark.datapipe.costmodel import (
@@ -321,11 +324,12 @@ def _plan(df) -> str:
 
 def test_auto_dispatch_flip_point_engines_value_match(spark):
     """AT the budget edge (hint = threshold vs threshold−1 on the SAME
-    physical data) every engine='auto' gate must (a) actually flip —
+    physical data) every engine gate must (a) actually flip —
     plan-marker asserted — and (b) produce identical values, so an
     input that straddles the edge between runs cannot change answers:
     brute-force ANN, embedding-LSH near-dup, IVF corpus assignment,
-    and SemDeDup's pairwise gate."""
+    the Lloyd reassignment in build_centroids, and SemDeDup's pairwise
+    gate."""
     import random
 
     from dump1090_postgis_spark.datapipe import similarity as sim
@@ -370,6 +374,17 @@ def test_auto_dispatch_flip_point_engines_value_match(spark):
     above = sim.ivf_topk(emb, queries, cent, k=5, probes=2, corpus_rows=edge)
     below = sim.ivf_topk(
         emb, queries, cent, k=5, probes=2, corpus_rows=edge - 1
+    )
+    assert "MapInPandas" in _plan(above)
+    assert "MapInPandas" not in _plan(below)
+    assert rows(above) == rows(below)
+
+    # Lloyd reassignment (iterations > 0): same units = k·dim
+    above = sim.build_centroids(
+        emb, num_centroids=4, iterations=2, corpus_rows=edge
+    )
+    below = sim.build_centroids(
+        emb, num_centroids=4, iterations=2, corpus_rows=edge - 1
     )
     assert "MapInPandas" in _plan(above)
     assert "MapInPandas" not in _plan(below)
