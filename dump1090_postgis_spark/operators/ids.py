@@ -14,12 +14,18 @@ Partition boundaries from repartitionByRange are sampling-based and
 may vary run-to-run, but the assigned ids depend only on the GLOBAL
 order (offsets absorb boundary placement), so ids are reproducible as
 long as the ordering is total — callers must include a tiebreaker.
+
+``group_col`` numbers several id spaces in the same two passes: the
+counts and offsets are keyed by (partition, group), so each group's
+ids run 1..n in ``order_cols`` order however its rows spread over the
+range partitions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 
@@ -40,8 +46,17 @@ def with_dense_ids(
     id_col: str = "id",
     offset: int = 0,
     caches: list[DataFrame] | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
     """Add 1-based dense ids following the total order of `order_cols`.
+
+    ``group_col`` restarts the ids within each value of that column
+    (NULL is a group of its own): every group gets its own dense
+    ``offset + 1 .. offset + n`` space in ``order_cols`` order, as if
+    each group had been numbered by a separate call — but from one
+    layout pin and one counting job.  ``order_cols`` only has to be
+    total within a group.  ``None`` numbers the whole frame as one
+    space.
 
     The internal persist (DISK_ONLY — this is a layout pin, not a hot
     cache; it must not evict executor heap at scale) is appended to
@@ -63,31 +78,44 @@ def with_dense_ids(
     )
     if caches is not None:
         caches.append(with_pid)
-    counts = {
-        r._pid: r.cnt
-        for r in with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets = {}
-    acc = offset
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    keys = ["_pid"] + ([group_col] if group_col is not None else [])
+    counts = with_pid.groupBy(*keys).agg(F.count(F.lit(1)).alias("_cnt")).collect()
+    # Each group's running total walks the partitions in range order,
+    # so a group's offset in partition p counts only its own rows in
+    # the partitions before p.
+    running: dict = {}
+    offsets = []
+    for r in sorted(counts, key=lambda r: r._pid):
+        g = r[group_col] if group_col is not None else None
+        acc = running.get(g, offset)
+        offsets.append((r._pid, g, acc))
+        running[g] = acc + r._cnt
     # literal_dim, not createDataFrame: the offset map is re-read every
     # time the numbered plan executes, and a Python-RDD leaf would
     # relaunch Python workers for it on each broadcast build — as a
     # LocalRelation it folds into the plan (round-12 literal-dim sweep)
     from ..sources.dims import literal_dim
 
-    offset_df = F.broadcast(
-        literal_dim(
-            spark,
-            [(pid, off) for pid, off in sorted(offsets.items())],
-            "_pid int, _poff long",
+    if group_col is None:
+        offset_df = literal_dim(
+            spark, [(pid, off) for pid, _, off in offsets], "_pid int, _poff long"
         )
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (
-        with_pid.join(offset_df, "_pid")
-        .withColumn(id_col, F.row_number().over(w) + F.col("_poff"))
-        .drop("_pid", "_poff")
-    )
+        numbered = with_pid.join(F.broadcast(offset_df), "_pid")
+    else:
+        schema = T.StructType(
+            [
+                T.StructField("_opid", T.IntegerType()),
+                T.StructField("_ogrp", df.schema[group_col].dataType),
+                T.StructField("_poff", T.LongType()),
+            ]
+        )
+        offset_df = literal_dim(spark, offsets, schema)
+        numbered = with_pid.join(
+            F.broadcast(offset_df),
+            (F.col("_pid") == F.col("_opid"))
+            & F.col(group_col).eqNullSafe(F.col("_ogrp")),
+        ).drop("_opid", "_ogrp")
+    w = Window.partitionBy(*keys).orderBy(*order_cols)
+    return numbered.withColumn(
+        id_col, F.row_number().over(w) + F.col("_poff")
+    ).drop("_pid", "_poff")

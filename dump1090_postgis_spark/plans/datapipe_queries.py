@@ -14,6 +14,7 @@ import os
 import threading
 
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..schemas import load_table, table_rows
 from ..datapipe import dedup as dd
@@ -253,7 +254,10 @@ def q_dedup_minhash_lsh_fast(spark, sf):
         except BaseException as exc:  # re-raised on the caller thread
             _write_err.append(exc)
 
-    _writer = threading.Thread(target=_write_artifact)
+    # the writer's jobs stay in the caller's job group / description
+    _writer = threading.Thread(
+        target=inheritable_thread_target(spark)(_write_artifact)
+    )
     _writer.start()
     try:
         if rows_at_least(
@@ -553,7 +557,10 @@ def q_dedup_clusters_incremental(spark, sf):
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = {
-            name: pool.submit(load_cluster_map, spark, p, fp, prm)
+            name: pool.submit(
+                inheritable_thread_target(spark)(load_cluster_map),
+                spark, p, fp, prm,
+            )
             for (name, p), prm in zip(
                 paths.items(), (params, banded_params, hashes_params)
             )

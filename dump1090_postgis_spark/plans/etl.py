@@ -19,14 +19,29 @@ parallel (operators.ids two-pass range-partition scheme) following the
 natural ordering — the reference's sequences are non-deterministic
 across runs, which its own oracle problem notes (SURVEY §7
 "Non-deterministic ids").
+
+Concurrency: the three numbering passes (flights; positions; landings
+and takeoffs together) are independent Spark jobs, so they run at the
+same time on a small thread pool, and so do the four table writes.
+Positions and events do not wait for the flight ids: they are numbered
+by (time, _adm_ts, hexident, session_id), which ranks rows exactly as
+(time, flight_id) does — see ``build_tables``.  Every pool thread
+carries the caller's local properties (job group, job description,
+scheduler pool) through ``pyspark.util.inheritable_thread_target``, so
+``cancelJobGroup`` still reaches every job of the build.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from ..functions.conversions import interpolated_track
 from ..operators import parse
@@ -38,6 +53,20 @@ from ..operators.events import (
 )
 from ..operators.ids import release_caches, with_dense_ids
 from ..operators.sessionize import flight_summaries, sessionize
+
+
+def _run_all(spark: SparkSession, tasks: dict[str, Callable]) -> dict:
+    """Run every task on its own thread with the caller's Spark local
+    properties, wait for ALL of them, then return their results by
+    name — or raise the first failure in ``tasks`` order.  Waiting for
+    every task before raising keeps a failing task from leaving its
+    siblings' jobs running past the caller's cleanup."""
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futs = {
+            name: pool.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in tasks.items()
+        }
+    return {name: fut.result() for name, fut in futs.items()}
 
 
 def build_tables(
@@ -52,6 +81,16 @@ def build_tables(
     """Run the full pipeline; returns {'flights', 'positions',
     'landings', 'takeoffs'} DataFrames with the reference's table
     shapes (FIXTURES.md §3).
+
+    Ids: flights rank by (first_seen, hexident, session_id); positions,
+    landings and takeoffs each rank by (time, flight_id), landings and
+    takeoffs in separate 1..n spaces numbered in one pass.  The session
+    stream keeps its admission time ``_adm_ts``, which equals the
+    flight's ``first_seen`` (admission drops every earlier message), so
+    a row's (_adm_ts, hexident, session_id) sorts exactly like its
+    flight_id.  Positions and events are therefore numbered by
+    (time, _adm_ts, hexident, session_id) concurrently with the flights
+    and get ``flight_id`` joined on afterwards.
 
     Cache lifecycle (the session stream + each dense-id layout pin are
     persisted DISK_ONLY):
@@ -69,8 +108,45 @@ def build_tables(
       materializing the outputs.
     - neither — legacy lazy mode; caches stay pinned for the session
       (fine for short-lived jobs/tests, leaks in long-lived drivers).
+
+    On error (a numbering pass or a write raises) the call waits until
+    every concurrent pass or write has finished, unpersists every pin
+    it made — in all three modes — and re-raises the first error.
     """
-    registry: list[DataFrame] = caches if caches is not None else []
+    spark = raw_lines.sparkSession
+    pins: list[DataFrame] = []
+    done = False
+    try:
+        tables = _numbered_tables(
+            raw_lines, runways, airport, altitude_below, session_gap_s, pins
+        )
+        if output_path is not None:
+            tables = _run_all(
+                spark,
+                {
+                    name: partial(_write_table, name, df, f"{output_path}/{name}")
+                    for name, df in tables.items()
+                },
+            )
+        elif caches is not None:
+            caches.extend(pins)
+        done = True
+        return tables
+    finally:
+        if output_path is not None or not done:
+            release_caches(pins)
+
+
+def _numbered_tables(
+    raw_lines: DataFrame,
+    runways: DataFrame | None,
+    airport: DataFrame | None,
+    altitude_below: float,
+    session_gap_s: int,
+    pins: list[DataFrame],
+) -> dict[str, DataFrame]:
+    """The four tables as lazy frames over the session pin and the
+    three dense-id layout pins (all appended to ``pins``)."""
     msgs = parse.parse_sbs1_lines(raw_lines)
     msgs = parse.dispatch_fields(msgs)
     msgs = parse.with_altitude_m(msgs)
@@ -97,145 +173,148 @@ def build_tables(
     # so parse+sessionize (one scan + one shuffle) run once, not per
     # table.
     raw_sess = sessionize(msgs, gap_s=session_gap_s)
-    key0 = ["hexident", "session_id"]
+    key = ["hexident", "session_id"]
     admission_ts = (
         raw_sess.filter(admissible)
-        .groupBy(*key0)
+        .groupBy(*key)
         .agg(F.min("gen_date_time").alias("_adm_ts"))
     )
+    # `_adm_ts` stays on: it is the flight's first_seen, the leading
+    # key of the flight-id order (see build_tables).
     sess = (
-        raw_sess.join(admission_ts, key0, "inner")  # drops never-admitted
+        raw_sess.join(admission_ts, key, "inner")  # drops never-admitted
         .filter(F.col("gen_date_time") >= F.col("_adm_ts"))
-        .drop("_adm_ts")
         .persist(StorageLevel.DISK_ONLY)
     )
-    registry.append(sess)
+    pins.append(sess)
+    # positions and events rank by (time, flight_id) without the ids
+    by_time_then_flight = ["time", "_adm_ts", *key]
 
-    # One groupBy produces the flight summaries AND the intention
-    # inputs (no separate aggregations over the same key).
-    admitted = flight_summaries(
-        sess,
-        extra_aggs=[
-            F.min_by(
-                F.col("onground"),
-                F.when(F.col("onground").isNotNull(), F.col("gen_date_time")),
-            ).alias("first_onground"),
-            # airborne-in-between signal: splits a complete
-            # gate-to-gate flight (→ departure, the reference's
-            # first-position-onground rule) from a taxi-only session
-            # (→ unknown) — endpoint flags alone cannot tell them
-            # apart.  bool_or skips NULLs; all-NULL coalesces to
-            # "never seen airborne" inside classify_intention.
-            F.bool_or(F.col("onground") == F.lit(False)).alias(
-                "any_airborne"
-            ),
-        ],
-    )
-    flights = with_dense_ids(
-        admitted, ["first_seen", "hexident", "session_id"], "id", caches=registry
-    )
-    flights = classify_intention(flights).select(
-        "id", "hexident", "session_id",
-        F.col("last_callsign").alias("callsign"),
-        "first_seen", "last_seen", "intention", "n_messages",
-    )
+    def number_flights() -> DataFrame:
+        # One groupBy produces the flight summaries AND the intention
+        # inputs (no separate aggregations over the same key).
+        admitted = flight_summaries(
+            sess,
+            extra_aggs=[
+                F.min_by(
+                    F.col("onground"),
+                    F.when(F.col("onground").isNotNull(), F.col("gen_date_time")),
+                ).alias("first_onground"),
+                # airborne-in-between signal: splits a complete
+                # gate-to-gate flight (→ departure, the reference's
+                # first-position-onground rule) from a taxi-only
+                # session (→ unknown) — endpoint flags alone cannot
+                # tell them apart.  bool_or skips NULLs; all-NULL
+                # coalesces to "never seen airborne" inside
+                # classify_intention.
+                F.bool_or(F.col("onground") == F.lit(False)).alias(
+                    "any_airborne"
+                ),
+            ],
+        )
+        return with_dense_ids(
+            admitted, ["first_seen", *key], "id", caches=pins
+        )
 
-    key = ["hexident", "session_id"]
-    fid = flights.select(*key, F.col("id").alias("flight_id"))
-
-    # positions table (FLT-4 validity, meters altitude); non-admitted
-    # sessions drop out via the inner join on fid
-    positions = (
-        parse.position_validity(sess)
-        .join(fid, key)
-        .select(
-            F.col("flight_id"),
+    def number_positions() -> DataFrame:
+        # positions table (FLT-4 validity, meters altitude)
+        positions = parse.position_validity(sess).select(
+            *key, "_adm_ts",
             F.col("gen_date_time").alias("time"),
             "longitude", "latitude", "altitude_m",
             F.col("verticalrate").cast("short").alias("verticalrate"),
             F.col("track").cast("short").alias("track"),
             "onground",
         )
+        return with_dense_ids(positions, by_time_then_flight, "id", caches=pins)
+
+    def number_events() -> DataFrame:
+        # Events fire ONLY from valid-position MSG2/MSG3 rows — the
+        # reference's update_onground is called solely from the
+        # append-position branches (models.py:196-215); onground
+        # carried by MSG1/4/8 updates state silently, never events.
+        # PRJ-7 heading is therefore computed over consecutive
+        # POSITION rows, matching `interpolate_track(positions[-2:])`
+        # (models.py:134-140).
+        tracked = interpolated_track(parse.position_validity(sess))
+        edges = debounce_events(detect_onground_edges(tracked))
+        if runways is not None:
+            edges = attribute_runway(edges, runways, airport)
+        else:
+            edges = edges.withColumn("runway", F.lit("UNK"))
+        events = edges.select(
+            *key, "_adm_ts", "event_type",
+            F.col("gen_date_time").alias("time"),
+            "runway",
+        )
+        # Landings and takeoffs are numbered INDEPENDENTLY — the
+        # reference draws from separate per-table sequences
+        # (landings_id_seq / takeoffs_id_seq,
+        # create_public_schema.sql:606-683) — so the ids restart per
+        # event_type, in one pass over the attributed edges.
+        return with_dense_ids(
+            events, by_time_then_flight, "id", caches=pins,
+            group_col="event_type",
+        )
+
+    numbered = _run_all(
+        sess.sparkSession,
+        {
+            "flights": number_flights,
+            "positions": number_positions,
+            "events": number_events,
+        },
     )
-    positions = with_dense_ids(
-        positions, ["time", "flight_id"], "id", caches=registry
-    ).select(
+    flights = numbered["flights"]
+    fid = flights.select(*key, F.col("id").alias("flight_id"))
+    # every position and event belongs to an admitted session, and
+    # every admitted session is a flight: the inner joins drop nothing
+    positions = numbered["positions"].join(fid, key).select(
         "id", "flight_id", "time", "longitude", "latitude",
         "altitude_m", "verticalrate", "track", "onground",
     )
+    events = numbered["events"].join(fid, key)
 
-    # Events fire ONLY from valid-position MSG2/MSG3 rows — the
-    # reference's update_onground is called solely from the
-    # append-position branches (models.py:196-215); onground carried by
-    # MSG1/4/8 updates state silently, never events.  PRJ-7 heading is
-    # therefore computed over consecutive POSITION rows, matching
-    # `interpolate_track(positions[-2:])` (models.py:134-140).
-    pos_rows = parse.position_validity(sess)
-    tracked = interpolated_track(pos_rows)
-    edges = debounce_events(detect_onground_edges(tracked))
+    def event_table(kind: str) -> DataFrame:
+        return events.filter(F.col("event_type") == kind).select(
+            "id", "flight_id", "time", "runway"
+        )
 
-    if runways is not None:
-        edges = attribute_runway(edges, runways, airport)
-    else:
-        edges = edges.withColumn("runway", F.lit("UNK"))
-
-    edges = edges.join(fid, key)
-    # Landings and takeoffs are numbered INDEPENDENTLY — the reference
-    # draws from separate per-table sequences (landings_id_seq /
-    # takeoffs_id_seq, create_public_schema.sql:606-683), so each table
-    # gets its own dense 1..n id space.
-    event_cols = [
-        "flight_id",
-        F.col("gen_date_time").alias("time"),
-        "runway",
-    ]
-    landings = with_dense_ids(
-        edges.filter(F.col("event_type") == "landing"),
-        ["gen_date_time", "flight_id"], "id", caches=registry,
-    ).select("id", *event_cols)
-    takeoffs = with_dense_ids(
-        edges.filter(F.col("event_type") == "takeoff"),
-        ["gen_date_time", "flight_id"], "id", caches=registry,
-    ).select("id", *event_cols)
-
-    tables = {
-        "flights": flights.drop("session_id"),
+    return {
+        "flights": classify_intention(flights).select(
+            "id", "hexident",
+            F.col("last_callsign").alias("callsign"),
+            "first_seen", "last_seen", "intention", "n_messages",
+        ),
         "positions": positions,
-        "landings": landings,
-        "takeoffs": takeoffs,
+        "landings": event_table("landing"),
+        "takeoffs": event_table("takeoff"),
     }
-    if output_path is not None:
-        from ..operators.storage import write_time_partitioned
 
-        spark = raw_lines.sparkSession
-        out: dict[str, DataFrame] = {}
-        for name, df in tables.items():
-            path = f"{output_path}/{name}"
-            # The Spark analog of the reference's physical schema
-            # (create_public_schema.sql:759-811 btree-on-time indexes +
-            # CLUSTER ON idx_positions_flight_id): time tables are
-            # date-partitioned so FLT-5/6 predicates prune whole
-            # directories, positions additionally clustered by
-            # flight_id so trajectory assembly reads co-located,
-            # pre-sorted keys.  Read-back frames therefore carry the
-            # `_dt` partition column (adsb.py's date helpers use it).
-            if name in ("positions", "landings", "takeoffs"):
-                write_time_partitioned(
-                    df, path, ts="time",
-                    cluster_key="flight_id" if name == "positions" else None,
-                )
-                # explicit schema: an EMPTY partitioned write leaves no
-                # data files to infer from (zero-takeoff captures)
-                schema = T.StructType(
-                    df.schema.fields + [T.StructField("_dt", T.DateType())]
-                )
-                out[name] = spark.read.schema(schema).parquet(path)
-            else:
-                df.write.mode("overwrite").parquet(path)
-                out[name] = spark.read.parquet(path)
-        release_caches(registry)
-        return out
-    return tables
+
+def _write_table(name: str, df: DataFrame, path: str) -> DataFrame:
+    """Write one output table to ``path``; return its parquet read-back."""
+    from ..operators.storage import write_time_partitioned
+
+    spark = df.sparkSession
+    if name == "flights":
+        df.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+    # The Spark analog of the reference's physical schema
+    # (create_public_schema.sql:759-811 btree-on-time indexes + CLUSTER
+    # ON idx_positions_flight_id): time tables are date-partitioned so
+    # FLT-5/6 predicates prune whole directories, positions
+    # additionally clustered by flight_id so trajectory assembly reads
+    # co-located, pre-sorted keys.  Read-back frames therefore carry
+    # the `_dt` partition column (adsb.py's date helpers use it).
+    write_time_partitioned(
+        df, path, ts="time",
+        cluster_key="flight_id" if name == "positions" else None,
+    )
+    # explicit schema: an EMPTY partitioned write leaves no data files
+    # to infer from (zero-takeoff captures)
+    schema = T.StructType(df.schema.fields + [T.StructField("_dt", T.DateType())])
+    return spark.read.schema(schema).parquet(path)
 
 
 def refresh_materialized(df: DataFrame, path: str) -> None:

@@ -168,3 +168,84 @@ def test_output_path_partition_pruning(spark, tmp_path):
     assert adsb.landings_fromto(
         out["landings"], day, datetime.date(2024, 5, 2)
     ).count() == 1
+
+
+# Two flights whose first_seen order (BBB001 first) disagrees with their
+# hexident order, both emitting a position at 10:00:05, a landing at
+# 10:00:10 and a takeoff at 10:00:20 — every tie on `time` must break
+# by flight_id, i.e. by first_seen, not by hexident.
+TIED_CAPTURE = [
+    f"MSG,3,1,1,{hexident},1,2024/05/01,{t},2024/05/01,{t},,{alt},,,47.1,-1.6,,,0,,0,{gnd}"
+    for hexident, first in (("BBB001", "10:00:00.000"), ("AAA002", "10:00:01.000"))
+    for t, alt, gnd in (
+        (first, 900, 0),
+        ("10:00:05.000", 300, 0),
+        ("10:00:10.000", 50, -1),
+        ("10:00:20.000", 50, 0),
+    )
+]
+
+
+def test_ids_rank_by_time_then_flight_id(spark):
+    """Positions, landings and takeoffs are numbered without waiting for
+    the flight ids (by time, admission time, hexident, session); their
+    ids must still be exactly 1..n ranked by (time, flight_id)."""
+    raw = spark.createDataFrame([(l,) for l in TIED_CAPTURE], "value string")
+    t = build_tables(raw)
+    fid = {r.hexident: r.id for r in t["flights"].collect()}
+    assert fid == {"BBB001": 1, "AAA002": 2}
+    for name, n in (("positions", 8), ("landings", 2), ("takeoffs", 2)):
+        rows = t[name].collect()
+        assert len(rows) == n, name
+        by_id = [(r.time, r.flight_id) for r in sorted(rows, key=lambda r: r.id)]
+        assert by_id == sorted(by_id), name
+        assert sorted(r.id for r in rows) == list(range(1, n + 1)), name
+
+
+def test_output_path_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The concurrent numbering passes and writes run on pool threads;
+    every job they submit must still carry the caller's job group, so
+    cancelJobGroup and job descriptions reach the whole build."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    raw = spark.createDataFrame([(l,) for l in CAPTURE], "value string")
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("etl-build", "build_tables under a job group")
+    try:
+        build_tables(
+            raw, nte_runways(spark), nte_airport(spark),
+            output_path=str(tmp_path / "etl_grouped"),
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert tracker.getJobIdsForGroup("etl-build")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_failed_write_releases_caches(spark, tmp_path, monkeypatch):
+    """A write that raises must surface its error AND leave no pin
+    behind: the caches are released after every concurrent write has
+    finished, on failure as on success."""
+    from dump1090_postgis_spark.operators import storage
+
+    class WriteFailed(RuntimeError):
+        pass
+
+    real = storage.write_time_partitioned
+
+    def failing(df, path, **kwargs):
+        if path.endswith("/landings"):
+            raise WriteFailed(path)
+        return real(df, path, **kwargs)
+
+    monkeypatch.setattr(storage, "write_time_partitioned", failing)
+    baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
+    raw = spark.createDataFrame([(l,) for l in CAPTURE], "value string")
+    with pytest.raises(WriteFailed):
+        build_tables(
+            raw, nte_runways(spark), nte_airport(spark),
+            output_path=str(tmp_path / "etl_fail"),
+        )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline

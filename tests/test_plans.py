@@ -138,6 +138,11 @@ def test_dense_ids_no_global_window(spark):
     out = with_dense_ids(ev, ["ts", "event_id"], "id")
     plan = plan_of(out)
     assert "SinglePartition" not in plan
+    grouped = with_dense_ids(
+        ev.withColumn("g", F.col("event_id") % 3), ["ts", "event_id"], "id",
+        group_col="g",
+    )
+    assert "SinglePartition" not in plan_of(grouped)
 
 
 def test_computed_array_explodes_infer_no_recompute_filter(spark):

@@ -18,7 +18,9 @@ Targets:
   `banded_candidate_pairs + jaccard_pairs` (the oracle join engine);
 - `embedding_near_dup_pairs` past its work budget (numpy bucket
   matmul, the ≥50k-row fast path, selected by a `corpus_rows` hint) vs
-  the join engine below it.
+  the join engine below it;
+- `with_dense_ids(group_col=)` vs a per-group Python rank — one
+  numbering pass keeps each group's ids dense across range partitions.
 """
 
 import math
@@ -556,3 +558,64 @@ def test_literal_dim_quotes_awkward_field_names(spark):
     assert lit.collect() == ref.collect()
     empty = literal_dim(spark, [], schema)
     assert empty.columns == ref.columns and empty.count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Dense ids: grouped numbering (operators/ids.py `group_col`)
+# ---------------------------------------------------------------------------
+
+# A spine of "span" rows across the whole key range: that group always
+# spreads over several range partitions.
+_ID_SPINE = [("span", k) for k in range(0, 100, 4)]
+
+
+@settings(**_SETTINGS)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["span", "a", "b", None]),
+            st.integers(min_value=0, max_value=99),
+        ),
+        max_size=40,
+    ),
+    offset=st.integers(min_value=0, max_value=3),
+)
+def test_dense_ids_group_col_numbers_each_group_densely(spark, rows, offset):
+    """Per group, ids are exactly offset+1..offset+n in order_cols order
+    however the group's rows spread over the range partitions; without
+    group_col the same rows get one global dense rank."""
+    from pyspark.sql import functions as F
+
+    from dump1090_postgis_spark.operators.ids import (
+        release_caches,
+        with_dense_ids,
+    )
+
+    data = [(g, k, i) for i, (g, k) in enumerate(_ID_SPINE + rows)]
+    df = spark.createDataFrame(data, "g string, k int, i int")
+    caches = []
+    grouped = with_dense_ids(
+        df, ["k", "i"], "id", offset=offset, caches=caches, group_col="g"
+    ).collect()
+    layout = caches[0]
+    assert layout.select("_pid").distinct().count() >= 4
+    assert (
+        layout.filter(F.col("g") == "span").select("_pid").distinct().count()
+        >= 2
+    )
+    flat = with_dense_ids(
+        df.select("k", "i"), ["k", "i"], "id", offset=offset, caches=caches
+    ).collect()
+    release_caches(caches)
+
+    for g in {r[0] for r in data}:
+        ordered = sorted((k, i) for gg, k, i in data if gg == g)
+        got = sorted(((r.k, r.i), r.id) for r in grouped if r.g == g)
+        assert got == [
+            (key, offset + n) for n, key in enumerate(ordered, start=1)
+        ]
+    assert len(grouped) == len(data)
+    ordered = sorted((k, i) for _, k, i in data)
+    assert sorted(((r.k, r.i), r.id) for r in flat) == [
+        (key, offset + n) for n, key in enumerate(ordered, start=1)
+    ]
