@@ -150,19 +150,6 @@ def dedup_keep_best(
     return docs.join(losers, id_col, "left_anti")
 
 
-def word_shingles(c: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles of a text column (array<string>).
-
-    NOTE: prefer ``with_shingles`` (staged projection) in pipelines —
-    referencing this expression from inside another lambda re-evaluates
-    the embedded split() per array element (Catalyst does not hoist
-    loop invariants out of LambdaFunctions), which is quadratic per
-    document.
-    """
-    words = F.split(normalize_text(c), " ")
-    return _shingles_of(words, k)
-
-
 def _shingles_of(words: Column, k: int = 3) -> Column:
     """Shingle expression over an (ideally already-materialized) words
     column.  element_at per offset = O(1) access, no per-shingle array
@@ -202,13 +189,6 @@ def _seeded_hash(seed: int):
     PySpark higher-order-function convention), silently shadowing the
     seed."""
     return lambda s: F.xxhash64(F.lit(seed), s)
-
-
-def _seeded_md5(seed: int):
-    """md5-family member i: md5(i || '|' || shingle) — hex strings,
-    byte-identical in any engine with md5 (the oracle-portable family;
-    see minhash_signature)."""
-    return lambda s: F.md5(F.concat(F.lit(str(seed)), F.lit("|"), s))
 
 
 def minhash_signature(

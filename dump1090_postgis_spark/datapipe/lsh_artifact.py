@@ -59,14 +59,6 @@ def xxh64_int(i: int, seed: int) -> int:
     return _fmix(h)
 
 
-def xxh64_long(l: int, seed: int) -> int:
-    """xxHash64 of one 8-byte long — Spark's ``XXH64.hashLong``."""
-    h = (seed + _P5 + 8) & _M
-    h ^= (_rotl(((l & _M) * _P2) & _M, 31) * _P1) & _M
-    h = (_rotl(h, 27) * _P1 + _P4) & _M
-    return _fmix(h)
-
-
 def xxh64_bytes(b: bytes, seed: int) -> int:
     """xxHash64 of a byte string — Spark's ``XXH64.hashUnsafeBytes``
     (standard xxHash64 over the UTF-8 bytes)."""

@@ -23,11 +23,6 @@ def angle2compass(angle_deg: Column) -> Column:
     return F.pmod(F.lit(450.0) - angle_deg, F.lit(360.0))
 
 
-def compass2angle(compass_deg: Column) -> Column:
-    """Inverse of angle2compass (same involution)."""
-    return F.pmod(F.lit(450.0) - compass_deg, F.lit(360.0))
-
-
 def winddir2angle(winddir: Column) -> Column:
     """shared.py:10-16 literal piecewise form: 270 - dir, +360 only when
     negative (equals pmod on the documented [0,360] domain, but the

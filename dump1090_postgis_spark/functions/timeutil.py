@@ -63,13 +63,3 @@ def bin_interval(bin_: str) -> Column:
     """CONCAT('1 ', bin)::interval (create_public_schema.sql:189) —
     validated Python-side, then a constant interval expression."""
     return F.expr(f"INTERVAL 1 {validate_bin(bin_)}")
-
-
-def time_axis(start: Column, stop: Column, bin_: str) -> Column:
-    """generate_series(date_trunc(bin, start), date_trunc(bin, stop),
-    '1 bin') as an array column — explode to get the zero-fill axis
-    (JOIN-3)."""
-    b = validate_bin(bin_)
-    return F.sequence(
-        F.date_trunc(b, start), F.date_trunc(b, stop), bin_interval(b)
-    )

@@ -49,6 +49,7 @@ from ..functions.geo import (
     same_heading,
     sql_ident,
 )
+from ..session import job_scope
 
 HEADING_TOLERANCE_DEG = 20.0  # airports.py:51-67
 
@@ -85,6 +86,7 @@ def _poly_literal(vertices) -> Column:
     )
 
 
+@job_scope("operators.attribution.attribute_runway")
 def attribute_runway(
     events: DataFrame,
     runways: DataFrame,

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from ..session import job_scope
+
 
 def release_caches(caches: list[DataFrame]) -> None:
     """Unpersist every DataFrame collected in a cache registry (see
@@ -40,6 +42,7 @@ def release_caches(caches: list[DataFrame]) -> None:
     caches.clear()
 
 
+@job_scope("operators.ids.with_dense_ids")
 def with_dense_ids(
     df: DataFrame,
     order_cols: list[str],

@@ -204,13 +204,6 @@ def altitude_filter(
     return df.filter(alt.isNull() | in_band)
 
 
-def admission_predicate(col: str = "transmission_type") -> Column:
-    """FLT-2 (flights.py:92-93): a new flight is admitted iff the first
-    message is MSG2, or MSG3 passing the altitude filter (the altitude
-    filter itself is applied by the caller)."""
-    return F.col(col).isin(2, 3)
-
-
 def dispatch_fields(df: DataFrame) -> DataFrame:
     """FLT-3 (models.py:146-190): blank out fields a transmission type
     does not carry, so downstream per-session 'last non-null wins'

@@ -72,16 +72,3 @@ def flight_paths_geojson(paths: DataFrame, path_col: str = "path",
     return paths.withColumn(
         "geojson", linestring_geojson(F.col(path_col), decimals)
     )
-
-
-def join_flight_positions(flights: DataFrame, positions: DataFrame) -> DataFrame:
-    """JOIN-1: flights ⋈ positions ON f.id = p.flight_id.
-
-    Catalyst picks sort-merge or (with AQE) shuffled-hash; when the
-    flights side is filtered small it auto-broadcasts. Callers filter
-    flights FIRST so the pushdown prunes the positions scan via
-    dynamic partition pruning when positions is partitioned by date.
-    """
-    return flights.join(
-        positions, flights["id"] == positions["flight_id"], "inner"
-    )

@@ -32,6 +32,7 @@ from ..operators.trajectory import (
     flight_paths_geojson,
     flight_paths_wkt,
 )
+from ..session import job_scope
 
 __all__ = [
     "landings_on",
@@ -51,6 +52,7 @@ __all__ = [
     "airports_geojson",
     "runways_geojson",
     "range_rings_geojson",
+    "takeoff_paths_period",
 ]
 
 
@@ -213,3 +215,11 @@ def takeoff_paths_period(takeoffs: DataFrame, positions: DataFrame,
         .select("flight_id", "time", "runway", "wkt")
         .dropDuplicates()
     )
+
+
+# Jobs a public call runs while it builds its plan are named
+# ``plans.adsb.<name>`` (session.job_scope); the caller's action on the
+# returned frame keeps the caller's own name.
+for _name in __all__:
+    globals()[_name] = job_scope(f"plans.adsb.{_name}")(globals()[_name])
+del _name

@@ -29,6 +29,12 @@ by (time, _adm_ts, hexident, session_id), which ranks rows exactly as
 carries the caller's local properties (job group, job description,
 scheduler pool) through ``pyspark.util.inheritable_thread_target``, so
 ``cancelJobGroup`` still reaches every job of the build.
+
+Job names (``session.job_scope``): every job of the build is described
+``plans.etl.build_tables / <task>``, where the task is
+``number:flights|positions|events`` or
+``write:flights|positions|landings|takeoffs``, plus the scoped
+operator inside it when there is one.
 """
 
 from __future__ import annotations
@@ -53,22 +59,27 @@ from ..operators.events import (
 )
 from ..operators.ids import release_caches, with_dense_ids
 from ..operators.sessionize import flight_summaries, sessionize
+from ..session import job_scope
 
 
-def _run_all(spark: SparkSession, tasks: dict[str, Callable]) -> dict:
+def _run_all(spark: SparkSession, kind: str, tasks: dict[str, Callable]) -> dict:
     """Run every task on its own thread with the caller's Spark local
-    properties, wait for ALL of them, then return their results by
-    name — or raise the first failure in ``tasks`` order.  Waiting for
-    every task before raising keeps a failing task from leaving its
-    siblings' jobs running past the caller's cleanup."""
+    properties, its jobs named ``<kind>:<name>``, wait for ALL of them,
+    then return their results by name — or raise the first failure in
+    ``tasks`` order.  Waiting for every task before raising keeps a
+    failing task from leaving its siblings' jobs running past the
+    caller's cleanup."""
     with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
         futs = {
-            name: pool.submit(inheritable_thread_target(spark)(fn))
+            name: pool.submit(
+                inheritable_thread_target(spark)(job_scope(f"{kind}:{name}")(fn))
+            )
             for name, fn in tasks.items()
         }
     return {name: fut.result() for name, fut in futs.items()}
 
 
+@job_scope("plans.etl.build_tables")
 def build_tables(
     raw_lines: DataFrame,
     runways: DataFrame | None = None,
@@ -123,6 +134,7 @@ def build_tables(
         if output_path is not None:
             tables = _run_all(
                 spark,
+                "write",
                 {
                     name: partial(_write_table, name, df, f"{output_path}/{name}")
                     for name, df in tables.items()
@@ -259,6 +271,7 @@ def _numbered_tables(
 
     numbered = _run_all(
         sess.sparkSession,
+        "number",
         {
             "flights": number_flights,
             "positions": number_positions,
@@ -315,10 +328,3 @@ def _write_table(name: str, df: DataFrame, path: str) -> DataFrame:
     # to infer from (zero-takeoff captures)
     schema = T.StructType(df.schema.fields + [T.StructField("_dt", T.DateType())])
     return spark.read.schema(schema).parquet(path)
-
-
-def refresh_materialized(df: DataFrame, path: str) -> None:
-    """Materialized-view refresh (SURVEY §2.1 #5,
-    create_materialized_views.sql:51-76): overwrite-write the
-    precomputed result — scheduling is the caller's concern."""
-    df.write.mode("overwrite").parquet(path)

@@ -6,13 +6,20 @@ AQE on (runtime re-planning, skew-join handling, partition
 coalescing), Arrow on (fast pandas interchange for the few Pandas-UDF
 operators), UTC session timezone (all reference timestamps are UTC
 instants; local-time binning is explicit via convert_timezone).
+
+``job_scope`` names the Spark jobs the package runs, so the event log,
+the status store and the UI say which entry point launched each one.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def get_spark(
@@ -145,3 +152,27 @@ def configure_for_engine(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
+
+
+@contextmanager
+def job_scope(name: str):
+    """Name every Spark job started inside the block (or the decorated
+    call) ``<caller's description> / <name>``, or just ``name`` when the
+    caller set none; the caller's description is restored on exit.
+
+    Nested scopes therefore read as a path, and a ``setJobGroup``
+    description stays the prefix.  Pool threads wrapped with
+    ``pyspark.util.inheritable_thread_target`` inherit the path.  The
+    description, not ``callSite.short``, carries the name: PySpark sets
+    and clears the call site around every DataFrame action.  Costs one
+    get and two sets of a local property; no job."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        yield
+        return
+    outer = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setLocalProperty(_JOB_DESCRIPTION, f"{outer} / {name}" if outer else name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, outer)

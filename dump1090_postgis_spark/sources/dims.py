@@ -17,7 +17,6 @@ from ..functions.conversions import FT_TO_M  # one shared constant
 from ..schemas import (
     AIRLINE_SCHEMA,
     AIRPORT_SCHEMA,
-    COUNTRY_SCHEMA,
     RUNWAY_SCHEMA,
 )
 
@@ -31,12 +30,6 @@ def load_airlines_csv(spark: SparkSession, path: str) -> DataFrame:
     and airport loaders below already pass it."""
     return spark.read.csv(
         path, header=True, quote='"', escape='"', schema=AIRLINE_SCHEMA
-    )
-
-
-def load_countries_csv(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.csv(
-        path, header=True, quote='"', escape='"', schema=COUNTRY_SCHEMA
     )
 
 

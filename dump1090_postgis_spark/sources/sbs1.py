@@ -7,8 +7,9 @@ streaming source; reconnection is the restart policy of the streaming
 query (the source fails the batch, the query restarts from the
 checkpoint).
 
-SRC-2: the file source — batch `spark.read.text` or streaming
-`readStream.text` over a drop directory.
+SRC-2: the file source is Spark's own, with no wrapper here — batch
+`spark.read.text(path)` or streaming `spark.readStream.text(dir)` over
+a drop directory.
 
 Both yield a one-column (`value`) DataFrame of raw lines which the
 caller feeds to operators.parse.parse_sbs1_lines (the SRC-3 gate is
@@ -33,13 +34,3 @@ def socket_stream(
         .option("port", port)
         .load()
     )
-
-
-def file_batch(spark: SparkSession, path: str) -> DataFrame:
-    """SRC-2 (batch): lines from a capture file."""
-    return spark.read.text(path)
-
-
-def file_stream(spark: SparkSession, path: str) -> DataFrame:
-    """SRC-2 (streaming): tail a drop directory of capture files."""
-    return spark.readStream.text(path)

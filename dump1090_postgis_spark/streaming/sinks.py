@@ -1,16 +1,16 @@
-"""foreachBatch sink builders (SURVEY §2.1 SNK-1/SNK-2).
+"""foreachBatch sink builders (SURVEY §2.1 SNK-1).
 
 The reference commits batched SQLAlchemy sessions every second
 (flights.py:119-131) and dual-writes positions into a `positions_live`
-copy via an insert RULE.  In Spark the micro-batch IS the transaction
-boundary: `foreachBatch` receives (batch_df, epoch_id) once per
-trigger.
+copy via an insert RULE; here that copy is a view
+(operators.retention.positions_live), not a second write.  In Spark the
+micro-batch IS the transaction boundary: `foreachBatch` receives
+(batch_df, epoch_id) once per trigger.
 
-The writes are NOT idempotent per epoch: `parquet_event_sink` and
-`dual_write_sink`'s primary table append, so an epoch replayed after
-a crash (the query restarts from the last committed offsets and
-re-runs the batch) writes its rows a second time.  The `epoch` column
-of `parquet_event_sink` makes such duplicates detectable, not
+The writes are NOT idempotent per epoch: `parquet_event_sink` appends,
+so an epoch replayed after a crash (the query restarts from the last
+committed offsets and re-runs the batch) writes its rows a second
+time.  Its `epoch` column makes such duplicates detectable, not
 impossible; an exactly-once commit (e.g. one partition per epoch,
 overwritten on replay) is not built yet.
 
@@ -23,7 +23,7 @@ table from the cache.
 
 For a real warehouse swap the parquet appends for
 `df.write.jdbc(...)` — the structure (per-epoch batching, split by
-kind, dual targets) is identical.
+kind) is identical.
 """
 
 from __future__ import annotations
@@ -53,25 +53,5 @@ def parquet_event_sink(base_dir: str):
             )
         finally:
             tagged.unpersist()
-
-    return sink
-
-
-def dual_write_sink(primary_dir: str, live_dir: str, retention_hours: int = 24):
-    """SNK-2/SNK-3 physical variant: append to the primary table AND
-    rewrite a bounded 'live' copy holding only the trailing retention
-    window (the reference's RULE-maintained positions_live).  Prefer
-    the view form (operators.retention.positions_live) when the store
-    can evaluate predicates; this exists for sinks that can't."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df.write.mode("append").parquet(primary_dir)
-        primary = spark.read.parquet(primary_dir)
-        live = primary.filter(
-            F.col("event_time")
-            >= F.current_timestamp() - F.expr(f"INTERVAL {retention_hours} HOURS")
-        )
-        live.write.mode("overwrite").parquet(live_dir)
 
     return sink

@@ -2,6 +2,7 @@
 build_tables, then the reference query API over the produced tables."""
 
 import datetime
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -202,6 +203,70 @@ def test_ids_rank_by_time_then_flight_id(spark):
         assert sorted(r.id for r in rows) == list(range(1, n + 1)), name
 
 
+def _jobs(sc) -> dict[int, str | None]:
+    """Description of every job in the status store, by job id."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        sc._jsc.sc().statusStore().jobsList(None)
+    )
+    return {
+        j.jobId(): j.description().get() if j.description().isDefined() else None
+        for j in jobs
+    }
+
+
+def _descriptions_after(sc, last: int) -> list[str | None]:
+    return [d for i, d in _jobs(sc).items() if i > last]
+
+
+def test_output_path_jobs_are_named_per_scope(spark, tmp_path):
+    """Every job of an output-path build is named after the build, its
+    numbering task or write, and the scoped operator inside it.  The
+    job count of each scope is pinned at its measured value; the
+    session pin's parse and sessionize jobs (3) land on whichever
+    numbering task reaches the pin first."""
+    sc = spark.sparkContext
+    raw = spark.createDataFrame([(l,) for l in CAPTURE], "value string")
+    last = max(_jobs(sc), default=-1)
+    build_tables(
+        raw, nte_runways(spark), nte_airport(spark),
+        output_path=str(tmp_path / "etl_named"),
+    )
+    descs = _descriptions_after(sc, last)
+    assert descs and all("plans.etl.build_tables" in (d or "") for d in descs)
+    per_scope = Counter(d.split("plans.etl.build_tables / ", 1)[1] for d in descs)
+    dense = " / operators.ids.with_dense_ids"
+    numbering = {f"number:{t}{dense}" for t in ("flights", "positions", "events")}
+    writes = {"write:flights": 4, "write:positions": 7, "write:landings": 7,
+              "write:takeoffs": 6}
+    assert set(per_scope) == numbering | set(writes)
+    for scope, bound in writes.items():
+        assert per_scope[scope] <= bound, scope
+    assert all(per_scope[s] <= 6 + 3 for s in numbering)
+    assert sum(per_scope[s] for s in numbering) <= 3 * 6 + 3
+
+
+def test_adsb_build_jobs_carry_the_function_name(spark, tables, monkeypatch):
+    """A job a plans.adsb call runs while building its plan is named
+    after the call, and the caller's description comes back after it.
+    The calls build lazily today, so the test plants an eager count in
+    the FLT-5 helper under ``landings_on``."""
+    sc = spark.sparkContext
+    real = adsb._on_day
+
+    def eager(events, day, ts="time"):
+        events.count()
+        return real(events, day, ts)
+
+    monkeypatch.setattr(adsb, "_on_day", eager)
+    caller = sc.getLocalProperty("spark.job.description")
+    last = max(_jobs(sc), default=-1)
+    adsb.landings_on(tables["landings"], datetime.date(2024, 5, 1))
+    descs = _descriptions_after(sc, last)
+    assert descs and all(d.endswith("plans.adsb.landings_on") for d in descs)
+    assert sc.getLocalProperty("spark.job.description") == caller
+
+
 def test_output_path_jobs_stay_in_callers_job_group(spark, tmp_path):
     """The concurrent numbering passes and writes run on pool threads;
     every job they submit must still carry the caller's job group, so
@@ -222,6 +287,11 @@ def test_output_path_jobs_stay_in_callers_job_group(spark, tmp_path):
             sc.setLocalProperty(prop, None)
     assert tracker.getJobIdsForGroup("etl-build")
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+    jobs = _jobs(sc)
+    assert all(
+        jobs[i].startswith("build_tables under a job group / plans.etl.build_tables")
+        for i in tracker.getJobIdsForGroup("etl-build")
+    )
 
 
 def test_failed_write_releases_caches(spark, tmp_path, monkeypatch):

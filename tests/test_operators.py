@@ -20,6 +20,7 @@ from dump1090_postgis_spark.operators.peak_hour import (
     union_events,
 )
 from dump1090_postgis_spark.operators.sessionize import (
+    active_session_count,
     flight_summaries,
     sessionize,
 )
@@ -141,6 +142,20 @@ def test_flight_summary_last_non_null(spark):
     assert out.last_callsign == "CS1"       # null at ts20 doesn't overwrite
     assert out.last_altitude == 2000
     assert out.n_msg3 == 2 and out.n_msg1 == 1
+
+
+def test_active_session_count_window(spark):
+    """AGG-8 pool size at ts(600): sessions whose last message lies in
+    [ts(300), ts(600)] — the pool's 300 s timeout, both ends inclusive."""
+    df = _msgs(spark, [
+        ("A", ts(200), False), ("A", ts(350), False),  # last 350: active
+        ("B", ts(0), False),                           # timed out
+        ("C", ts(300), False),                         # on the boundary
+        ("D", ts(700), False),                         # after the probe
+        ("E", ts(0), False), ("E", ts(500), False),    # 2nd session active
+    ])
+    out = active_session_count(sessionize(df), ts(600)).collect()
+    assert [r.active_sessions for r in out] == [3]
 
 
 # --- histogram zero-fill ---------------------------------------------------
