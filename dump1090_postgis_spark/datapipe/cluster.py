@@ -35,11 +35,12 @@ Scale design:
 
 from __future__ import annotations
 
-import json
 import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .artifact_io import publish, verify
 
 
 def _persistent_ids(sc) -> set:
@@ -784,17 +785,9 @@ def update_cluster_map(
 # cell store in similarity.py) to the closure's OUTPUT: persist the
 # (doc_id, component, cluster_size, is_canonical) map keyed by a
 # corpus CONTENT witness — the same (id, text) inputs the closure
-# consumes — plus the closure parameters; reuse when both match,
-# rebuild otherwise.
+# consumes — plus the closure parameters, in the store's
+# artifact_io witness; reuse when both match, rebuild otherwise.
 # ---------------------------------------------------------------------------
-
-#: Underscore-prefixed witness sidecar inside the cluster-map store —
-#: same convention as similarity._IVF_STORE_CENTROIDS: data readers of
-#: the store path never see it (Hadoop listing skips `_` paths), yet it
-#: travels with the store.  Stamped LAST by :func:`write_cluster_map`,
-#: so it doubles as the completion marker: a torn build has no (or a
-#: stale) witness and the loader refuses it.
-_CLUSTER_MAP_WITNESS = "_cluster_witness"
 
 #: Bumped when the artifact layout/semantics change; part of the
 #: witness payload so old artifacts self-invalidate.
@@ -822,34 +815,25 @@ def corpus_fingerprint(
     }
 
 
-def _witness_payload(fingerprint: dict, params: dict, columns: list) -> str:
-    return json.dumps(
-        {
-            "version": _CLUSTER_MAP_VERSION,
-            "fingerprint": fingerprint,
-            "params": params,
-            "columns": list(columns),
-        },
-        sort_keys=True,
-    )
+def _witness(fingerprint: dict, params: dict) -> dict:
+    return {
+        "version": _CLUSTER_MAP_VERSION,
+        "fingerprint": fingerprint,
+        "params": params,
+    }
 
 
 def write_cluster_map(
     clusters: DataFrame, path: str, fingerprint: dict, params: dict
 ) -> None:
-    """Persist a cluster map with its witness.  The data lands first,
-    the witness LAST — a crash in between leaves a store the loader
-    refuses (no readable witness), which the compute-if-missing callers
-    then rebuild; there is no torn state that reads as fresh."""
-    spark = clusters.sparkSession
-    clusters.write.mode("overwrite").parquet(path)
-    payload = _witness_payload(fingerprint, params, clusters.columns)
-    (
-        spark.range(1)
-        .select(F.lit(payload).alias("witness"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path.rstrip('/')}/{_CLUSTER_MAP_WITNESS}")
+    """Persist a cluster map through :func:`.artifact_io.publish`, its
+    witness (version, corpus fingerprint, closure params, columns)
+    stamped after the data."""
+    publish(
+        clusters.sparkSession,
+        path,
+        lambda: clusters.write.mode("overwrite").parquet(path),
+        {**_witness(fingerprint, params), "columns": clusters.columns},
     )
 
 
@@ -862,38 +846,9 @@ def load_cluster_map(
     family) would silently resolve the wrong duplicates, the failure a
     cache must make loud.  Raises on any mismatch; cost is one
     driver-LOCAL one-row read — no Spark job (artifact_io)."""
-    from .artifact_io import sidecar_rows
-
-    loc = f"{path.rstrip('/')}/{_CLUSTER_MAP_WITNESS}"
-    rows = sidecar_rows(spark, loc)  # raises when absent
-    if len(rows) != 1:
-        raise ValueError(
-            f"cluster map at {path}: witness sidecar holds {len(rows)} "
-            "rows (expected 1) — interrupted build; rebuild"
-        )
-    stored = json.loads(rows[0]["witness"])
-    want_fp, want_params = stored.get("fingerprint"), stored.get("params")
-    if (
-        stored.get("version") != _CLUSTER_MAP_VERSION
-        or want_fp != fingerprint
-        or want_params != params
-    ):
-        raise ValueError(
-            f"cluster map at {path} is STALE: stored "
-            f"(version={stored.get('version')}, fingerprint={want_fp}, "
-            f"params={want_params}) vs current "
-            f"(version={_CLUSTER_MAP_VERSION}, fingerprint={fingerprint}, "
-            f"params={params}) — the corpus or closure parameters "
-            "changed since the map was built; rebuild"
-        )
-    df = spark.read.parquet(path)
-    cols = stored.get("columns") or []
-    if set(df.columns) != set(cols):
-        raise ValueError(
-            f"cluster map at {path} is missing columns "
-            f"{sorted(set(cols) - set(df.columns))}"
-        )
-    return df.select(*cols)  # recorded order → deterministic schema
+    stored = verify(spark, path, _witness(fingerprint, params))
+    # recorded order → deterministic schema
+    return spark.read.parquet(path).select(*stored["columns"])
 
 
 def cluster_map_store(

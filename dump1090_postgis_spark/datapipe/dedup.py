@@ -22,7 +22,6 @@ Scale design:
 from __future__ import annotations
 
 import math
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -27,6 +27,9 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
+
+from .artifact_io import publish, verify
 
 _M = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -147,14 +150,26 @@ def banded_rows(
     ]
 
 
+def banded_witness(sf_dir: str) -> dict:
+    """Witness of the banded artifact over ``<sf_dir>/documents.parquet``
+    (hash family, signature shape, row count from the parquet footers:
+    no Spark job), published by both the Spark writer and the twin."""
+    import pyarrow.dataset as pads
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    n_rows = pads.dataset(src, format="parquet").count_rows()
+    return {"hash": "xxhash64", "num_hashes": 16, "bands": 4, "documents": n_rows}
+
+
 def ensure_banded_artifact(
     sf_dir: str, path: str, max_rows: int = 100_000
 ) -> bool:
-    """Compute-if-missing guard: when the banded-signature artifact is
-    absent, derive it from ``<sf_dir>/documents.parquet`` in pure
-    Python and write it — making the DuckDB oracle self-sufficient
-    regardless of whether the Spark query has run yet.  Returns True
-    when it materialized something.
+    """Compute-if-missing guard: unless the banded-signature artifact
+    carries this corpus's :func:`banded_witness`, empty its directory,
+    derive it from ``<sf_dir>/documents.parquet`` in pure Python and
+    publish it — making the DuckDB oracle self-sufficient regardless
+    of whether the Spark query has run yet.  Returns True when it
+    materialized something.
 
     Sized for the ORACLE scale only (the driver pins sf0.01, 500
     docs ≈ a second of pure Python): the production path is still the
@@ -165,15 +180,17 @@ def ensure_banded_artifact(
     of single-threaded hashing at registry-build time; at those scales
     the artifact comes from the Spark query, which the driver runs
     first."""
-    if os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
+    witness = banded_witness(sf_dir)
+    try:
+        verify(None, path, witness)
         return False
+    except ValueError:
+        pass
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "documents.parquet")
-    n_rows = pq.ParquetFile(src).metadata.num_rows
+    n_rows = witness["documents"]
     if n_rows > max_rows:
         raise RuntimeError(
             f"banded-artifact pure-Python guard: {src} has {n_rows} rows "
@@ -196,6 +213,7 @@ def ensure_banded_artifact(
             "key": pa.array(keys, pa.string()),
         }
     )
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(out, os.path.join(path, "part-python-twin.parquet"))
+    shutil.rmtree(path, ignore_errors=True)  # no torn file beside the twin's
+    twin = os.path.join(path, "part-python-twin.parquet")
+    publish(None, path, lambda: pq.write_table(out, twin), witness)
     return True

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .artifact_io import publish, sidecar_rows, verify
 from .costmodel import work_exceeds
 from .dedup import _double_sql, embedding_cosine
 
@@ -1239,54 +1240,10 @@ def pq_encode_residual(
 #: consistency guard in :func:`_load_ivf_cell_store`.
 _IVF_STORE_CENTROIDS = "_ivf_centroids"
 
-#: Completion-marker dir (same underscore-hidden convention as the
-#: centroid sidecar): a one-row parquet ``(complete: boolean)`` stamped
-#: TRUE only after a build or append fully lands.  A multi-batch build
-#: that dies between write_ivf_cell_store and append_ivf_cell_store
-#: otherwise leaves a store that passes the sidecar freshness check yet
-#: holds only the first batch — bench runs (no oracle) would silently
-#: query a half corpus (round-12 advice).  append flips the marker to
-#: FALSE before touching data and back to TRUE after, so a torn append
-#: is equally loud.
-_IVF_STORE_COMPLETE = "_ivf_complete"
-
-
-def _stamp_store_marker(spark, path: str, complete: bool) -> None:
-    """Overwrite the store's completion marker.  spark.range keeps the
-    one-row frame a pure-JVM plan (no pickled-RDD leaf)."""
-    (
-        spark.range(1)
-        .select(F.lit(complete).alias("complete"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path.rstrip('/')}/{_IVF_STORE_COMPLETE}")
-    )
-
-
-def _check_store_marker(spark, path: str) -> None:
-    """Raise unless the store's completion marker is a single
-    ``complete=true`` row.  Driver-bounded one-row read, no corpus
-    job.  A missing marker also rejects pre-marker stores — the
-    compute-if-missing entries self-heal those with one rebuild."""
-    loc = f"{path.rstrip('/')}/{_IVF_STORE_COMPLETE}"
-    from .artifact_io import sidecar_rows
-
-    try:
-        rows = sidecar_rows(spark, loc)
-    except Exception as exc:
-        raise ValueError(
-            f"IVF cell store at {path} has no readable completion "
-            f"marker ({type(exc).__name__}) — the build or append was "
-            "interrupted, or the store predates the marker protocol; "
-            "rebuild with write_ivf_cell_store"
-        ) from exc
-    if len(rows) != 1 or not rows[0]["complete"]:
-        raise ValueError(
-            f"IVF cell store at {path} is marked INCOMPLETE — an "
-            "append was interrupted mid-flight; rebuild with "
-            "write_ivf_cell_store (the data directory may hold a "
-            "partial batch)"
-        )
+#: Witness payload of a complete cell store (artifact_io): the centroid
+#: sidecar lands with a multi-batch build's first batch, so only the
+#: witness says every batch landed.
+_IVF_STORE_WITNESS = {"artifact": "ivf_cell_store"}
 
 
 #: auto_nlist defaults — the measured constraints on cell sizing.
@@ -1399,6 +1356,8 @@ def write_ivf_cell_store(
     built against the SAME coarse quantizer — a store built on stale
     centroids would prune the wrong cells and silently drop true
     neighbors, the one failure mode a layout contract must make loud.
+    The store is written through :func:`.artifact_io.publish`, so its
+    witness lands last and every reader refuses a torn build.
 
     Degenerate (NULL / NULL-element / NaN-component) vectors assign to
     the min centroid id in both engines (see
@@ -1412,20 +1371,16 @@ def write_ivf_cell_store(
     NULL-element row from ranked-last to ranked-first — readers score
     from the stored flags instead.
     """
-    if mode not in ("overwrite", "error", "errorifexists"):
-        # mode='append' here would ALSO append duplicate centroid rows
-        # to the sidecar, which the bit-exact check in
-        # _load_ivf_cell_store then rejects — the store would silently
-        # self-break (round-11 advisor).  Growing an existing store is
-        # append_ivf_cell_store's job (it encodes against the store's
-        # OWN sidecar quantizer and never rewrites the sidecar);
-        # mode='ignore' is rejected too — skipping the data write while
-        # overwriting the sidecar could pair old cells with new
-        # centroids.
+    if mode != "overwrite":
+        # 'append' would duplicate the sidecar's centroid rows, which
+        # the bit-exact load check rejects (growing a store is
+        # append_ivf_cell_store's job); 'ignore' could pair old cells
+        # with new centroids; 'error' always fails once publish has
+        # stamped the pending witness into the path.
         raise ValueError(
-            f"write_ivf_cell_store mode must be 'overwrite' or "
-            f"'error'/'errorifexists', got {mode!r}; use "
-            "append_ivf_cell_store to add a batch to an existing store"
+            f"write_ivf_cell_store mode must be 'overwrite', got "
+            f"{mode!r}; use append_ivf_cell_store to add a batch to an "
+            "existing store"
         )
     cen_rows = _collect_centroids(centroids)
     nlist = max(1, len(cen_rows))
@@ -1465,30 +1420,27 @@ def write_ivf_cell_store(
     ).withColumnRenamed("_store_deg", "_deg").withColumnRenamed(
         "_store_nan", "_nan"
     )
-    (
-        coded.repartition(
-            n, F.col("list_id"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)),
+
+    def write() -> None:
+        (
+            coded.repartition(
+                n, F.col("list_id"),
+                F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)),
+            )
+            .write.mode("overwrite")
+            .partitionBy("list_id")
+            .parquet(path)
         )
-        .write.mode(mode)
-        .partitionBy("list_id")
-        .parquet(path)
-    )
-    (
-        # literal frame from the rows collected above (not the lazy
-        # centroids frame — one less corpus aggregation per build)
-        _centroid_dim(centroids, cen_rows, id_alias="centroid_id")
-        .coalesce(1)
-        # Always overwrite: the sidecar is a single-source-of-truth
-        # snapshot of THIS build's quantizer, never an accumulating
-        # table (under mode='error' the data write above already
-        # raised if the path existed, so overwriting here is fresh).
-        .write.mode("overwrite")
-        .parquet(f"{path.rstrip('/')}/{_IVF_STORE_CENTROIDS}")
-    )
-    # Stamped LAST: a crash anywhere above leaves no (or a stale=false)
-    # marker and _load_ivf_cell_store refuses the store.
-    _stamp_store_marker(corpus.sparkSession, path, True)
+        (
+            # literal frame from the rows collected above (not the lazy
+            # centroids frame — one less corpus aggregation per build)
+            _centroid_dim(centroids, cen_rows, id_alias="centroid_id")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{path.rstrip('/')}/{_IVF_STORE_CENTROIDS}")
+        )
+
+    publish(corpus.sparkSession, path, write, _IVF_STORE_WITNESS)
 
 
 def append_ivf_cell_store(
@@ -1514,6 +1466,8 @@ def append_ivf_cell_store(
     exactly the stale-store hazard the sidecar check exists to catch.
     """
     spark = new_vectors.sparkSession
+    # appending onto a torn store would perpetuate the tear
+    verify(spark, path, _IVF_STORE_WITNESS)
     cen = spark.read.parquet(
         f"{path.rstrip('/')}/{_IVF_STORE_CENTROIDS}"
     ).select("centroid_id", "centroid")
@@ -1547,21 +1501,20 @@ def append_ivf_cell_store(
             f"do not match the store's {sorted(store_cols)} at {path} — "
             "pass the same vec/id_col the store was built with"
         )
-    # Appending onto a torn store would perpetuate the tear — require a
-    # complete store, then mark in-progress across the data append so a
-    # mid-append crash is loud too.
-    _check_store_marker(spark, path)
-    _stamp_store_marker(spark, path, False)
-    (
-        coded.repartition(
-            n, F.col("list_id"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)),
-        )
-        .write.mode("append")
-        .partitionBy("list_id")
-        .parquet(path)
+    publish(
+        spark,
+        path,
+        lambda: (
+            coded.repartition(
+                n, F.col("list_id"),
+                F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)),
+            )
+            .write.mode("append")
+            .partitionBy("list_id")
+            .parquet(path)
+        ),
+        _IVF_STORE_WITNESS,
     )
-    _stamp_store_marker(spark, path, True)
 
 
 #: Probed-cell cap for the static IN pushed into a cell-store scan: a
@@ -1639,14 +1592,8 @@ def _load_ivf_cell_store(
     cells silently drops true neighbors, which must never be quiet.
 
     Cost: one driver-LOCAL read of the nlist-row sidecar — no Spark
-    job at all (artifact_io).  The completion marker is checked FIRST: a
-    multi-batch build that died between write and append passes the
-    sidecar check (the sidecar lands with batch one) yet holds a
-    partial corpus — the marker is the witness that every batch
-    landed (round-12 advice)."""
-    from .artifact_io import sidecar_rows
-
-    _check_store_marker(spark, path)
+    job at all (artifact_io), after the store's witness."""
+    verify(spark, path, _IVF_STORE_WITNESS)
     stored = sorted(
         sidecar_rows(
             spark, f"{path.rstrip('/')}/{_IVF_STORE_CENTROIDS}"

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.conversions import FT_TO_M, feet2m
+from ..functions.conversions import feet2m
 from ..schemas import N_SBS1_FIELDS, SBS1_FIELDS
 GND_ALTITUDE_M = 0.0  # models.py:32-34: MSG2 carries no altitude → ground level
 

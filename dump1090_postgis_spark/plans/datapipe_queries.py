@@ -18,6 +18,8 @@ from pyspark.util import inheritable_thread_target
 
 from ..schemas import load_table, table_rows
 from ..datapipe import dedup as dd
+from ..datapipe.artifact_io import publish
+from ..datapipe.lsh_artifact import banded_witness
 from ..datapipe.costmodel import rows_at_least
 from ..datapipe import similarity as sim
 from ..datapipe import text as tx
@@ -239,10 +241,9 @@ def q_dedup_minhash_lsh_fast(spark, sf):
     # are independent consumers of one materialized frame, so the
     # write no longer sits as a barrier between signature computation
     # and candidate generation).  The thread is JOINED before this
-    # function returns, so the artifact-completeness contract is
-    # unchanged: the oracle (and any artifact reader) only ever runs
-    # after a completed write, and both the artifact and the returned
-    # pairs come from the SAME single materialization.
+    # function returns; readers trust the artifact only through its
+    # witness (artifact_io), and the artifact and the returned pairs
+    # come from the SAME single materialization.
     banded = dd.minhash_banded(docs, hash_family="xxhash64").localCheckpoint(
         eager=True
     )
@@ -250,7 +251,11 @@ def q_dedup_minhash_lsh_fast(spark, sf):
 
     def _write_artifact():
         try:
-            banded.write.mode("overwrite").parquet(path)
+            publish(
+                spark, path,
+                lambda: banded.write.mode("overwrite").parquet(path),
+                banded_witness(sf),
+            )
         except BaseException as exc:  # re-raised on the caller thread
             _write_err.append(exc)
 
@@ -980,13 +985,13 @@ def q_ann_topk_ivf_pq_store(spark, sf):
     (``PartitionFilters`` at the scan, zero query-time assignment
     FLOPs) — the build-once/query-many production path
     (similarity.py round 11).  The store is built COMPUTE-IF-MISSING:
-    an existing artifact is reused exactly when its centroid sidecar
-    matches this call's (deterministic) centroids — the same guard
-    that makes a stale store raise makes reuse SAFE, and the entry
-    then measures the query-many READ path while a cold
-    ``.artifacts/`` still exercises the writer end-to-end (the
-    lsh_banded artifact's ensure-pattern, with the sidecar as the
-    freshness witness instead of path existence).  The oracle is the
+    an existing artifact is reused exactly when its artifact_io
+    witness says it is complete and its centroid sidecar matches this
+    call's (deterministic) centroids — the same guard that makes a
+    stale store raise makes reuse SAFE, and the entry then measures
+    the query-many READ path while a cold ``.artifacts/`` still
+    exercises the writer end-to-end (the lsh_banded artifact's
+    ensure-pattern).  The oracle is the
     SAME CTE replay as ann_topk_ivf_pq: residual codes are
     deterministic, so precomputing them to parquet changes no value
     (store ≡ storeless is additionally parity-pinned in pytest,
@@ -1046,8 +1051,8 @@ def q_ann_topk_ivf_pq_store_append(spark, sf):
     hashes it at value level), because batch membership cannot change
     any row's cell or codes (assignment and residual quantization are
     pure per-row functions of the vector and the shared centroids).
-    Compute-if-missing with the sidecar as the freshness witness, same
-    as the store twin."""
+    Compute-if-missing behind the same witness and centroid checks as
+    the store twin."""
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     n = table_rows(sf, "embeddings")  # footer count: jobless auto gates

@@ -119,16 +119,21 @@ def test_banded_artifact_python_pass_is_row_bounded(tmp_path):
     artifact at those scales) instead of hanging registry builds."""
     import pytest as _pytest
 
+    from dump1090_postgis_spark.datapipe.artifact_io import verify
     from dump1090_postgis_spark.datapipe.lsh_artifact import (
+        banded_witness,
         ensure_banded_artifact,
     )
 
+    sf = "/root/testdata/sf0.01"
     out = str(tmp_path / "banded")
     with _pytest.raises(RuntimeError, match="pure-Python guard"):
-        ensure_banded_artifact("/root/testdata/sf0.01", out, max_rows=10)
-    # within budget: materializes and is idempotent
-    assert ensure_banded_artifact("/root/testdata/sf0.01", out) is True
-    assert ensure_banded_artifact("/root/testdata/sf0.01", out) is False
+        ensure_banded_artifact(sf, out, max_rows=10)
+    # within budget: materializes, publishes its witness, and is
+    # idempotent
+    assert ensure_banded_artifact(sf, out) is True
+    assert verify(None, out, banded_witness(sf))["documents"] == 500
+    assert ensure_banded_artifact(sf, out) is False
 
 
 def test_oracle_builder_degradation_contract(monkeypatch):

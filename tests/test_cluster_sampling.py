@@ -185,9 +185,9 @@ def test_cluster_map_store_cold_warm_and_invalidation(spark, tmp_path):
     # torn build: witness sidecar gone → loudly rebuilt, not reused
     import shutil
 
-    from dump1090_postgis_spark.datapipe.cluster import _CLUSTER_MAP_WITNESS
+    from dump1090_postgis_spark.datapipe.artifact_io import _WITNESS
 
-    shutil.rmtree(f"{path}/{_CLUSTER_MAP_WITNESS}")
+    shutil.rmtree(f"{path}/{_WITNESS}")
     out = rows_of(
         cluster_map_store(changed, path, builder,
                           {**params, "threshold": 0.8})

@@ -988,13 +988,15 @@ def test_ivf_cell_store_torn_build_is_loud(spark, tmp_path):
     append_ivf_cell_store passes the sidecar freshness check (the
     sidecar lands with batch one) yet holds only the first batch —
     bench runs (no oracle) would silently query a half corpus.  The
-    completion marker makes every tear loud (round-12 advice): a
-    mid-append crash leaves complete=false, a missing/pre-protocol
-    marker is rejected, and appending onto a torn store refuses."""
+    store's artifact_io witness makes every tear loud (round-12
+    advice): a mid-append crash leaves it pending, a missing witness
+    is rejected, and appending onto a torn store refuses."""
     import random
     import shutil
 
     import pytest
+
+    from dump1090_postgis_spark.datapipe import artifact_io
 
     rnd = random.Random(85)
     rows = [(i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(40)]
@@ -1009,19 +1011,23 @@ def test_ivf_cell_store_torn_build_is_loud(spark, tmp_path):
     path = str(tmp_path / "torn_store")
     sim.write_ivf_cell_store(batch_a, cent, path, num_partitions=2)
 
-    # Simulate the mid-append crash: in-progress marker stamped, data
+    # Simulate the mid-append crash: pending witness stamped, data
     # append never finished.
-    sim._stamp_store_marker(spark, path, False)
-    with pytest.raises(ValueError, match="INCOMPLETE"):
+    def crash():
+        raise RuntimeError("append died")
+
+    with pytest.raises(RuntimeError, match="append died"):
+        artifact_io.publish(spark, path, crash, sim._IVF_STORE_WITNESS)
+    with pytest.raises(ValueError, match="pending"):
         sim._load_ivf_cell_store(spark, path, cen_rows, "embedding", "vec_id")
     # Appending onto the torn store must refuse too (it would
     # perpetuate the tear).
-    with pytest.raises(ValueError, match="INCOMPLETE"):
+    with pytest.raises(ValueError, match="pending"):
         sim.append_ivf_cell_store(batch_b, path, num_partitions=2)
 
-    # Pre-protocol / crash-before-marker store: marker dir absent.
-    shutil.rmtree(f"{path}/{sim._IVF_STORE_COMPLETE}")
-    with pytest.raises(ValueError, match="completion"):
+    # Pre-protocol / crash-before-witness store: witness dir absent.
+    shutil.rmtree(f"{path}/{artifact_io._WITNESS}")
+    with pytest.raises(ValueError, match="no witness"):
         sim._load_ivf_cell_store(spark, path, cen_rows, "embedding", "vec_id")
 
     # The remedy the error message names — a full rebuild — heals it,

@@ -1,4 +1,4 @@
-"""foreachBatch sinks: per-epoch parquet append split by kind (SNK-1)
+"""foreachBatch sinks: per-epoch parquet overwrite split by kind (SNK-1)
 and the dual-write live copy (SNK-2/3), driven by the real streaming
 pipeline."""
 
@@ -57,6 +57,33 @@ def test_parquet_event_sink_end_to_end(spark, tmp_path, engine):
     assert len(rows) == 1
     assert rows[0].kind == "landing" and rows[0].hexident == "5AC001"
     assert rows[0].epoch >= 0  # epoch tag present for replay auditing
+
+
+def test_parquet_event_sink_replayed_epoch_stores_rows_once(spark, tmp_path):
+    """A replayed epoch (the query re-runs a batch after a crash)
+    replaces the rows its first run wrote: each row is stored once,
+    readable through Spark and through pyarrow.dataset with one
+    ``epoch`` column."""
+    import pyarrow.dataset as pads
+
+    sink = parquet_event_sink(str(tmp_path))
+    schema = "hexident string, kind string"
+    first = spark.createDataFrame(
+        [("A1", "landing"), ("B2", "takeoff"), ("A1", "flight_summary")],
+        schema,
+    )
+    sink(first, 1)
+    sink(first, 1)  # replay
+    sink(spark.createDataFrame([("C3", "landing")], schema), 2)
+    events = spark.read.parquet(str(tmp_path / "events"))
+    assert sorted((r.hexident, r.kind, r.epoch) for r in events.collect()) == [
+        ("A1", "landing", 1), ("B2", "takeoff", 1), ("C3", "landing", 2)
+    ]
+    summaries = spark.read.parquet(str(tmp_path / "flight_summaries"))
+    assert [(r.hexident, r.epoch) for r in summaries.collect()] == [("A1", 1)]
+    table = pads.dataset(str(tmp_path / "events"), format="parquet").to_table()
+    assert table.schema.names.count("epoch") == 1
+    assert sorted(table.column("epoch").to_pylist()) == [1, 1, 2]
 
 
 def test_normalize_vectors(spark):
