@@ -13,7 +13,7 @@ Two paths:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from .artifact_io import publish, sidecar_rows, verify
@@ -1468,10 +1468,19 @@ def append_ivf_cell_store(
     spark = new_vectors.sparkSession
     # appending onto a torn store would perpetuate the tear
     verify(spark, path, _IVF_STORE_WITNESS)
-    cen = spark.read.parquet(
-        f"{path.rstrip('/')}/{_IVF_STORE_CENTROIDS}"
-    ).select("centroid_id", "centroid")
-    cen_rows = _collect_centroids(cen)
+    # the nlist-row sidecar read on the driver (no Spark job on a local
+    # path), compiled to a jobless literal frame; a store holds ≥ 1
+    # centroid, so _centroid_dim only takes the session of new_vectors
+    cen_rows = sorted(
+        (
+            Row(**r)
+            for r in sidecar_rows(
+                spark, f"{path.rstrip('/')}/{_IVF_STORE_CENTROIDS}"
+            )
+        ),
+        key=lambda r: r.centroid_id,
+    )
+    cen = _centroid_dim(new_vectors, cen_rows, id_alias="centroid_id")
     nlist = max(1, len(cen_rows))
     n = (
         num_partitions

@@ -55,10 +55,11 @@ def point_in_polygon(lon: Column, lat: Column, poly: Column) -> Column:
     return F.pmod(crossings, F.lit(2)) == 1
 
 
-#: Edge-unroll budget for :func:`point_in_polygon_unrolled` — covers
-#: every ring the reference produces (runway quads and airport bboxes,
-#: ≤8 vertices, airports.py:129-153); rings past it per-row-fall back
-#: to the higher-order form, so the bound affects speed, never values.
+#: Edge-unroll budget for :func:`pip_unrolled_sql` — covers every ring
+#: the reference produces (runway quads and airport bboxes, ≤8
+#: vertices, airports.py:129-153); the grid attribution tier sends
+#: rings past it per row to the higher-order :func:`point_in_polygon`,
+#: so the bound affects speed, never values.
 PIP_UNROLL_EDGES = 8
 
 
@@ -72,16 +73,43 @@ def sql_ident(name: str) -> str:
 def pip_unrolled_sql(
     lon: str, lat: str, poly: str, max_edges: int = PIP_UNROLL_EDGES,
 ) -> str:
-    """The UNROLLED-ONLY ray cast fragment (no size gate, no
-    higher-order fallback): correct exactly when the ring has at most
-    ``max_edges`` vertices — callers must guarantee or gate that
-    themselves (:func:`point_in_polygon_sql` adds the per-row gate;
-    the grid attribution tier hoists it into its cell-level gate so
-    the fragment is not duplicated per candidate).  A NULL polygon
-    yields FALSE here (each edge term nulls out to 0) where the
-    higher-order form yields NULL — identical endpoints for predicate
-    consumers (a filtered element is dropped either way); don't use
-    this fragment where the NULL-vs-FALSE distinction is observable."""
+    """:func:`point_in_polygon` as ONE SQL text fragment with the edge
+    loop UNROLLED over literal indices — the round-13 hot-path form
+    for per-event containment at scale.  ``lon``/``lat``/``poly`` are
+    SQL sub-expressions (quote plain names with :func:`sql_ident`).
+
+    No size gate and no higher-order fallback: correct exactly when
+    the ring has at most ``max_edges`` vertices — callers must
+    guarantee or gate that themselves (the grid attribution tier
+    hoists the gate into its cell-level gate so the fragment is not
+    duplicated per candidate).  A NULL polygon yields FALSE here (each
+    edge term nulls out to 0) where the higher-order form yields NULL
+    — identical endpoints for predicate consumers (a filtered element
+    is dropped either way); don't use this fragment where the
+    NULL-vs-FALSE distinction is observable.
+
+    Two costs motivated the text form over Column-API equivalents:
+
+    - **Per-row (execution).** The higher-order original (``aggregate``
+      over a ``sequence``, inside a ``close_ring`` that rebuilds the
+      closed ring per element access) is a CodegenFallback tree: Spark
+      interprets it row by row with per-evaluation allocations.
+      Measured on the sf0.1 grid-attribution path, that interpretation
+      was ~70% of the whole query (noop 1.45 → 0.53 s unrolled).  Here
+      each edge is a fixed ``get()`` pair (0-based, NULL past the end
+      — ANSI-safe, unlike ``element_at``), so the predicate
+      whole-stage-codegens with zero per-row allocation.
+    - **Per-build (driver).** The same unroll built with Column
+      operators is ~1,200 py4j round-trips — measured +1.6 s PLAN
+      BUILD per call.  As text it is ONE ``F.expr`` parse in the JVM.
+
+    Value-identical to :func:`point_in_polygon` within the budget BY
+    CONSTRUCTION: the same straddle/x_at arithmetic per edge, 0/1
+    crossings in a commutative integer sum.  ``close_ring`` is
+    replaced by one unconditional wrap edge (last → first vertex):
+    degenerate (+0) for an already closed ring, the true closing edge
+    for an open one.  Parity pinned across ring classes in
+    tests/test_geo.py::test_point_in_polygon_sql_parity."""
 
     def edge(a: str, b: str) -> str:
         return (
@@ -98,65 +126,6 @@ def pip_unrolled_sql(
     ]
     terms.append(edge(f"(get({poly}, size({poly}) - 1))", f"(get({poly}, 0))"))
     return f"(pmod({' + '.join(terms)}, 2) = 1)"
-
-
-def point_in_polygon_sql(
-    lon: str, lat: str, poly: str, max_edges: int = PIP_UNROLL_EDGES,
-) -> str:
-    """:func:`point_in_polygon` as ONE SQL text fragment with the edge
-    loop UNROLLED over literal indices — the round-13 hot-path form
-    for per-event containment at scale.  ``lon``/``lat``/``poly`` are
-    SQL sub-expressions (quote plain names with :func:`sql_ident`).
-
-    Two costs motivated the text form over Column-API equivalents:
-
-    - **Per-row (execution).** The higher-order original (``aggregate``
-      over a ``sequence``, inside a ``close_ring`` that rebuilds the
-      closed ring per element access) is a CodegenFallback tree: Spark
-      interprets it row by row with per-evaluation allocations.
-      Measured on the sf0.1 grid-attribution path, that interpretation
-      was ~70% of the whole query (noop 1.45 → 0.53 s unrolled).  Here
-      each edge is a fixed ``get()`` pair (0-based, NULL past the end
-      — ANSI-safe, unlike ``element_at``), so the predicate
-      whole-stage-codegens with zero per-row allocation.
-    - **Per-build (driver).** The same unroll built with Column
-      operators is ~1,200 py4j round-trips — measured +1.6 s PLAN
-      BUILD per call, erasing the execution win for any driver that
-      rebuilds plans per run.  As text it is ONE ``F.expr`` parse in
-      the JVM (warm parse ≈ ms).
-
-    Value-identical to :func:`point_in_polygon` BY CONSTRUCTION: the
-    same straddle/x_at arithmetic per edge, 0/1 crossings in a
-    commutative integer sum.  ``close_ring`` is replaced by one
-    unconditional wrap edge (last → first vertex): degenerate (+0) for
-    an already closed ring, the true closing edge for an open one.
-    Rings longer than ``max_edges`` (and NULL polygons, whose size()
-    is NULL) take a per-row CASE branch into a SQL transliteration of
-    the original higher-order form — evaluated only for those rows
-    (CASE short-circuits in codegen and interpreted mode alike).
-    Parity pinned edge-for-edge across ring classes in
-    tests/test_geo.py::test_point_in_polygon_sql_parity."""
-
-    unrolled = pip_unrolled_sql(lon, lat, poly, max_edges)
-    # SQL transliteration of close_ring + the aggregate ray cast —
-    # including its quirk of re-deriving the closed ring per element
-    # access (cost-irrelevant: this branch only runs for rings past
-    # the unroll budget).
-    ring = (
-        f"(CASE WHEN (element_at({poly}, 1).lon = element_at({poly}, -1).lon) "
-        f"AND (element_at({poly}, 1).lat = element_at({poly}, -1).lat) "
-        f"THEN {poly} ELSE concat({poly}, array(element_at({poly}, 1))) END)"
-    )
-    hof = (
-        f"(pmod(aggregate(sequence(1, size({ring}) - 1), 0, (acc, i) -> acc + "
-        f"(CASE WHEN ((element_at({ring}, i).lat > {lat}) != "
-        f"(element_at({ring}, i + 1).lat > {lat})) AND "
-        f"({lon} < (((element_at({ring}, i + 1).lon - element_at({ring}, i).lon) * "
-        f"({lat} - element_at({ring}, i).lat)) / "
-        f"(element_at({ring}, i + 1).lat - element_at({ring}, i).lat) + "
-        f"element_at({ring}, i).lon)) THEN 1 ELSE 0 END)), 2) = 1)"
-    )
-    return f"(CASE WHEN size({poly}) <= {max_edges} THEN {unrolled} ELSE {hof} END)"
 
 
 def same_heading(

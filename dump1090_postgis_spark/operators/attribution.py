@@ -7,9 +7,16 @@ with the flight's interpolated track:
    |direction − heading| ≤ 20° → return that runway (first match);
 2. fallback, again in order: point inside the airport bbox AND heading
    matches the runway → that runway;
-3. else: no attribution (callers keep 'UNK' per models.py:283-286).
+3. else: 'UNK' (models.py:283-286).
 
-Two physical strategies behind one API, picked by a branch budget:
+One builder, :func:`runway_attributor`, serves the batch operator
+(:func:`attribute_runway`) and the streaming sink
+(``streaming.pipeline.attributing_sink``) alike.  It decides ONCE per
+dim: the strategy from the dim's size, then the dim-side work of that
+strategy (the compiled Column, or the pinned grid dims).  The function
+it returns only maps events to attributed events, so a stream reuses
+the decision and the dims on every micro-batch.  Two physical
+strategies, picked by a branch budget:
 
 - **Compiled coalesce (fast path, airport-scale dims).** The runway
   table is a tiny broadcast-class dimension (2 rows at NTE), so it is
@@ -35,9 +42,16 @@ Two physical strategies behind one API, picked by a branch budget:
   per-event cost is O(runways near that cell), not O(all runways).
   Correct by construction: a polygon containing the event lies inside
   its own bbox, so its runway is registered in the event's cell.
+  The per-cell dims (a window, an explode and a collect_list over the
+  runway table) are built once and pinned with an eager
+  ``localCheckpoint``; every plan over events then scans the pinned
+  rows instead of rebuilding them (round 13 measured the per-batch
+  rebuild as part of a stream keeping up at 0.161).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -87,6 +101,52 @@ def _poly_literal(vertices) -> Column:
 
 
 @job_scope("operators.attribution.attribute_runway")
+def runway_attributor(
+    runways: DataFrame,
+    airport_bbox: DataFrame | None = None,
+    lon: str = "longitude",
+    lat: str = "latitude",
+    heading: str = "interp_track",
+) -> Callable[[DataFrame], DataFrame]:
+    """JOIN-5: decide how to attribute against this dim, once, and
+    return the map from events to events with a `runway` (name) column.
+
+    `runways` columns: name, direction, polygon (array<struct<lon,lat>>),
+    optionally `id` (iteration-order key for the grid path; without it
+    the grid path orders by (name, direction) — the compiled path uses
+    the frame's own row order, matching the reference's list order).
+    `airport_bbox` columns: icao, bbox — enables the fallback tier.
+    Unmatched events get runway='UNK' (models.py:283-286).
+
+    The strategy is picked by the dim's size (:func:`_resolve_strategy`):
+    the compiled point-in-polygon coalesce while runways × (1 + bboxes)
+    fits :data:`BRANCH_BUDGET`, else the grid-cell broadcast join over
+    per-cell dims pinned here with an eager ``localCheckpoint`` (one job
+    per dim, named after this scope)."""
+    if _resolve_strategy(runways, airport_bbox) == "compile":
+        best = _compiled_coalesce(runways, airport_bbox, lon, lat, heading)
+
+        def match(events: DataFrame) -> DataFrame:
+            return events.withColumn("runway", best)
+
+    else:
+        cell_rw = _grid_runway_cells(runways).localCheckpoint(eager=True)
+        cell_bb = dirs = None
+        if airport_bbox is not None:
+            cell_bb = _grid_bbox_cells(airport_bbox).localCheckpoint(eager=True)
+            dirs = _runway_dirs(runways).localCheckpoint(eager=True)
+
+        def match(events: DataFrame) -> DataFrame:
+            return _grid_cell_join(events, cell_rw, cell_bb, dirs, lon, lat, heading)
+
+    def attribute(events: DataFrame) -> DataFrame:
+        return match(events).withColumn(
+            "runway", F.coalesce(F.col("runway"), F.lit("UNK"))
+        )
+
+    return attribute
+
+
 def attribute_runway(
     events: DataFrame,
     runways: DataFrame,
@@ -94,45 +154,18 @@ def attribute_runway(
     lon: str = "longitude",
     lat: str = "latitude",
     heading: str = "interp_track",
-    tolerance_deg: float = HEADING_TOLERANCE_DEG,
-    keep_unmatched: bool = True,
 ) -> DataFrame:
-    """JOIN-5: attach `runway` (name) to each event.
-
-    `runways` columns: name, direction, polygon (array<struct<lon,lat>>),
-    optionally `id` (iteration-order key for the join path; without it
-    the join path orders by (name, direction) — the compiled path uses
-    the frame's own row order, matching the reference's list order).
-    `airport_bbox` columns: icao, bbox — enables the fallback tier.
-    Unmatched events get runway='UNK' when keep_unmatched (the
-    reference's models.py:283-286 default), else are dropped.
-
-    The physical strategy is picked by the dim's size
-    (:func:`resolve_strategy`): the compiled point-in-polygon coalesce
-    while runways × (1 + bboxes) fits :data:`BRANCH_BUDGET`, else the
-    grid-cell broadcast join.
-    """
-    if resolve_strategy(runways, airport_bbox) == "compile":
-        best = _compiled_coalesce(
-            runways, airport_bbox, lon, lat, heading, tolerance_deg
-        )
-        out = events.withColumn("runway", best)
-    else:
-        out = _grid_cell_join(
-            events, runways, airport_bbox, lon, lat, heading,
-            tolerance_deg,
-        )
-    return finish_unmatched(out, keep_unmatched)
+    """JOIN-5: `events` with the `runway` each one is attributed to —
+    :func:`runway_attributor` applied once."""
+    return runway_attributor(runways, airport_bbox, lon, lat, heading)(events)
 
 
-def resolve_strategy(
+def _resolve_strategy(
     runways: DataFrame, airport_bbox: DataFrame | None
 ) -> str:
-    """The compile-vs-grid gate, factored to ONE place so the batch
-    operator and the streaming sink cannot drift: compile the
-    point-in-polygon coalesce when the branch count (runways ×
-    (1 + bboxes)) fits the expression budget, else the grid-cell
-    broadcast join.
+    """The compile-vs-grid gate: compile the point-in-polygon coalesce
+    when the branch count (runways × (1 + bboxes)) fits the expression
+    budget, else the grid-cell broadcast join.
 
     Sizing is jobless when Catalyst already knows the count exactly
     (literal/in-memory dims are LocalRelations — the common case for
@@ -140,7 +173,7 @@ def resolve_strategy(
     scheduling overhead: the round-7→11 join5 bench constant, ~0.3 s
     of plan-build latency per call, bisected to exactly this count in
     round 12); otherwise one eager count per dim — bounded by the dim,
-    run once per plan build (or once per stream wire-up)."""
+    run once per :func:`runway_attributor` call."""
     from ..datapipe.costmodel import plan_rows
 
     n_rw = plan_rows(runways)
@@ -154,32 +187,24 @@ def resolve_strategy(
     return "compile" if n_rw * (1 + n_bb) <= BRANCH_BUDGET else "grid"
 
 
-def finish_unmatched(out: DataFrame, keep_unmatched: bool = True) -> DataFrame:
-    """Shared unmatched-event policy (reference models.py:283-286):
-    UNK-coalesce the runway column when keeping unmatched events, else
-    drop them — one implementation for the batch and streaming paths."""
-    if keep_unmatched:
-        return out.withColumn("runway", F.coalesce(F.col("runway"), F.lit("UNK")))
-    return out.filter(F.col("runway").isNotNull())
-
-
 def _compiled_coalesce(
     runways: DataFrame,
     airport_bbox: DataFrame | None,
     lon: str,
     lat: str,
     heading: str,
-    tolerance_deg: float,
 ) -> Column:
     """Plan-time compile of a broadcast-class runway dim into one
     first-match coalesce expression (see module docstring)."""
     rows = runways.select("name", "direction", "polygon").collect()
     plon, plat, phead = F.col(lon), F.col(lat), F.col(heading)
 
+    def heading_ok(r) -> Column:
+        return same_heading(F.lit(float(r.direction)), phead, HEADING_TOLERANCE_DEG)
+
     direct = [
         F.when(
-            point_in_polygon(plon, plat, _poly_literal(r.polygon))
-            & same_heading(F.lit(float(r.direction)), phead, tolerance_deg),
+            point_in_polygon(plon, plat, _poly_literal(r.polygon)) & heading_ok(r),
             F.lit(r.name),
         )
         for r in rows
@@ -191,12 +216,7 @@ def _compiled_coalesce(
         for b in bboxes:
             in_bbox = point_in_polygon(plon, plat, _poly_literal(b.bbox))
             tiers.extend(
-                F.when(
-                    in_bbox
-                    & same_heading(F.lit(float(r.direction)), phead, tolerance_deg),
-                    F.lit(r.name),
-                )
-                for r in rows
+                F.when(in_bbox & heading_ok(r), F.lit(r.name)) for r in rows
             )
 
     return F.coalesce(*tiers, F.lit(None).cast("string"))
@@ -213,8 +233,10 @@ def _ring_cells(poly: Column, grid: Column, axis: str) -> tuple[Column, Column]:
 
 def _per_cell(df: DataFrame, poly_col: str, grid: Column, agg: Column) -> DataFrame:
     """Explode a polygon dim over every grid cell its bbox overlaps and
-    aggregate `agg` per cell.  Broadcast-class input; output is one row
-    per occupied cell."""
+    aggregate `agg` per cell.  Broadcast-class input in ONE partition,
+    which the grouping takes as is: no exchange, so building and
+    pinning a dim is a single Spark job.  Output is one row per
+    occupied cell."""
     lo_x, hi_x = _ring_cells(F.col(poly_col), grid, "lon")
     lo_y, hi_y = _ring_cells(F.col(poly_col), grid, "lat")
     return (
@@ -228,10 +250,13 @@ def _per_cell(df: DataFrame, poly_col: str, grid: Column, agg: Column) -> DataFr
 def _ordered_runways(runways: DataFrame) -> DataFrame:
     """Iteration-ordered runway dim (__ord, name, direction, polygon).
     Single-partition window over a broadcast-class dim (≤ ~10^5 rows)
-    — bounded by construction, never over event data."""
+    — bounded by construction, never over event data.  The dim is
+    coalesced to that one partition up front, so the window needs no
+    exchange either."""
     order = ["id"] if "id" in runways.columns else ["name", "direction"]
     return (
-        runways.withColumn(
+        runways.coalesce(1)
+        .withColumn(
             "__ord", F.row_number().over(Window.orderBy(*[F.col(c) for c in order]))
         )
         .select(
@@ -241,13 +266,9 @@ def _ordered_runways(runways: DataFrame) -> DataFrame:
     )
 
 
-def grid_runway_cells(runways: DataFrame) -> DataFrame:
+def _grid_runway_cells(runways: DataFrame) -> DataFrame:
     """(__cx, __cy, __rw ordered-runway array) per occupied grid cell
-    — the STATIC dim side of the grid join, factored out so a
-    streaming sink can compute it ONCE at wire-up and reuse it every
-    micro-batch (dim work per batch was pure waste: the round-13
-    socket row measured the per-batch rebuild + a hot-cell dim at
-    keep-up 0.161)."""
+    — the static dim side of the grid join."""
     return _per_cell(
         _ordered_runways(runways), "polygon", F.lit(float(GRID_DEG)),
         F.array_sort(
@@ -256,16 +277,16 @@ def grid_runway_cells(runways: DataFrame) -> DataFrame:
     )
 
 
-def grid_bbox_cells(airport_bbox: DataFrame) -> DataFrame:
+def _grid_bbox_cells(airport_bbox: DataFrame) -> DataFrame:
     """(__cx, __cy, __bb bbox array) per occupied cell — static dim
     side of the bbox fallback tier."""
     return _per_cell(
-        airport_bbox.select("bbox"), "bbox", F.lit(float(GRID_DEG)),
+        airport_bbox.select("bbox").coalesce(1), "bbox", F.lit(float(GRID_DEG)),
         F.collect_list("bbox").alias("__bb"),
     )
 
 
-def runway_dirs(runways: DataFrame) -> DataFrame:
+def _runway_dirs(runways: DataFrame) -> DataFrame:
     """One-row (``__dirs``: ordered (ord, name, direction) array) frame —
     the heading-only fallback the bbox tier scans."""
     return _ordered_runways(runways).agg(
@@ -275,7 +296,7 @@ def runway_dirs(runways: DataFrame) -> DataFrame:
     )
 
 
-#: (lon, lat, heading, tolerance, unroll consts) → parsed (gate,
+#: (lon, lat, heading, unroll consts) → parsed (gate,
 #: value) Columns for the unrolled direct tier.  Expression memo, not
 #: a data/result cache: Columns wrap immutable unresolved expression
 #: trees that resolve per-plan, so reuse across calls (and across
@@ -284,9 +305,7 @@ def runway_dirs(runways: DataFrame) -> DataFrame:
 _DIRECT_TIER_CACHE: dict = {}
 
 
-def _direct_tier_exprs(
-    lon: str, lat: str, heading: str, tolerance_deg: float
-) -> tuple:
+def _direct_tier_exprs(lon: str, lat: str, heading: str) -> tuple:
     """(gate, value) Columns of the unrolled grid direct tier — see
     the call site in :func:`_grid_cell_join` for the full rationale.
     The gate admits a row only when the whole unrolled evaluation is
@@ -294,15 +313,12 @@ def _direct_tier_exprs(
     within PIP_UNROLL_EDGES (missing candidates guard vacuously-true
     through coalesce; a present-but-NULL polygon stays admitted — the
     fragment skips it exactly like the filter form)."""
-    key = (
-        lon, lat, heading, float(tolerance_deg),
-        CELL_SCAN_UNROLL, PIP_UNROLL_EDGES,
-    )
+    key = (lon, lat, heading, CELL_SCAN_UNROLL, PIP_UNROLL_EDGES)
     hitq = _DIRECT_TIER_CACHE.get(key)
     if hitq is not None:
         return hitq
     lon_s, lat_s, head_s = sql_ident(lon), sql_ident(lat), sql_ident(heading)
-    tol_s = f"{float(tolerance_deg)!r}D"
+    tol_s = f"{HEADING_TOLERANCE_DEG!r}D"
     rw_s = "`__rw`"
     guards, cands = [], []
     for k in range(CELL_SCAN_UNROLL):
@@ -331,30 +347,23 @@ def _direct_tier_exprs(
 
 def _grid_cell_join(
     events: DataFrame,
-    runways: DataFrame,
-    airport_bbox: DataFrame | None,
+    cell_rw: DataFrame,
+    cell_bb: DataFrame | None,
+    dirs: DataFrame | None,
     lon: str,
     lat: str,
     heading: str,
-    tolerance_deg: float,
-    cell_rw: DataFrame | None = None,
-    cell_bb: DataFrame | None = None,
-    dirs: DataFrame | None = None,
 ) -> DataFrame:
     """Scale path: events broadcast-hash-join their grid cell's
     iteration-ordered runway array; first-match is a projection over
     that (small) array.  See module docstring.
 
-    ``cell_rw``/``cell_bb``/``dirs``: precomputed static dim frames
-    (:func:`grid_runway_cells` etc.) — pass eagerly-checkpointed
-    copies from a per-micro-batch caller so the dim window + explode +
-    collect_list aggregation runs once per stream, not once per
-    batch."""
+    ``cell_rw``/``cell_bb``/``dirs``: the pinned static dim frames
+    (:func:`_grid_runway_cells`, :func:`_grid_bbox_cells`,
+    :func:`_runway_dirs`); ``cell_bb``/``dirs`` are None without an
+    airport bbox."""
     grid = F.lit(float(GRID_DEG))
     plon, plat, phead = F.col(lon), F.col(lat), F.col(heading)
-
-    if cell_rw is None:
-        cell_rw = grid_runway_cells(runways)
 
     ev = events.withColumn("__cx", F.floor(plon / grid)).withColumn(
         "__cy", F.floor(plat / grid)
@@ -362,7 +371,7 @@ def _grid_cell_join(
     ev = ev.join(F.broadcast(cell_rw), ["__cx", "__cy"], "left")
 
     hit = lambda r: point_in_polygon(plon, plat, r["polygon"]) & same_heading(
-        r["direction"], phead, tolerance_deg
+        r["direction"], phead, HEADING_TOLERANCE_DEG
     )
     # Direct tier first-match, UNROLLED AS SQL TEXT (round-13): the
     # higher-order ``get(filter(__rw, hit), 0)`` ran interpreted per
@@ -384,21 +393,17 @@ def _grid_cell_join(
     # +1.6 s of plan-build time, and even the warm re-parse of the
     # text is ~0.3 s a bench driver would pay per plan build
     # (pip_unrolled_sql docstring).
-    gate_c, val_c = _direct_tier_exprs(lon, lat, heading, tolerance_deg)
+    gate_c, val_c = _direct_tier_exprs(lon, lat, heading)
     direct = F.when(gate_c, val_c).otherwise(
         F.get(F.filter(F.col("__rw"), hit), 0)["name"]
     )
 
     drop = ["__cx", "__cy", "__rw"]
-    if airport_bbox is not None:
-        if cell_bb is None:
-            cell_bb = grid_bbox_cells(airport_bbox)
+    if cell_bb is not None:
         ev = ev.join(F.broadcast(cell_bb), ["__cx", "__cy"], "left")
         # Heading match is position-independent, so the reference's
         # (bbox-major, runway-order) first match reduces to: point in
         # ANY bbox → first runway (global order) whose heading matches.
-        if dirs is None:
-            dirs = runway_dirs(runways)
         ev = ev.crossJoin(F.broadcast(dirs))
         in_bbox = F.exists(F.col("__bb"), lambda b: point_in_polygon(plon, plat, b))
         fb = F.when(
@@ -406,7 +411,9 @@ def _grid_cell_join(
             F.get(
                 F.filter(
                     F.col("__dirs"),
-                    lambda r: same_heading(r["direction"], phead, tolerance_deg),
+                    lambda r: same_heading(
+                        r["direction"], phead, HEADING_TOLERANCE_DEG
+                    ),
                 ),
                 0,
             )["name"],

@@ -167,14 +167,3 @@ def peak_hour(
         .orderBy(F.desc("events"), F.desc("peak_hour"))
     )
 
-
-def peak_hour_scalable(
-    events: DataFrame,
-    ts: str = "time",
-    tz: str = "Europe/Paris",
-    window_s: int = PEAK_WINDOW_S,
-) -> DataFrame:
-    """Alias — the day-partitioned path is now the default
-    ``peak_hour``; kept for callers that named the scale variant
-    explicitly."""
-    return peak_hour(events, ts, tz, window_s, partitioned=True)

@@ -7,8 +7,9 @@ the row-based ``transformWithState`` processor (streaming.tws), with
 the legacy ``applyInPandasWithState`` handler (streaming.state) as
 the fallback when no compatible protobuf runtime is installed (see
 :func:`resolve_stream_engine`) → [events stream] → foreachBatch:
-runway attribution join (JOIN-5) + sinks (SNK-1 pacing via trigger
-processingTime='1 second').
+runway attribution (JOIN-5, the batch operator's own
+``attribution.runway_attributor``, decided once at wire-up) + sinks
+(SNK-1 pacing via trigger processingTime='1 second').
 
 The reference's receiver thread + bounded queue + drop-all overflow
 (STATE-7) disappear: Spark's source buffering and micro-batch
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import parse
+from ..operators.attribution import runway_attributor
 from ..streaming.state import (
     EVENT_OUTPUT_SCHEMA,
     STATE_SCHEMA,
@@ -30,7 +32,7 @@ from ..streaming.state import (
 COMMIT_PERIOD = "1 second"  # flights.py:20 DB_COMMIT_PERIOD
 
 
-def parsed_stream(raw_lines: DataFrame, altitude_below: float = 10000.0) -> DataFrame:
+def parsed_stream(raw_lines: DataFrame) -> DataFrame:
     """Parse stage, identical for batch and streaming inputs.
 
     No global altitude filter: the reference applies the filter ONLY to
@@ -38,7 +40,6 @@ def parsed_stream(raw_lines: DataFrame, altitude_below: float = 10000.0) -> Data
     handler enforces it at admission (run.py:28 wires below=10000,
     which the handler's ADMISSION_* defaults mirror).
     """
-    del altitude_below  # admission-time filtering lives in the handler
     msgs = parse.parse_sbs1_lines(raw_lines)
     msgs = parse.dispatch_fields(msgs)
     return msgs.select(
@@ -95,88 +96,22 @@ def windowed_event_counts(
     )
 
 
-def attributing_sink(
-    runways: DataFrame,
-    airport_bbox: DataFrame | None,
-    inner_sink,
-    lon: str = "longitude",
-    lat: str = "latitude",
-    heading: str = "track",
-    tolerance_deg: float | None = None,
-    keep_unmatched: bool = True,
-):
-    """foreachBatch wrapper running STATE-5/JOIN-5 runway attribution
+def attributing_sink(runways: DataFrame, airport_bbox: DataFrame | None, inner_sink):
+    """foreachBatch adapter running STATE-5/JOIN-5 runway attribution
     on each micro-batch of events before handing the attributed frame
     to ``inner_sink(batch_df, epoch_id)`` — the reference enriches its
     live events inside the commit thread (flights.py commit loop →
-    models.py:283-286); here the enrichment is a per-batch plan
-    against the static runway dim.
+    models.py:283-286).
 
-    ALL policy is shared with the batch operator — the
-    compile-vs-grid gate is ``attribution.resolve_strategy`` (run ONCE
-    at wire-up, not per batch), the compiled coalesce expression is
-    attribution's own, and the unmatched handling is
-    ``attribution.finish_unmatched`` — so the streaming path cannot
-    drift from ``attribute_runway``.  On the compile path the literal
-    Column is built once here and reused across every micro-batch (no
-    per-batch driver work); on the grid path each batch runs the
-    broadcast join (the dim broadcast is reused by the JVM across
-    batches).  ``tolerance_deg``/``keep_unmatched`` pass through to
-    the same knobs the batch operator exposes."""
-    from ..operators.attribution import (
-        HEADING_TOLERANCE_DEG,
-        _compiled_coalesce,
-        _grid_cell_join,
-        finish_unmatched,
-        grid_bbox_cells,
-        grid_runway_cells,
-        resolve_strategy,
-        runway_dirs,
-    )
+    The attribution is the batch operator's own
+    (:func:`..operators.attribution.runway_attributor`), built once
+    here at wire-up against the static dims: its strategy, and the
+    compiled Column or the pinned grid dims, serve every micro-batch.
+    The events carry their heading in ``track``."""
+    attribute = runway_attributor(runways, airport_bbox, heading="track")
 
-    tol = HEADING_TOLERANCE_DEG if tolerance_deg is None else tolerance_deg
-    strategy = resolve_strategy(runways, airport_bbox)
-    if strategy == "compile":
-        best = _compiled_coalesce(
-            runways, airport_bbox, lon, lat, heading, tol
-        )
-
-        def sink(batch_df, epoch_id):
-            inner_sink(
-                finish_unmatched(
-                    batch_df.withColumn("runway", best), keep_unmatched
-                ),
-                epoch_id,
-            )
-
-    else:
-        # The grid twin of the compile branch's build-once discipline:
-        # the per-cell runway/bbox dims and the heading-fallback array
-        # are STATIC across micro-batches, so compute them ONCE at
-        # wire-up and pin with an eager localCheckpoint — per batch the
-        # plan is events → cell key → broadcast join → projection, no
-        # dim window/explode/collect_list jobs (round-13: the per-batch
-        # rebuild was part of the grid socket row's 0.161 keep-up).
-        cell_rw = grid_runway_cells(runways).localCheckpoint(eager=True)
-        cell_bb = dirs = None
-        if airport_bbox is not None:
-            cell_bb = grid_bbox_cells(airport_bbox).localCheckpoint(
-                eager=True
-            )
-            dirs = runway_dirs(runways).localCheckpoint(eager=True)
-
-        def sink(batch_df, epoch_id):
-            inner_sink(
-                finish_unmatched(
-                    _grid_cell_join(
-                        batch_df, runways, airport_bbox,
-                        lon, lat, heading, tol,
-                        cell_rw=cell_rw, cell_bb=cell_bb, dirs=dirs,
-                    ),
-                    keep_unmatched,
-                ),
-                epoch_id,
-            )
+    def sink(batch_df, epoch_id):
+        inner_sink(attribute(batch_df), epoch_id)
 
     return sink
 

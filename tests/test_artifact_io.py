@@ -160,6 +160,35 @@ def test_ivf_append_dying_mid_write_is_refused(spark, tmp_path):
         sim.append_ivf_cell_store(batch_b, path, num_partitions=2)
 
 
+def test_ivf_append_reads_its_sidecar_without_spark(spark, tmp_path):
+    """The append reads the store's nlist-row centroid sidecar on the
+    driver, not through Spark (a Spark read and collect of it is 2
+    more jobs): on a 40-row store the append runs at most 6 jobs."""
+    import random
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    rnd = random.Random(86)
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(40)]
+    schema = "vec_id long, embedding array<double>"
+    batch_a = spark.createDataFrame(rows[:25], schema)
+    batch_b = spark.createDataFrame(rows[25:], schema)
+    cent = sim.build_centroids(batch_a, num_centroids=2)
+    path = str(tmp_path / "store")
+    sim.write_ivf_cell_store(batch_a, cent, path, num_partitions=2)
+    sc.setJobGroup("ivf-append", "append one batch")
+    try:
+        sim.append_ivf_cell_store(batch_b, path, num_partitions=2)
+        assert len(tracker.getJobIdsForGroup("ivf-append")) <= 6
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    cen_rows = sim._collect_centroids(cent)
+    store = sim._load_ivf_cell_store(spark, path, cen_rows, "embedding", "vec_id")
+    assert sorted(r.vec_id for r in store.select("vec_id").collect()) == list(range(40))
+
+
 def test_lsh_partial_parquet_without_witness_is_rebuilt(tmp_path):
     """A torn banded artifact (one partial part file, no witness) is
     rebuilt, not read as whole: the torn file goes and the directory

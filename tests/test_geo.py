@@ -91,10 +91,6 @@ def test_attribution_no_match(spark):
            attribute_runway(ev, nte_runways(spark), nte_airport(spark)).collect()}
     assert out[1] == "UNK"  # off airport
     assert out[2] == "UNK"  # on runway, wrong heading
-    dropped = attribute_runway(
-        ev, nte_runways(spark), nte_airport(spark), keep_unmatched=False
-    )
-    assert dropped.count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -157,28 +153,21 @@ def test_attribution_null_coords_and_heading(spark, monkeypatch):
 
 def test_point_in_polygon_sql_parity(spark):
     """SQL-text unrolled ray cast ≡ higher-order ray cast on every
-    ring class it branches on: open/closed quads, concave rings,
-    rings LONGER than the unroll budget (per-row fallback), degenerate
-    2-vertex rings, and NULL polygons — over a point grid crossing all
-    boundaries.  (round-13 opt: the unrolled form codegens and parses
-    as one F.expr; the HOF form is the semantics oracle.)"""
+    ring class within the unroll budget: open/closed quads, concave
+    rings and degenerate 2-vertex rings — over a point grid crossing
+    all boundaries.  (round-13 opt: the unrolled form codegens and
+    parses as one F.expr; the HOF form is the semantics oracle.)"""
     from dump1090_postgis_spark.functions.geo import (
-        point_in_polygon_sql,
+        PIP_UNROLL_EDGES,
+        pip_unrolled_sql,
     )
 
     quad_open = [(0.0, 0.0), (2.0, 0.0), (2.0, 1.0), (0.0, 1.0)]
     quad_closed = quad_open + [quad_open[0]]
     concave = [(0.0, 0.0), (4.0, 0.0), (4.0, 3.0), (2.0, 1.0), (0.0, 3.0)]
-    # 12-gon: size > PIP_UNROLL_EDGES → per-row fallback branch
-    import math
-
-    many = [
-        (1.0 + math.cos(2 * math.pi * i / 12),
-         1.0 + math.sin(2 * math.pi * i / 12))
-        for i in range(12)
-    ]
     degenerate = [(0.0, 0.0), (1.0, 1.0)]
-    polys = [quad_open, quad_closed, concave, many, degenerate, None]
+    polys = [quad_open, quad_closed, concave, degenerate]
+    assert all(len(p) <= PIP_UNROLL_EDGES for p in polys)
     pts = [
         (x / 2.0 + 0.001, y / 2.0 + 0.001)
         for x in range(-1, 10)
@@ -186,8 +175,7 @@ def test_point_in_polygon_sql_parity(spark):
     ]
     rows = [
         (float(px), float(py),
-         None if poly is None
-         else [{"lon": lon, "lat": lat} for lon, lat in poly])
+         [{"lon": lon, "lat": lat} for lon, lat in poly])
         for px, py in pts
         for poly in polys
     ]
@@ -196,9 +184,10 @@ def test_point_in_polygon_sql_parity(spark):
     )
     out = df.select(
         point_in_polygon(F.col("px"), F.col("py"), F.col("poly")).alias("hof"),
-        F.expr(point_in_polygon_sql("`px`", "`py`", "`poly`")).alias("unr"),
+        F.expr(pip_unrolled_sql("`px`", "`py`", "`poly`")).alias("unr"),
     ).collect()
     assert len(out) == len(rows)
+    assert any(r.hof for r in out) and not all(r.hof for r in out)
     for r in out:
         assert r.hof == r.unr, r
 

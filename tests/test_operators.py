@@ -16,7 +16,6 @@ from dump1090_postgis_spark.operators.events import (
 from dump1090_postgis_spark.operators.histogram import events_histogram
 from dump1090_postgis_spark.operators.peak_hour import (
     peak_hour,
-    peak_hour_scalable,
     union_events,
 )
 from dump1090_postgis_spark.operators.sessionize import (
@@ -217,7 +216,7 @@ def test_peak_hour_scalable_matches_exact(spark):
     exact = [(str(r.day), str(r.peak_hour), r.events)
              for r in peak_hour(ev, partitioned=False).collect()]
     scalable = [(str(r.day), str(r.peak_hour), r.events)
-                for r in peak_hour_scalable(ev).collect()]
+                for r in peak_hour(ev).collect()]
     assert exact == scalable
 
 

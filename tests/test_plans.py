@@ -442,6 +442,17 @@ def test_q21_semi_and_anti_share_orderkey_exchanges(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
+def plan_kids(node):
+    """Children of a physical plan node, through the AQE wrappers."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
 def _window_input_rows(df):
     """Execute ``df`` and return, per WindowExec in the final (AQE)
     physical plan, the rows that flowed INTO the window — read from the
@@ -449,15 +460,6 @@ def _window_input_rows(df):
     defines one (WindowExec itself defines no row metric)."""
     df.collect()
     counts = []
-
-    def kids(node):
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            return [node.executedPlan()]
-        if cls.endswith("QueryStageExec"):
-            return [node.plan()]
-        ch = node.children()
-        return [ch.apply(i) for i in range(ch.size())]
 
     def first_row_metric(node):
         opt = node.metrics().get("numOutputRows")
@@ -469,7 +471,7 @@ def _window_input_rows(df):
             "TakeOrderedAndProjectExec", "GlobalLimitExec", "LocalLimitExec",
         ):
             return node.limit()
-        for c in kids(node):
+        for c in plan_kids(node):
             v = first_row_metric(c)
             if v is not None:
                 return v
@@ -477,11 +479,11 @@ def _window_input_rows(df):
 
     def walk(node):
         if node.nodeName() == "Window":
-            child = kids(node)
+            child = plan_kids(node)
             v = first_row_metric(child[0]) if child else None
             if v is not None:
                 counts.append(v)
-        for c in kids(node):
+        for c in plan_kids(node):
             walk(c)
 
     walk(df._jdf.queryExecution().executedPlan())
@@ -537,6 +539,7 @@ def test_attribution_grid_join_window_is_dim_sized(spark):
     event data."""
     from pyspark.sql import functions as F
 
+    from dump1090_postgis_spark.operators import attribution
     from dump1090_postgis_spark.operators.attribution import attribute_runway
     from dump1090_postgis_spark.schemas import load_table
     from tests.test_plans import _window_input_rows  # self-import safe
@@ -569,9 +572,13 @@ def test_attribution_grid_join_window_is_dim_sized(spark):
     )
     out = attribute_runway(ev, runways)
     n_events = ev.count()
-    wrows = _window_input_rows(out)
+    # the window is the per-cell dim's, which the attributor pins once
+    # (attribution._grid_runway_cells) ...
+    wrows = _window_input_rows(attribution._grid_runway_cells(runways))
     assert wrows and all(r == n_rw for r in wrows), wrows
     assert all(r < n_events for r in wrows)
+    # ... so the attributed events run through no window at all
+    assert _window_input_rows(out) == []
 
 
 def test_every_registry_entry_is_driver_window_represented():
