@@ -39,24 +39,19 @@ def angle2winddir(angle: Column) -> Column:
     return F.when(a > 360.0, a - 360.0).otherwise(a)
 
 
-def interpolated_track(
-    df: DataFrame,
-    key_cols: tuple[str, ...] = ("hexident", "session_id"),
-    ts: str = "gen_date_time",
-    lon: str = "longitude",
-    lat: str = "latitude",
-    out: str = "interp_track",
-) -> DataFrame:
+def interpolated_track(df: DataFrame) -> DataFrame:
     """PRJ-7 (shared.py:36-50, used models.py:134-140): heading from the
-    last two positions — arctan2(dlat, dlon) → degrees → compass.
+    last two positions — arctan2(dlat, dlon) → degrees → compass — as
+    ``interp_track``.
 
-    Window lag over (key, time); NULL for the first point of a track.
+    Window lag over each (hexident, session_id) track in gen_date_time
+    order; NULL for the first point of a track.
     """
-    w = Window.partitionBy(*key_cols).orderBy(ts)
-    dx = F.col(lon) - F.lag(lon).over(w)
-    dy = F.col(lat) - F.lag(lat).over(w)
+    w = Window.partitionBy("hexident", "session_id").orderBy("gen_date_time")
+    dx = F.col("longitude") - F.lag("longitude").over(w)
+    dy = F.col("latitude") - F.lag("latitude").over(w)
     math_angle = F.degrees(F.atan2(dy, dx))
     return df.withColumn(
-        out,
+        "interp_track",
         F.when(dx.isNotNull() & dy.isNotNull(), angle2compass(math_angle)),
     )

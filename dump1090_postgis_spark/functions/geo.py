@@ -70,16 +70,14 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def pip_unrolled_sql(
-    lon: str, lat: str, poly: str, max_edges: int = PIP_UNROLL_EDGES,
-) -> str:
+def pip_unrolled_sql(lon: str, lat: str, poly: str) -> str:
     """:func:`point_in_polygon` as ONE SQL text fragment with the edge
     loop UNROLLED over literal indices — the round-13 hot-path form
     for per-event containment at scale.  ``lon``/``lat``/``poly`` are
     SQL sub-expressions (quote plain names with :func:`sql_ident`).
 
     No size gate and no higher-order fallback: correct exactly when
-    the ring has at most ``max_edges`` vertices — callers must
+    the ring has at most ``PIP_UNROLL_EDGES`` vertices — callers must
     guarantee or gate that themselves (the grid attribution tier
     hoists the gate into its cell-level gate so the fragment is not
     duplicated per candidate).  A NULL polygon yields FALSE here (each
@@ -122,30 +120,22 @@ def pip_unrolled_sql(
         f"(CASE WHEN {i + 1} <= size({poly}) - 1 THEN "
         f"{edge(f'(get({poly}, {i}))', f'(get({poly}, {i + 1}))')} "
         f"ELSE 0 END)"
-        for i in range(max_edges - 1)
+        for i in range(PIP_UNROLL_EDGES - 1)
     ]
     terms.append(edge(f"(get({poly}, size({poly}) - 1))", f"(get({poly}, 0))"))
     return f"(pmod({' + '.join(terms)}, 2) = 1)"
 
 
 def same_heading(
-    direction: Column,
-    heading: Column,
-    tolerance_deg: float = 20.0,
-    circular: bool = False,
+    direction: Column, heading: Column, tolerance_deg: float = 20.0
 ) -> Column:
     """airports.py:51-67: is `heading` within ±tolerance of the runway
     direction.
 
     The reference compares plain ``abs(direction - heading) <= tol`` —
-    NO circular wrap (350° vs 10° do NOT match) — so that is the
-    default for parity.  ``circular=True`` adds the wrap-aware variant
-    as an engine extension.
+    no wrap at 360° (350° vs 10° do NOT match).
     """
-    diff = F.abs(direction - heading)
-    if circular:
-        diff = F.least(diff, F.lit(360.0) - diff)
-    return diff <= F.lit(tolerance_deg)
+    return F.abs(direction - heading) <= F.lit(tolerance_deg)
 
 
 # --------------------------------------------------------------------------

@@ -2,9 +2,9 @@
 
 The reference bins in UTC or in Europe/Paris local time via Postgres
 ``AT TIME ZONE`` round-trips (create_public_schema.sql:295-297).  All
-local-time logic is centralized here: ``to_local``/``from_local`` on
-TIMESTAMP_NTZ columns (the engine treats stored timestamps as UTC wall
-clocks, matching the reference which stores tz-aware UTC).
+local-time logic is centralized here: ``to_local`` on TIMESTAMP_NTZ
+columns (the engine treats stored timestamps as UTC wall clocks,
+matching the reference which stores tz-aware UTC).
 
 ``convert_timezone`` is DST-correct (ICU rules), so the Europe/Paris
 variants agree with Postgres across DST boundaries.
@@ -29,17 +29,6 @@ def validate_bin(bin_: str) -> str:
     return b
 
 
-def epoch_seconds(ts: Column) -> Column:
-    """Seconds since epoch for TIMESTAMP and TIMESTAMP_NTZ alike.
-
-    NTZ casts through TIMESTAMP using the session timezone, which the
-    engine pins to UTC (session.configure_for_engine / load_table), so
-    NTZ wall-clocks are treated as UTC instants — the reference's
-    storage convention.
-    """
-    return ts.cast("timestamp").cast("long")
-
-
 def epoch_micros(ts: Column) -> Column:
     """Integer microseconds since epoch — the precision PG interval
     arithmetic (and DuckDB) operates at.  All gap/range-frame
@@ -52,11 +41,6 @@ def to_local(ts: Column, tz: str = DEFAULT_LOCAL_TZ) -> Column:
     """UTC wall-clock → local wall-clock (PG: ts AT TIME ZONE 'UTC' AT
     TIME ZONE tz)."""
     return F.convert_timezone(F.lit("UTC"), F.lit(tz), ts)
-
-
-def from_local(ts: Column, tz: str = DEFAULT_LOCAL_TZ) -> Column:
-    """Local wall-clock → UTC wall-clock (inverse of to_local)."""
-    return F.convert_timezone(F.lit(tz), F.lit("UTC"), ts)
 
 
 def bin_interval(bin_: str) -> Column:

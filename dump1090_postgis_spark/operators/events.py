@@ -33,9 +33,8 @@ def detect_onground_edges(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("hexident", "session_id"),
     ts: str = "gen_date_time",
-    onground: str = "onground",
 ) -> DataFrame:
-    """STATE-3: per session, ordered by time, find onground transitions.
+    """STATE-3: per session, ordered by time, find `onground` transitions.
 
     Returns rows at the transition points with `event_type` ∈
     {'landing', 'takeoff'}. Rows where onground is NULL don't carry the
@@ -43,17 +42,17 @@ def detect_onground_edges(
     calls update_onground when the message carries onground.
     """
     w = Window.partitionBy(*key_cols).orderBy(ts)
-    carried = df.filter(F.col(onground).isNotNull())
-    prev = F.lag(onground).over(w)
+    carried = df.filter(F.col("onground").isNotNull())
+    prev = F.lag("onground").over(w)
     return (
         carried.withColumn("prev_onground", prev)
         .filter(
             F.col("prev_onground").isNotNull()
-            & (F.col("prev_onground") != F.col(onground))
+            & (F.col("prev_onground") != F.col("onground"))
         )
         .withColumn(
             "event_type",
-            F.when(F.col(onground), F.lit("landing")).otherwise(F.lit("takeoff")),
+            F.when(F.col("onground"), F.lit("landing")).otherwise(F.lit("takeoff")),
         )
     )
 
@@ -80,9 +79,7 @@ def debounce_events(
     )
 
 
-def classify_intention(
-    flights: DataFrame, airborne: str = "any_airborne"
-) -> DataFrame:
+def classify_intention(flights: DataFrame) -> DataFrame:
     """STATE-9 (models.py:37-49 docstring, never implemented in the
     reference — extension): departure if first seen on ground, arrival
     if it ends on ground / descending, else enroute; unknown when the
@@ -91,35 +88,18 @@ def classify_intention(
     calling that 'enroute', the one class it certainly is not, was the
     fall-through before).
 
-    ``airborne`` (used iff the column is present): endpoint flags
-    alone cannot tell a taxi-only session from a complete gate-to-gate
-    flight — both start AND end on ground (round-10 advisor).  A
-    session that WAS airborne in between followed the reference's own
-    departure rule ("first recorded position was onground",
-    models.py:42) and is labeled 'departure'; without the signal (or
-    without the column) the ambiguous both-onground case stays
-    'unknown'."""
+    Reads ``first_onground``, ``last_onground`` and ``any_airborne``
+    (a required column: plans/etl.py aggregates it per session).
+    Endpoint flags alone cannot tell a taxi-only session from a
+    complete gate-to-gate flight — both start AND end on ground
+    (round-10 advisor).  A session that WAS airborne in between
+    followed the reference's own departure rule ("first recorded
+    position was onground", models.py:42) and is labeled 'departure';
+    with ``any_airborne`` NULL or false the ambiguous both-onground
+    case stays 'unknown'."""
     first = F.coalesce(F.col("first_onground"), F.lit(False))
     last = F.coalesce(F.col("last_onground"), F.lit(False))
-    if airborne in flights.columns:
-        flew = F.coalesce(F.col(airborne), F.lit(False))
-    else:
-        # Without the airborne signal every gate-to-gate flight
-        # degrades to 'unknown' — legal (the etl pipeline always
-        # supplies it, plans/etl.py) but a third-party caller who
-        # merely forgot the column should hear about the downgrade
-        # instead of silently losing the departure class (round-11
-        # verdict watch item).
-        import warnings
-
-        warnings.warn(
-            f"classify_intention: column {airborne!r} is absent — "
-            "complete gate-to-gate flights will classify as 'unknown' "
-            "instead of 'departure'; aggregate an any-airborne flag "
-            "per session to enable the split",
-            stacklevel=2,
-        )
-        flew = F.lit(False)
+    flew = F.coalesce(F.col("any_airborne"), F.lit(False))
     return flights.withColumn(
         "intention",
         F.when(first & ~last, "departure")

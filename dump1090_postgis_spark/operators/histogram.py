@@ -27,11 +27,11 @@ from ..functions.timeutil import bin_interval, to_local, validate_bin
 
 
 def time_axis_df(
-    spark: SparkSession, starts, ends, bin_: str, axis_col: str = "interval",
-    tz: str | None = None,
+    spark: SparkSession, starts, ends, bin_: str, tz: str | None = None
 ) -> DataFrame:
     """JOIN-3 zero-fill axis: generate_series(date_trunc(bin, starts),
-    date_trunc(bin, ends), '1 bin') as a one-column DataFrame.
+    date_trunc(bin, ends), '1 bin') as a one-column DataFrame
+    (``interval``).
     ``tz`` localizes the bounds first (FLT-6 wall-clock binning) — the
     ONE axis definition every tz and non-tz histogram shares."""
     b = validate_bin(bin_)
@@ -42,7 +42,7 @@ def time_axis_df(
     return spark.range(1).select(
         F.explode(
             F.sequence(F.date_trunc(b, lo), F.date_trunc(b, hi), bin_interval(b))
-        ).alias(axis_col)
+        ).alias("interval")
     )
 
 

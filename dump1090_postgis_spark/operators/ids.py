@@ -47,7 +47,6 @@ def with_dense_ids(
     df: DataFrame,
     order_cols: list[str],
     id_col: str = "id",
-    offset: int = 0,
     caches: list[DataFrame] | None = None,
     group_col: str | None = None,
 ) -> DataFrame:
@@ -55,7 +54,7 @@ def with_dense_ids(
 
     ``group_col`` restarts the ids within each value of that column
     (NULL is a group of its own): every group gets its own dense
-    ``offset + 1 .. offset + n`` space in ``order_cols`` order, as if
+    ``1 .. n`` space in ``order_cols`` order, as if
     each group had been numbered by a separate call — but from one
     layout pin and one counting job.  ``order_cols`` only has to be
     total within a group.  ``None`` numbers the whole frame as one
@@ -90,7 +89,7 @@ def with_dense_ids(
     offsets = []
     for r in sorted(counts, key=lambda r: r._pid):
         g = r[group_col] if group_col is not None else None
-        acc = running.get(g, offset)
+        acc = running.get(g, 0)
         offsets.append((r._pid, g, acc))
         running[g] = acc + r._cnt
     # literal_dim, not createDataFrame: the offset map is re-read every

@@ -11,8 +11,8 @@ Reference behavior being matched (not ported):
 - callsign: strip; empty → NULL (adsb_parser.py:207)
 - booleans: wire '-1' → true, else false (adsb_parser.py:215-218)
 - ft→m conversion 0.3048 (shared.py:5-7)
-- altitude band filter with optional strict NULL rejection
-  (adsb_parser.py:294-357)
+- the admission altitude band (adsb_parser.py:294-357, wired
+  below=10000 at run.py:28), strict: a NULL altitude is rejected
 - MSG-type field dispatch: which fields each transmission type
   carries (models.py:146-190)
 
@@ -28,7 +28,16 @@ from pyspark.sql import functions as F
 
 from ..functions.conversions import feet2m
 from ..schemas import N_SBS1_FIELDS, SBS1_FIELDS
+
 GND_ALTITUDE_M = 0.0  # models.py:32-34: MSG2 carries no altitude → ground level
+
+# FLT-1 band of the MSG3 admission test (flights.py:97-108): run.py:28
+# wires AdsbMessageFilter(below=10000), the filter is strict
+# (adsb_parser.py:322), so an MSG3 admits a flight only with an
+# altitude strictly inside (ABOVE, BELOW).  The batch ETL and the live
+# session handler both read these.
+ADMISSION_ALT_ABOVE = -1000.0
+ADMISSION_ALT_BELOW = 10000.0
 
 # models.py:161-167 — fields updated per transmission type.
 MSG_FIELDS = {
@@ -43,14 +52,15 @@ MSG_FIELDS = {
 }
 
 
-def gate_malformed(lines: DataFrame, col: str = "value") -> DataFrame:
-    """SRC-3: keep only lines with exactly 22 comma-separated fields.
+def gate_malformed(lines: DataFrame) -> DataFrame:
+    """SRC-3: keep only lines (the ``value`` column) with exactly 22
+    comma-separated fields.
 
     `split` with limit -1 keeps trailing empty fields, matching
     Python's str.split(',') used by the reference gate.
     """
     return lines.filter(
-        F.size(F.split(F.col(col), ",", -1)) == F.lit(N_SBS1_FIELDS)
+        F.size(F.split(F.col("value"), ",", -1)) == F.lit(N_SBS1_FIELDS)
     )
 
 
@@ -89,7 +99,7 @@ REFERENCE_LINE_REGEX = (
 )
 
 
-def validity_gate(lines: DataFrame, col: str = "value") -> DataFrame:
+def validity_gate(lines: DataFrame) -> DataFrame:
     """Reference-regex validity gate: drop any line whose fields don't
     all match REGEXP_MSG's character classes (adsb_parser.py:176-195).
 
@@ -99,7 +109,7 @@ def validity_gate(lines: DataFrame, col: str = "value") -> DataFrame:
     dict but still yields) — a bug we deliberately do not replicate;
     failed lines are dropped here.
     """
-    return lines.filter(F.col(col).rlike(REFERENCE_LINE_REGEX))
+    return lines.filter(F.col("value").rlike(REFERENCE_LINE_REGEX))
 
 
 def _bool_from_wire(c: Column) -> Column:
@@ -111,26 +121,21 @@ def _bool_from_wire(c: Column) -> Column:
     return c == F.lit("-1")
 
 
-def parse_sbs1_lines(
-    lines: DataFrame, col: str = "value", validate: bool = True
-) -> DataFrame:
-    """PRJ-1..4: one SBS-1 CSV line → normalized typed message row.
+def parse_sbs1_lines(lines: DataFrame) -> DataFrame:
+    """PRJ-1..4: one SBS-1 CSV line (the ``value`` column, as
+    ``spark.read.text`` and the socket source give it) → normalized
+    typed message row.
 
-    Applies the SRC-3 gate and (by default) the reference-regex
-    validity gate, splits positionally (the reference's named regex
-    groups are positional CSV fields), casts each field with
-    NULL-on-failure, parses the split date/time pairs into UTC
-    timestamps, trims the callsign (empty → NULL).
-
-    ``validate=True`` (parity default) rejects whole lines the way
-    REGEXP_MSG does — e.g. altitude 'notanumber', lowercase hexident,
-    non-'MSG' record types.  ``validate=False`` is a lenient engine
-    extension that keeps such rows with NULL for the failing field.
+    Applies the SRC-3 gate and the reference-regex validity gate, which
+    rejects whole lines the way REGEXP_MSG does (e.g. altitude
+    'notanumber', lowercase hexident, non-'MSG' record types); splits
+    positionally (the reference's named regex groups are positional
+    CSV fields), casts each field with NULL-on-failure, parses the
+    split date/time pairs into UTC timestamps, trims the callsign
+    (empty → NULL).
     """
-    gated = gate_malformed(lines, col)
-    if validate:
-        gated = validity_gate(gated, col)
-    parts = F.split(F.col(col), ",", -1)
+    gated = validity_gate(gate_malformed(lines))
+    parts = F.split(F.col("value"), ",", -1)
     fields = {name: parts.getItem(i) for i, name in enumerate(SBS1_FIELDS)}
 
     def ts(date_col: Column, time_col: Column) -> Column:
@@ -163,45 +168,16 @@ def parse_sbs1_lines(
     )
 
 
-def feet_to_meters(c: Column) -> Column:
-    """PRJ-5 (shared.py:5-7) — delegates to the one shared
-    implementation in functions.conversions (the constant and the
-    conversion must never drift between the parse path and the dim
-    loaders)."""
-    return feet2m(c)
-
-
 def with_altitude_m(df: DataFrame) -> DataFrame:
     """Altitude in meters; MSG2 (no altitude field) → ground constant
     (PRJ-8, models.py:32-34,208-213)."""
-    alt_m = feet_to_meters(F.col("altitude").cast("double"))
+    alt_m = feet2m(F.col("altitude").cast("double"))
     return df.withColumn(
         "altitude_m",
         F.when(F.col("transmission_type") == 2, F.lit(GND_ALTITUDE_M)).otherwise(
             alt_m
         ),
     )
-
-
-def altitude_filter(
-    df: DataFrame,
-    above: float = -1000.0,
-    below: float = 100000.0,
-    strict: bool = True,
-    col: str = "altitude",
-) -> DataFrame:
-    """FLT-1 (adsb_parser.py:294-357): keep above < altitude < below.
-
-    The reference hard-codes ``self.strict = True``
-    (adsb_parser.py:322), so NULL altitudes are REJECTED — that is the
-    default here.  ``strict=False`` (an engine extension, not
-    reference behavior) passes NULL altitudes through.
-    """
-    alt = F.col(col)
-    in_band = (alt > F.lit(above)) & (alt < F.lit(below))
-    if strict:
-        return df.filter(alt.isNotNull() & in_band)
-    return df.filter(alt.isNull() | in_band)
 
 
 def dispatch_fields(df: DataFrame) -> DataFrame:

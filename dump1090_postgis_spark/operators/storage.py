@@ -28,12 +28,11 @@ def write_time_partitioned(
     path: str,
     ts: str = "time",
     cluster_key: str | None = None,
-    num_partitions: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Partition by event date (`_dt` directory column — readers prune
-    whole directories on a `_dt` predicate; plans/adsb.py's FLT-5/6
-    helpers emit one automatically when the column is present); sort
+    """Overwrite ``path`` partitioned by event date (`_dt` directory
+    column — readers prune whole directories on a `_dt` predicate;
+    plans/adsb.py's FLT-5/6 helpers emit one automatically when the
+    column is present), in ``defaultParallelism`` partitions; sort
     within files by time so min/max row-group stats stay tight.
 
     ``cluster_key`` additionally hash-spreads each date across tasks
@@ -41,14 +40,14 @@ def write_time_partitioned(
     scale guard: without it a hot date funnels through one task (a
     100 TB day must parallelize within the date, not across dates
     only)."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     staged = df.withColumn("_dt", F.to_date(F.col(ts)))
     keys = [F.col("_dt")] + ([F.col(cluster_key)] if cluster_key else [])
     sort_cols = ([cluster_key] if cluster_key else []) + [ts]
     (
         staged.repartition(n, *keys)
         .sortWithinPartitions("_dt", *sort_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("_dt")
         .parquet(path)
     )

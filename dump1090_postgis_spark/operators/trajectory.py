@@ -24,15 +24,10 @@ from ..functions.geo import linestring_geojson
 
 
 def flight_paths(
-    positions: DataFrame,
-    flight_ids: Sequence[int] | None = None,
-    key: str = "flight_id",
-    ts: str = "time",
-    lon: str = "longitude",
-    lat: str = "latitude",
+    positions: DataFrame, flight_ids: Sequence[int] | None = None
 ) -> DataFrame:
-    """AGG-5: per flight, the time-ordered 2D path as
-    array<struct<lon,lat>>.
+    """AGG-5: per flight_id, the time-ordered 2D path of the positions
+    table as ``path`` array<struct<lon,lat>>.
 
     `flight_ids` mirrors `flight_paths(bigint[])` — a pushed-down IN
     filter instead of the reference's per-id loop (the filter reaches
@@ -40,18 +35,19 @@ def flight_paths(
     """
     df = positions
     if flight_ids is not None:
-        df = df.filter(F.col(key).isin(list(flight_ids)))
+        df = df.filter(F.col("flight_id").isin(list(flight_ids)))
     pts = F.array_sort(
-        F.collect_list(F.struct(F.col(ts).alias("t"), F.col(lon).alias("lon"),
-                                F.col(lat).alias("lat")))
+        F.collect_list(F.struct(F.col("time").alias("t"),
+                                F.col("longitude").alias("lon"),
+                                F.col("latitude").alias("lat")))
     )
     # st_force2d: drop time+altitude after ordering
     path = F.transform(pts, lambda p: F.struct(p["lon"].alias("lon"),
                                                p["lat"].alias("lat")))
-    return df.groupBy(key).agg(path.alias("path"))
+    return df.groupBy("flight_id").agg(path.alias("path"))
 
 
-def flight_paths_wkt(paths: DataFrame, path_col: str = "path") -> DataFrame:
+def flight_paths_wkt(paths: DataFrame) -> DataFrame:
     """LINESTRING WKT rendering of an assembled path (readable/portable
     parity with st_makeline's WKT form)."""
     pt = lambda p: F.concat_ws(" ", p["lon"].cast("string"), p["lat"].cast("string"))
@@ -59,16 +55,13 @@ def flight_paths_wkt(paths: DataFrame, path_col: str = "path") -> DataFrame:
         "wkt",
         F.concat(
             F.lit("LINESTRING ("),
-            F.array_join(F.transform(F.col(path_col), pt), ", "),
+            F.array_join(F.transform(F.col("path"), pt), ", "),
             F.lit(")"),
         ),
     )
 
 
-def flight_paths_geojson(paths: DataFrame, path_col: str = "path",
-                         decimals: int = 6) -> DataFrame:
-    """SNK-4: GeoJSON LineString per flight
+def flight_paths_geojson(paths: DataFrame) -> DataFrame:
+    """SNK-4: GeoJSON LineString per flight, 6 decimals
     (flight_path_geojson, create_public_schema.sql:225-236)."""
-    return paths.withColumn(
-        "geojson", linestring_geojson(F.col(path_col), decimals)
-    )
+    return paths.withColumn("geojson", linestring_geojson(F.col("path")))

@@ -3,16 +3,18 @@
 
 raw SBS-1 lines
   → SRC-3 gate + PRJ-1..5 parse/normalize
-  → FLT-1 altitude filter (run.py:28 wires below=10000)
   → FLT-3 field dispatch
   → STATE-1 batch sessionization (gap > 300 s per hexident)
-  → FLT-2 admission (a session only becomes a flight if its first
-    message is MSG2 or MSG3 — flights.py:92-93)
+  → FLT-1/FLT-2 admission (a session becomes a flight at its first
+    MSG2, or MSG3 with an altitude inside the admission band —
+    flights.py:92-108, run.py:28 wires below=10000)
   → AGG-6 flight summaries (the `flights` table)
   → FLT-4 position validity → the `positions` table (PRJ-5 meters)
   → STATE-3 edges + STATE-4 debounce + PRJ-7 interpolated track
   → JOIN-5 runway attribution
   → the `landings` / `takeoffs` tables
+  → each table written as parquet under the caller's ``output_path``
+    and read back (operators/storage.py layout)
 
 Surrogate ids are dense, deterministic, and assigned fully in
 parallel (operators.ids two-pass range-partition scheme) following the
@@ -58,7 +60,7 @@ from ..operators.events import (
     detect_onground_edges,
 )
 from ..operators.ids import release_caches, with_dense_ids
-from ..operators.sessionize import flight_summaries, sessionize
+from ..operators.sessionize import SESSION_MAX_AGE_S, flight_summaries, sessionize
 from ..session import job_scope
 
 
@@ -84,14 +86,20 @@ def build_tables(
     raw_lines: DataFrame,
     runways: DataFrame | None = None,
     airport: DataFrame | None = None,
-    altitude_below: float = 10000.0,
-    session_gap_s: int = 300,
-    output_path: str | None = None,
-    caches: list[DataFrame] | None = None,
+    altitude_below: float = parse.ADMISSION_ALT_BELOW,
+    session_gap_s: int = SESSION_MAX_AGE_S,
+    *,
+    output_path: str,
 ) -> dict[str, DataFrame]:
-    """Run the full pipeline; returns {'flights', 'positions',
-    'landings', 'takeoffs'} DataFrames with the reference's table
-    shapes (FIXTURES.md §3).
+    """Run the full pipeline and write its four tables, 'flights',
+    'positions', 'landings' and 'takeoffs', with the reference's table
+    shapes (FIXTURES.md §3) as parquet under ``{output_path}/{name}``;
+    return their read-backs by name.
+
+    Layout (operators/storage.py): the time tables are date-partitioned
+    with a ``_dt`` directory column, positions clustered by flight_id;
+    the read-back frames carry ``_dt`` and plans/adsb.py's FLT-5/6
+    helpers prune on it.
 
     Ids: flights rank by (first_seen, hexident, session_id); positions,
     landings and takeoffs each rank by (time, flight_id), landings and
@@ -103,50 +111,27 @@ def build_tables(
     (time, _adm_ts, hexident, session_id) concurrently with the flights
     and get ``flight_id`` joined on afterwards.
 
-    Cache lifecycle (the session stream + each dense-id layout pin are
-    persisted DISK_ONLY):
-
-    - ``output_path`` given — the scale path: each table is written to
-      ``{output_path}/{name}`` as parquet (time tables date-partitioned
-      with a ``_dt`` directory column, positions clustered by
-      flight_id — operators/storage.py; the read-back frames carry
-      ``_dt`` and plans/adsb.py's FLT-5/6 helpers prune on it), every
-      internal cache is unpersisted, and the returned DataFrames read
-      back from parquet.  Nothing stays pinned after the call
-      (asserted in tests).
-    - ``caches`` given — lazy mode for composition: internal persists
-      are appended; call ``operators.ids.release_caches(caches)`` after
-      materializing the outputs.
-    - neither — legacy lazy mode; caches stay pinned for the session
-      (fine for short-lived jobs/tests, leaks in long-lived drivers).
-
-    On error (a numbering pass or a write raises) the call waits until
-    every concurrent pass or write has finished, unpersists every pin
-    it made — in all three modes — and re-raises the first error.
+    Every internal pin (the session stream and each dense-id layout,
+    DISK_ONLY) is released before the call returns, on success and on
+    error alike.  On error (a numbering pass or a write raises) the
+    call first waits until every concurrent pass or write has finished,
+    then re-raises the first error.
     """
-    spark = raw_lines.sparkSession
     pins: list[DataFrame] = []
-    done = False
     try:
         tables = _numbered_tables(
             raw_lines, runways, airport, altitude_below, session_gap_s, pins
         )
-        if output_path is not None:
-            tables = _run_all(
-                spark,
-                "write",
-                {
-                    name: partial(_write_table, name, df, f"{output_path}/{name}")
-                    for name, df in tables.items()
-                },
-            )
-        elif caches is not None:
-            caches.extend(pins)
-        done = True
-        return tables
+        return _run_all(
+            raw_lines.sparkSession,
+            "write",
+            {
+                name: partial(_write_table, name, df, f"{output_path}/{name}")
+                for name, df in tables.items()
+            },
+        )
     finally:
-        if output_path is not None or not done:
-            release_caches(pins)
+        release_caches(pins)
 
 
 def _numbered_tables(
@@ -177,7 +162,7 @@ def _numbered_tables(
     admissible = (F.col("transmission_type") == 2) | (
         (F.col("transmission_type") == 3)
         & F.col("altitude").isNotNull()
-        & (F.col("altitude") > F.lit(-1000.0))
+        & (F.col("altitude") > F.lit(parse.ADMISSION_ALT_ABOVE))
         & (F.col("altitude") < F.lit(altitude_below))
     )
 

@@ -143,17 +143,6 @@ def _silence_bounded_window_warning(spark: SparkSession) -> None:
         pass  # non-log4j2 deployments keep the (harmless) warning
 
 
-def configure_for_engine(spark: SparkSession) -> SparkSession:
-    """Apply the session-level confs the engine's semantics rely on to an
-    externally-created session (e.g. the verification driver's).
-
-    Only runtime-settable confs; safe to call repeatedly.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark
-
-
 @contextmanager
 def job_scope(name: str):
     """Name every Spark job started inside the block (or the decorated

@@ -456,13 +456,13 @@ def range_ring_vertices(
 NTE_RING_RADII_KM = (5.0, 10.0, 25.0, 50.0)
 
 
-def nte_range_rings(spark: SparkSession, points: int = 36) -> DataFrame:
-    """Seed meta.range_rings: one MultiLineString (single closed part)
-    per radius around LFRS."""
+def nte_range_rings(spark: SparkSession) -> DataFrame:
+    """Seed meta.range_rings: one MultiLineString (single closed part,
+    36 points) per radius around LFRS."""
     from ..schemas import RANGE_RING_SCHEMA
 
     rows = [
-        (i + 1, r, "LFRS", [range_ring_vertices(-1.607778, 47.156944, r, points)])
+        (i + 1, r, "LFRS", [range_ring_vertices(-1.607778, 47.156944, r)])
         for i, r in enumerate(NTE_RING_RADII_KM)
     ]
     return literal_dim(spark, rows, RANGE_RING_SCHEMA)

@@ -1,11 +1,12 @@
 """End-to-end streaming pipeline assembly (SURVEY §3.1 Spark shape):
 
 readStream(socket|text) → parse/normalize (select/filter, SRC-3 +
-PRJ-1..4 + FLT-1/3) → groupBy(hexident) → stateful session operator
-(sessions + edges + debounce, ``state.advance_session``): by default
-the row-based ``transformWithState`` processor (streaming.tws), with
-the legacy ``applyInPandasWithState`` handler (streaming.state) as
-the fallback when no compatible protobuf runtime is installed (see
+PRJ-1..4 + FLT-3) → groupBy(hexident) → stateful session operator
+(FLT-1/2 admission, sessions + edges + debounce,
+``state.advance_session``): by default the row-based
+``transformWithState`` processor (streaming.tws), with the legacy
+``applyInPandasWithState`` handler (streaming.state) as the fallback
+when no compatible protobuf runtime is installed (see
 :func:`resolve_stream_engine`) → [events stream] → foreachBatch:
 runway attribution (JOIN-5, the batch operator's own
 ``attribution.runway_attributor``, decided once at wire-up) + sinks
@@ -37,8 +38,8 @@ def parsed_stream(raw_lines: DataFrame) -> DataFrame:
 
     No global altitude filter: the reference applies the filter ONLY to
     the MSG3 admission test (flights.py:97-108 CASE B) — the stateful
-    handler enforces it at admission (run.py:28 wires below=10000,
-    which the handler's ADMISSION_* defaults mirror).
+    handler enforces it at admission (run.py:28 wires below=10000:
+    ``parse.ADMISSION_ALT_ABOVE``/``ADMISSION_ALT_BELOW``).
     """
     msgs = parse.parse_sbs1_lines(raw_lines)
     msgs = parse.dispatch_fields(msgs)
@@ -48,17 +49,13 @@ def parsed_stream(raw_lines: DataFrame) -> DataFrame:
     )
 
 
-def event_stream(parsed: DataFrame, watermark: str | None = None) -> DataFrame:
-    """The stateful core: keyed session state emitting landing/takeoff
-    events and timeout flight summaries.
-
-    ``watermark`` (e.g. '5 minutes') enables the event-time mode
-    (STATE-8) — the reference itself has NO watermark (its eviction is
-    processing-time), so the default stays None for parity; pass one
-    when composing with event-time windowed aggregations downstream.
+def event_stream(parsed: DataFrame) -> DataFrame:
+    """The stateful core on the legacy ``applyInPandasWithState``
+    engine: keyed session state emitting landing/takeoff events and
+    timeout flight summaries.  No watermark — the reference's eviction
+    is processing-time; event-time windows with a watermark (STATE-8)
+    are :func:`windowed_event_counts`.
     """
-    if watermark is not None:
-        parsed = parsed.withWatermark("gen_date_time", watermark)
     return parsed.groupBy("hexident").applyInPandasWithState(
         sessionize_updates,
         outputStructType=EVENT_OUTPUT_SCHEMA,
@@ -192,7 +189,7 @@ def start_pipeline(
         # surfaced to the operator.
         from .tws import _latest_tws_metadata
 
-        if _latest_tws_metadata(checkpoint_dir, 0) is not None:
+        if _latest_tws_metadata(checkpoint_dir) is not None:
             raise RuntimeError(
                 f"checkpoint {checkpoint_dir!r} was written by the TWS "
                 "(transformWithState) engine, but the resolved engine "

@@ -10,15 +10,16 @@ in this module (:func:`sessionize_updates`) is the fallback (see
 ``pipeline.resolve_stream_engine``).  The state machine:
 
 - STATE-1 session pool with inactivity timeout (MAX_AGE 300 s,
-  processing-time, exactly the reference's eviction semantics: a
-  processing-time timer in the TWS processor,
-  GroupStateTimeout.ProcessingTimeTimeout in the legacy handler);
+  ``sessionize.SESSION_MAX_AGE_S``; processing-time, exactly the
+  reference's eviction semantics: a processing-time timer in the TWS
+  processor, GroupStateTimeout.ProcessingTimeTimeout in the legacy
+  handler);
 - STATE-2 per-session accumulation (first/last_seen, last-non-null
   field values per the MSG-type dispatch);
 - STATE-3 onground edge detection (False→True landing, True→False
   takeoff; first observation initializes only);
-- STATE-4 2 s debounce against the last candidate event (clock
-  advances on suppressed candidates too);
+- STATE-4 2 s debounce (``events.EVENT_DEBOUNCE_S``) against the last
+  candidate event (clock advances on suppressed candidates too);
 - STATE-5 emission of event rows for downstream attribution (the
   dataflow edge replaces the reference's pub/sub callbacks, STATE-6).
 
@@ -34,6 +35,10 @@ from typing import Any
 
 import pandas as pd
 
+from ..operators.events import EVENT_DEBOUNCE_S
+from ..operators.parse import ADMISSION_ALT_ABOVE, ADMISSION_ALT_BELOW
+from ..operators.sessionize import SESSION_MAX_AGE_S
+
 EVENT_OUTPUT_SCHEMA = (
     "hexident string, kind string, event_time timestamp, "
     "longitude double, latitude double, track double, "
@@ -47,12 +52,10 @@ STATE_SCHEMA = (
     "last_lon double, last_lat double, prev_lon double, prev_lat double"
 )
 
-SESSION_TIMEOUT_MS = 300_000  # flights.py:18 MAX_AGE (300 s)
-DEBOUNCE_US = 2_000_000  # models.py:268 (2 s)
-# run.py:28 admission filter bounds (AdsbMessageFilter(below=10000));
-# the reference filter is strict: MSG3 without altitude is rejected
-ADMISSION_ALT_BELOW = 10000.0
-ADMISSION_ALT_ABOVE = -1000.0
+# The batch operators define the rules; the handler reads them in the
+# units it clocks in.
+SESSION_TIMEOUT_MS = SESSION_MAX_AGE_S * 1_000
+DEBOUNCE_US = int(EVENT_DEBOUNCE_S * 1_000_000)
 
 
 def _interp_track(prev_lon, prev_lat, lon, lat) -> float | None:
@@ -125,9 +128,10 @@ def advance_session(
         # flight), so skip BEFORE the admission test.
         if pd.isna(row.gen_date_time):
             continue
-        # FLT-2 admission (flights.py:86-108 CASE B): until a
-        # flight exists, only MSG2, or MSG3 passing the strict
-        # altitude filter, creates it; other messages are dropped.
+        # FLT-1/FLT-2 admission (flights.py:86-108 CASE B): until a
+        # flight exists, only MSG2, or MSG3 with an altitude inside
+        # parse's admission band, creates it; other messages are
+        # dropped.
         if not admitted:
             tt0 = row.transmission_type
             ok = tt0 == 2 or (

@@ -104,9 +104,10 @@ TWS_STATE_NAME = "session_v2"
 TWS_OPERATOR_NAME = "transformWithStateInPySparkExec"
 
 
-def _latest_tws_metadata(checkpoint_dir: str, operator_id: int) -> str | None:
-    """Content of the NEWEST ``state/<op>/_metadata/v2/<batch>`` file,
-    or None for a fresh/absent checkpoint.
+def _latest_tws_metadata(checkpoint_dir: str) -> str | None:
+    """Content of the NEWEST ``state/0/_metadata/v2/<batch>`` file (the
+    query's one stateful operator), or None for a fresh/absent
+    checkpoint.
 
     Resolution order (round-9 advisor: the guard must also cover the
     at-scale deployments it exists for): the Hadoop FileSystem API of
@@ -122,7 +123,7 @@ def _latest_tws_metadata(checkpoint_dir: str, operator_id: int) -> str | None:
     from pyspark.sql import SparkSession
 
     meta_dir = posixpath.join(
-        checkpoint_dir, "state", str(operator_id), "_metadata", "v2"
+        checkpoint_dir, "state", "0", "_metadata", "v2"
     )
     spark = SparkSession.getActiveSession()
     if spark is not None:
@@ -190,11 +191,7 @@ def _warn_unguarded(meta_dir: str, exc: Exception) -> None:
     )
 
 
-def assert_checkpoint_state_compatible(
-    checkpoint_dir: str,
-    expected_state_name: str = TWS_STATE_NAME,
-    operator_id: int = 0,
-) -> None:
+def assert_checkpoint_state_compatible(checkpoint_dir: str) -> None:
     """Raise before restart if ``checkpoint_dir`` was written by a TWS
     processor whose user state variables or physical operator differ
     from this handler's.
@@ -231,7 +228,7 @@ def assert_checkpoint_state_compatible(
     """
     import json
 
-    content = _latest_tws_metadata(checkpoint_dir, operator_id)
+    content = _latest_tws_metadata(checkpoint_dir)
     if content is None:
         return
     try:
@@ -245,11 +242,11 @@ def assert_checkpoint_state_compatible(
         operator = meta.get("operatorInfo", {}).get("operatorName")
     except (ValueError, KeyError, IndexError, AttributeError):
         return  # malformed metadata: defer to Spark's own validation
-    if names and names != {expected_state_name}:
+    if names and names != {TWS_STATE_NAME}:
         raise RuntimeError(
             f"checkpoint {checkpoint_dir!r} was written with TWS state "
             f"variables {sorted(names)}, but this handler uses "
-            f"{expected_state_name!r}. Spark would restart cleanly and "
+            f"{TWS_STATE_NAME!r}. Spark would restart cleanly and "
             "silently DROP every in-flight session stored under the old "
             "name. Either drain the old query with its original handler "
             "and restart on a fresh checkpoint directory, or migrate the "
@@ -265,7 +262,7 @@ def assert_checkpoint_state_compatible(
             "on a fresh checkpoint directory, or migrate the in-flight "
             "sessions to a fresh checkpoint with "
             "legacy_session_initial_state(spark, "
-            f"{checkpoint_dir!r}, state_name={expected_state_name!r}) + "
+            f"{checkpoint_dir!r}, state_name={TWS_STATE_NAME!r}) + "
             "event_stream_tws(..., initial_state=...)."
         )
 
@@ -283,7 +280,6 @@ def legacy_session_initial_state(
     spark,
     checkpoint_dir: str,
     state_name: str = "session",
-    operator_id: int = 0,
 ) -> DataFrame:
     """The in-flight sessions of a pre-``session_v2`` checkpoint as an
     initial-state frame for :func:`event_stream_tws` — the MIGRATION
@@ -317,7 +313,7 @@ def legacy_session_initial_state(
     df = (
         spark.read.format("statestore")
         .option("stateVarName", state_name)
-        .option("operatorId", operator_id)
+        .option("operatorId", 0)
         .load(checkpoint_dir)
     )
     from pyspark.sql import functions as F

@@ -305,6 +305,25 @@ def test_update_cluster_map_matches_full_rebuild(spark):
     assert rows_of(update_cluster_map(old, old_map, empty, **kw)) == \
         rows_of(old_map)
 
+    # replica-heavy batch spread over 4 partitions: one text ×100 new
+    # ids plus a replica of old cluster A — every replica of a text
+    # lands in one `_h` / `component` window partition, so those
+    # windows see a 100-row key across input partitions
+    R = "one boilerplate page copied verbatim across a hundred crawls"
+    skew_rows = [(100 + i, R) for i in range(100)] + [(300, X)]
+    skew = spark.createDataFrame(
+        skew_rows, "doc_id long, text string"
+    ).repartition(4)
+    assert skew.rdd.getNumPartitions() >= 4
+    inc = rows_of(update_cluster_map(old, old_map, skew, threshold=0.5, **kw))
+    full = rows_of(build(spark.createDataFrame(
+        old_rows + skew_rows, "doc_id long, text string"
+    )))
+    assert inc == full
+    by_id = {r[0]: r for r in inc}
+    assert by_id[100][1] == by_id[199][1] == 100 and by_id[100][2] == 100
+    assert by_id[300][1] == by_id[0][1] == 0 and by_id[0][2] == 3
+
 
 def test_update_cluster_map_two_step_induction(spark):
     """The production loop is SUCCESSIVE increments: the map produced

@@ -750,21 +750,17 @@ def test_classify_intention_ground_only_session(spark):
     not 'enroute' (the old fall-through labeled it in-flight)."""
     from dump1090_postgis_spark.operators.events import classify_intention
 
+    # an all-NULL any_airborne reads as "never seen airborne"
     df = spark.createDataFrame(
-        [(1, True, True), (2, True, False), (3, False, True),
-         (4, None, None), (5, False, False)],
-        "id long, first_onground boolean, last_onground boolean",
+        [(1, True, True, None), (2, True, False, None),
+         (3, False, True, None), (4, None, None, None),
+         (5, False, False, None)],
+        "id long, first_onground boolean, last_onground boolean, "
+        "any_airborne boolean",
     )
-    import warnings as _w
-
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        out = {r.id: r.intention for r in classify_intention(df).collect()}
+    out = {r.id: r.intention for r in classify_intention(df).collect()}
     assert out == {1: "unknown", 2: "departure", 3: "arrival",
                    4: "unknown", 5: "enroute"}
-    # missing any_airborne downgrades gate-to-gate flights to
-    # 'unknown' — legal, but loud (round-11 verdict watch item)
-    assert any("any_airborne" in str(w.message) for w in caught)
     # with the airborne-in-between signal (round-10 advisor): a
     # complete gate-to-gate flight follows the reference's
     # first-position-onground rule → departure; taxi-only (never

@@ -1,7 +1,7 @@
 """Parser semantics vs the reference (adsb_parser.py):
 NULL-on-failed-cast, empty-callsign→NULL+trim, wire booleans,
-timestamp format, malformed-line gate, altitude filter modes,
-MSG-field dispatch, position validity."""
+timestamp format, malformed-line and regex gates, MSG-field dispatch,
+position validity."""
 
 import datetime
 import os
@@ -81,33 +81,11 @@ def test_unicode_callsign_passes_gate(spark):
     assert len(rows) == 1 and rows[0].callsign == "ÖSTÛ12"
 
 
-def test_lenient_mode_failed_cast_is_null(spark):
-    """validate=False (engine extension): keep the row, NULL the
-    failing field — the reference's ValueError→None path
-    (adsb_parser.py:256-261) generalized past its regex."""
-    rows = parse.parse_sbs1_lines(spark.read.text(FAULTY), validate=False).collect()
-    bad = [r for r in rows if r.hexident == "BADALT"][0]
-    assert bad.altitude is None
-    assert bad.latitude == pytest.approx(47.33)
-
-
 def test_empty_field_is_null_within_valid_line(parsed_ok):
     """The cast-fail→NULL path the reference DOES reach: an empty
     altitude ('' passes [\\d-]*, int('') raises → None)."""
     msg1 = [r for r in parsed_ok if r.transmission_type == 1][0]
     assert msg1.altitude is None
-
-
-def test_altitude_filter_modes(spark):
-    df = parse.parse_sbs1_lines(spark.read.text(FAULTY), validate=False)
-    # band: -1000 < alt < 100000 → -25 passes, -1000 rejected
-    loose = parse.altitude_filter(df, above=-1000, below=100000, strict=False)
-    alts = [r.altitude for r in loose.collect()]
-    assert -25 in alts and -1000 not in alts
-    assert None in alts  # non-strict passes NULL altitude through
-    # strict is the DEFAULT (adsb_parser.py:322 hard-codes strict=True)
-    strict = parse.altitude_filter(df, above=-1000, below=100000)
-    assert all(r.altitude is not None for r in strict.collect())
 
 
 def test_field_dispatch(spark):
@@ -122,10 +100,20 @@ def test_field_dispatch(spark):
 
 
 def test_position_validity(spark):
-    df = parse.parse_sbs1_lines(spark.read.text(FAULTY), validate=False)
+    lines = [
+        "MSG,3,1,1,3C6589,1,2024/05/01,06:02:00.000,2024/05/01,"
+        "06:02:00.100,,-25,,,47.31000,-1.71000,,,0,,0,0",
+        "MSG,3,1,1,00B0F0,1,2024/05/01,06:02:06.000,2024/05/01,"
+        "06:02:06.100,,5000,,,,,,,0,,0,0",
+    ]
+    df = parse.parse_sbs1_lines(
+        spark.createDataFrame([(l,) for l in lines], "value string")
+    )
+    assert df.count() == 2  # both lines pass the gates
     pos = parse.position_validity(df).collect()
-    # NOPOS0 has altitude but no lat/lon → excluded
-    assert all(r.hexident != "NOPOS0" for r in pos)
+    # 00B0F0 has altitude but no lat/lon → excluded
+    assert all(r.hexident != "00B0F0" for r in pos)
+    assert [r.hexident for r in pos] == ["3C6589"]
 
 
 def test_altitude_m_conversion(spark):

@@ -289,8 +289,6 @@ def test_parser_matches_reference_semantics_twin(spark, lines):
         key=repr,
     )
     assert got == want
-    # the lenient engine extension only ever ADDS rows
-    assert parse_sbs1_lines(df, validate=False).count() >= len(want)
 
 
 # ---------------------------------------------------------------------------
@@ -578,10 +576,9 @@ _ID_SPINE = [("span", k) for k in range(0, 100, 4)]
         ),
         max_size=40,
     ),
-    offset=st.integers(min_value=0, max_value=3),
 )
-def test_dense_ids_group_col_numbers_each_group_densely(spark, rows, offset):
-    """Per group, ids are exactly offset+1..offset+n in order_cols order
+def test_dense_ids_group_col_numbers_each_group_densely(spark, rows):
+    """Per group, ids are exactly 1..n in order_cols order
     however the group's rows spread over the range partitions; without
     group_col the same rows get one global dense rank."""
     from pyspark.sql import functions as F
@@ -595,7 +592,7 @@ def test_dense_ids_group_col_numbers_each_group_densely(spark, rows, offset):
     df = spark.createDataFrame(data, "g string, k int, i int")
     caches = []
     grouped = with_dense_ids(
-        df, ["k", "i"], "id", offset=offset, caches=caches, group_col="g"
+        df, ["k", "i"], "id", caches=caches, group_col="g"
     ).collect()
     layout = caches[0]
     assert layout.select("_pid").distinct().count() >= 4
@@ -604,18 +601,16 @@ def test_dense_ids_group_col_numbers_each_group_densely(spark, rows, offset):
         >= 2
     )
     flat = with_dense_ids(
-        df.select("k", "i"), ["k", "i"], "id", offset=offset, caches=caches
+        df.select("k", "i"), ["k", "i"], "id", caches=caches
     ).collect()
     release_caches(caches)
 
     for g in {r[0] for r in data}:
         ordered = sorted((k, i) for gg, k, i in data if gg == g)
         got = sorted(((r.k, r.i), r.id) for r in grouped if r.g == g)
-        assert got == [
-            (key, offset + n) for n, key in enumerate(ordered, start=1)
-        ]
+        assert got == [(key, n) for n, key in enumerate(ordered, start=1)]
     assert len(grouped) == len(data)
     ordered = sorted((k, i) for _, k, i in data)
     assert sorted(((r.k, r.i), r.id) for r in flat) == [
-        (key, offset + n) for n, key in enumerate(ordered, start=1)
+        (key, n) for n, key in enumerate(ordered, start=1)
     ]

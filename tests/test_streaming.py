@@ -853,6 +853,28 @@ def test_advance_session_core_resumes_from_state():
     assert [e["kind"] for e in ev1 + ev2] == [e["kind"] for e in ev_all]
 
 
+def test_advance_session_admission_band():
+    """FLT-1 at live admission: an MSG3 admits a flight only with an
+    altitude strictly inside parse's band — the band the batch ETL
+    admits with; a NULL altitude is rejected (strict filter)."""
+    from dump1090_postgis_spark.operators.parse import (
+        ADMISSION_ALT_ABOVE,
+        ADMISSION_ALT_BELOW,
+    )
+    from dump1090_postgis_spark.streaming.state import advance_session
+
+    def admits(alt):
+        return advance_session("AAA", None, iter([_msg(0, alt=alt)]))[0]
+
+    assert admits(ADMISSION_ALT_BELOW - 1)
+    assert admits(ADMISSION_ALT_ABOVE + 1)
+    assert not admits(ADMISSION_ALT_BELOW)
+    assert not admits(ADMISSION_ALT_ABOVE)
+    assert not admits(None)
+    # an MSG2 admits without an altitude
+    assert advance_session("AAA", None, iter([_msg(0, tt=2, alt=None)]))[0]
+
+
 def test_tws_processor_full_lifecycle_matches_legacy(spark):
     """Execute streaming/tws.py's SessionProcessor end-to-end — init →
     one handleInputRows call per message → handleExpiredTimer eviction
