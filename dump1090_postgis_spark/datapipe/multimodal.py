@@ -25,11 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DECODE_SCHEMA = (
-    "doc_id bigint, byte_len bigint, format string, width int, height int, ok boolean"
-)
-
-
 def _id_schema(df: DataFrame, id_col: str) -> str:
     """``"<id_col> <its actual type>"`` for the mapInPandas output
     schemas: hard-coding ``doc_id bigint`` crashed string-keyed
@@ -322,11 +317,6 @@ def resize_meta(
             F.greatest(F.lit(1), F.floor(h * scale).cast("int")),
         ).alias("out_h"),
     )
-
-
-FEATURE_SCHEMA = (
-    "doc_id bigint, bin int, value double"
-)
 
 
 def byte_histogram_features(

@@ -34,6 +34,7 @@ scheduler pool) through ``pyspark.util.inheritable_thread_target``, so
 
 Job names (``session.job_scope``): every job of the build is described
 ``plans.etl.build_tables / <task>``, where the task is
+``pin:sessions`` (loading the session stream's pin),
 ``number:flights|positions|events`` or
 ``write:flights|positions|landings|takeoffs``, plus the scoped
 operator inside it when there is one.
@@ -184,6 +185,11 @@ def _numbered_tables(
         .persist(StorageLevel.DISK_ONLY)
     )
     pins.append(sess)
+    # Load the pin before the numbering passes start: a pass whose
+    # query starts before the pin is loaded materializes it again
+    # (AQE's table-cache query stage), once per such pass.
+    with job_scope("pin:sessions"):
+        sess.count()
     # positions and events rank by (time, flight_id) without the ids
     by_time_then_flight = ["time", "_adm_ts", *key]
 

@@ -3,8 +3,6 @@ SQLAlchemy models / DDL, see SURVEY.md §1.2).
 
 Reference evidence:
 - message fields: /root/reference/src/dump1090_postgis/adsb_parser.py:176-219
-- flights/positions/landings/takeoffs DDL:
-  /root/reference/database/sql/create_public_schema.sql:539-683
 - dimension tables: /root/reference/database/sql/create_meta_schema.sql:40-184
 
 Geometry mapping: the reference stores PostGIS POINTZ / Polygon
@@ -48,80 +46,6 @@ SBS1_FIELDS = [
 ]
 
 N_SBS1_FIELDS = len(SBS1_FIELDS)  # 22 — the malformed-line gate (SRC-3)
-
-# Raw, all-string CSV schema for from_csv (strings so that failed casts
-# can be applied explicitly with NULL-on-failure parity, PRJ-2).
-SBS1_RAW_SCHEMA = T.StructType(
-    [T.StructField(f, T.StringType(), True) for f in SBS1_FIELDS]
-)
-
-# ---------------------------------------------------------------------------
-# Normalized ADS-B message (post parse/normalize, PRJ-1..5).
-# Types per adsb_parser.py:197-219; failed cast → NULL.
-# ---------------------------------------------------------------------------
-
-ADSB_MESSAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("transmission_type", T.IntegerType(), True),
-        T.StructField("session", T.IntegerType(), True),
-        T.StructField("aircraft", T.IntegerType(), True),
-        T.StructField("hexident", T.StringType(), True),
-        T.StructField("flight", T.IntegerType(), True),
-        T.StructField("gen_date_time", T.TimestampType(), True),
-        T.StructField("log_date_time", T.TimestampType(), True),
-        T.StructField("callsign", T.StringType(), True),
-        T.StructField("altitude", T.IntegerType(), True),      # feet
-        T.StructField("speed", T.IntegerType(), True),
-        T.StructField("track", T.IntegerType(), True),
-        T.StructField("latitude", T.DoubleType(), True),
-        T.StructField("longitude", T.DoubleType(), True),
-        T.StructField("verticalrate", T.IntegerType(), True),
-        T.StructField("squawk", T.IntegerType(), True),
-        T.StructField("alert", T.BooleanType(), True),
-        T.StructField("emergency", T.BooleanType(), True),
-        T.StructField("spi", T.BooleanType(), True),
-        T.StructField("onground", T.BooleanType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Core output tables (create_public_schema.sql:539-683)
-# ---------------------------------------------------------------------------
-
-FLIGHT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("hexident", T.StringType(), False),
-        T.StructField("callsign", T.StringType(), True),
-        T.StructField("first_seen", T.TimestampType(), False),
-        T.StructField("last_seen", T.TimestampType(), True),
-        # enroute | departure | arrival | unknown (models.py:37-49)
-        T.StructField("intention", T.StringType(), True),
-    ]
-)
-
-POSITION_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("flight_id", T.LongType(), False),
-        T.StructField("time", T.TimestampType(), False),
-        T.StructField("longitude", T.DoubleType(), True),
-        T.StructField("latitude", T.DoubleType(), True),
-        T.StructField("altitude_m", T.DoubleType(), True),  # meters (PRJ-5)
-        T.StructField("verticalrate", T.ShortType(), True),
-        T.StructField("track", T.ShortType(), True),
-        T.StructField("onground", T.BooleanType(), True),
-    ]
-)
-
-EVENT_SCHEMA = T.StructType(  # landings / takeoffs (create_public_schema.sql:316-321)
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("flight_id", T.LongType(), False),
-        T.StructField("time", T.TimestampType(), False),
-        T.StructField("runway", T.StringType(), False),  # '03' | '21' | 'UNK'
-    ]
-)
 
 # ---------------------------------------------------------------------------
 # Dimension tables (create_meta_schema.sql, read via SRC-4 CSV loaders)

@@ -29,6 +29,11 @@ from ..streaming.state import (
     STATE_SCHEMA,
     sessionize_updates,
 )
+from ..streaming.tws import (
+    ROCKSDB_PROVIDER,
+    assert_checkpoint_state_compatible,
+    event_stream_tws,
+)
 
 COMMIT_PERIOD = "1 second"  # flights.py:20 DB_COMMIT_PERIOD
 
@@ -150,54 +155,38 @@ def start_pipeline(
     cached: a ``sink_fn`` that takes more than one action on it must
     persist it (and unpersist it when done), or each action re-runs
     the whole micro-batch, stateful session operator included — see
-    :func:`..streaming.sinks.parquet_event_sink`.  Pass ``runways`` (and
+    :func:`..streaming.sinks.parquet_event_sink`.  It must also read
+    every partition of ``batch_df``: Spark 4.1 fails the query with
+    ``STATE_STORE_COMMIT_VALIDATION_FAILED`` after a batch whose sink
+    left the session state uncommitted (e.g. a sink that takes no
+    action, or only ``limit``/``show``).  Pass ``runways`` (and
     optionally ``airport_bbox``) to run STATE-5 runway attribution
     inside the batch sink — ``sink_fn`` then receives events WITH the
     ``runway`` column, matching the batch ETL's attributed edges.
 
     ``engine``: ``'auto'`` (default — TWS when available, see
-    :func:`resolve_stream_engine`), ``'tws'``, or ``'legacy'``.  On
-    the TWS path this (a) verifies ``checkpoint_dir`` wasn't written
-    by an incompatibly-named state schema or another stateful operator
-    (:func:`..streaming.tws.assert_checkpoint_state_compatible` —
-    Spark would otherwise restart CLEANLY and silently drop in-flight
-    sessions, or fail inside the query without saying how to
-    migrate), and (b) sets the session's state-store provider to
-    RocksDB if no provider is configured (TWS requires it; RocksDB is
-    also valid for any concurrently-started legacy query)."""
+    :func:`resolve_stream_engine`), ``'tws'``, or ``'legacy'``.  Before
+    the query starts, one guard reads ``checkpoint_dir`` through Spark's
+    ``state-metadata`` source
+    (:func:`..streaming.tws.assert_checkpoint_state_compatible`, one
+    job) and refuses a checkpoint whose session state the resolved
+    engine cannot resume: one written by the other engine or by another
+    stateful operator, which Spark would reject inside the query without
+    saying how to migrate, or a TWS one with renamed state variables,
+    whose in-flight sessions Spark would silently drop.  A fresh
+    directory passes; a checkpoint URI Spark cannot reach fails the
+    start.  On the TWS path the session's state-store provider is set
+    to RocksDB if none is configured (TWS requires it; RocksDB is also
+    valid for any concurrently-started legacy query)."""
     resolved = resolve_stream_engine(engine)
+    spark = raw_stream.sparkSession
+    assert_checkpoint_state_compatible(spark, checkpoint_dir, resolved)
     if resolved == "tws":
-        from .tws import (
-            ROCKSDB_PROVIDER,
-            assert_checkpoint_state_compatible,
-            event_stream_tws,
-        )
-
-        assert_checkpoint_state_compatible(checkpoint_dir)
-        spark = raw_stream.sparkSession
         key = "spark.sql.streaming.stateStore.providerClass"
         if spark.conf.get(key, None) in (None, ""):
             spark.conf.set(key, ROCKSDB_PROVIDER)
         events = event_stream_tws(parsed_stream(raw_stream))
     else:
-        # the mirror-image guard: engine='auto' resolves to 'legacy'
-        # when the protobuf transport is ABSENT — if the checkpoint
-        # was written by a TWS run (protobuf since removed/downgraded),
-        # restarting the applyInPandasWithState handler over it yields
-        # at best an opaque state-store failure and at worst silently
-        # dropped in-flight sessions, with the engine flip never
-        # surfaced to the operator.
-        from .tws import _latest_tws_metadata
-
-        if _latest_tws_metadata(checkpoint_dir) is not None:
-            raise RuntimeError(
-                f"checkpoint {checkpoint_dir!r} was written by the TWS "
-                "(transformWithState) engine, but the resolved engine "
-                f"is {resolved!r} (protobuf transport unavailable or "
-                "engine forced). Restore the protobuf runtime (or pass "
-                "engine='tws'), or start the legacy engine on a FRESH "
-                "checkpoint directory."
-            )
         events = event_stream(parsed_stream(raw_stream))
     if runways is not None:
         sink_fn = attributing_sink(runways, airport_bbox, sink_fn)

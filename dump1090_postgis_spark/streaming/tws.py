@@ -30,6 +30,14 @@ dispatches ``engine='auto'`` to it; the legacy
 ``applyInPandasWithState`` handler remains for HDFS-backed state and
 protobuf-less environments.
 
+Restarts: one guard serves both engines.
+:func:`assert_checkpoint_state_compatible` reads the checkpoint through
+Spark's own ``state-metadata`` source and, before the query starts,
+refuses state the resolved engine cannot resume — another engine's or
+another operator's, or this handler's under a renamed state variable —
+naming the migration routes.  A checkpoint URI Spark cannot reach fails
+the start.
+
 Per-key cost: every ValueState/timer call is ONE protobuf message over
 the Python↔JVM state-server socket (see
 ``pyspark.sql.streaming.value_state_client``).  A key with input rows
@@ -49,10 +57,11 @@ in a batch costs THREE round trips — the runtime's
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 from operator import attrgetter
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.stateful_processor import (
     ExpiredTimerInfo,
@@ -89,182 +98,109 @@ ROCKSDB_PROVIDER = (
 #: session stored under the old ``"session"`` name (measured on this
 #: Spark build: old-name checkpoint → new processor → batches commit
 #: cleanly, no error).  The loud failure is therefore driver-side:
-#: :func:`assert_checkpoint_state_compatible` reads the checkpoint's
-#: operator metadata and raises BEFORE the query starts when the
-#: recorded state-variable names don't match this handler's.  Bump
-#: the suffix AND keep the guard on any future schema change.
+#: :func:`assert_checkpoint_state_compatible` raises BEFORE the query
+#: starts when the recorded state-variable names don't match this
+#: handler's.  Bump the suffix on any future schema change.
 TWS_STATE_SCHEMA = STATE_SCHEMA + ", deadline_ms long, timer_armed boolean"
 TWS_STATE_NAME = "session_v2"
 
-#: Physical operator that runs :class:`SessionProcessor` (row-based
-#: ``transformWithState``).  Spark refuses to restart a checkpoint
-#: written by another operator (``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_
-#: IN_STATE_METADATA``) — :func:`assert_checkpoint_state_compatible`
-#: turns that into a refusal that says how to migrate.
-TWS_OPERATOR_NAME = "transformWithStateInPySparkExec"
+#: The physical operator each live engine's session stage runs, as a
+#: checkpoint's operator metadata records it.  Spark refuses to
+#: restart a checkpoint written by another operator
+#: (``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``), but
+#: only inside the started query and without saying how to migrate —
+#: :func:`assert_checkpoint_state_compatible` refuses first.
+ENGINE_OPERATORS = {
+    "tws": "transformWithStateInPySparkExec",
+    "legacy": "applyInPandasWithState",
+}
 
 
-def _latest_tws_metadata(checkpoint_dir: str) -> str | None:
-    """Content of the NEWEST ``state/0/_metadata/v2/<batch>`` file (the
-    query's one stateful operator), or None for a fresh/absent
-    checkpoint.
+def assert_checkpoint_state_compatible(
+    spark: SparkSession, checkpoint_dir: str, engine: str
+) -> None:
+    """Raise before the query starts if ``engine`` (``'tws'`` |
+    ``'legacy'``) cannot resume the session state in ``checkpoint_dir``.
 
-    Resolution order (round-9 advisor: the guard must also cover the
-    at-scale deployments it exists for): the Hadoop FileSystem API of
-    the ACTIVE SparkSession — which handles ``hdfs://`` / ``s3a://`` /
-    ``file:`` checkpoints, exactly the set the streaming query itself
-    can write to — then plain ``os`` for local paths when no session
-    is up.  A directory that EXISTS but cannot be inspected logs a
-    loud warning instead of silently disarming the guard."""
-    import logging
-    import os
-    import posixpath
+    The checkpoint is read only through Spark's ``state-metadata``
+    source (one job): a row per state store of each stateful operator,
+    with its ``operatorName`` and, for a transformWithState operator,
+    its ``stateVariables`` in ``operatorProperties``.  Two mismatches
+    are refused:
 
-    from pyspark.sql import SparkSession
+    - an operator other than the engine's (:data:`ENGINE_OPERATORS`):
+      the other live engine, e.g. after ``engine='auto'`` switched
+      engines because a protobuf runtime appeared or went away, or the
+      pandas flavour of this processor
+      (``transformWithStateInPandasExec``).  Spark would fail the
+      restart inside the query;
+    - user state variables (internal ``$`` names aside) other than
+      ``TWS_STATE_NAME``: Spark accepts the rename as schema evolution
+      and would silently drop every in-flight session stored under the
+      old name.
 
-    meta_dir = posixpath.join(
-        checkpoint_dir, "state", "0", "_metadata", "v2"
-    )
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        try:
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(meta_dir)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            if not fs.exists(jpath):
-                return None  # fresh checkpoint
-            batches = sorted(
-                int(st.getPath().getName())
-                for st in fs.listStatus(jpath)
-                if st.getPath().getName().isdigit()
-            )
-            if not batches:
-                return None
-            stream = fs.open(
-                jvm.org.apache.hadoop.fs.Path(
-                    posixpath.join(meta_dir, str(batches[-1]))
-                )
-            )
-            try:
-                return jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-        except Exception as exc:  # py4j/FS failure: fall through to os
-            logging.getLogger(__name__).warning(
-                "could not inspect TWS checkpoint metadata %r via the "
-                "Hadoop FileSystem API (%s); falling back to local-path "
-                "inspection", meta_dir, exc,
-            )
-    try:
-        batches = sorted(int(f) for f in os.listdir(meta_dir) if f.isdigit())
-        if not batches:
-            return None
-        with open(os.path.join(meta_dir, str(batches[-1]))) as fh:
-            return fh.read()
-    except FileNotFoundError as exc:
-        if "://" not in checkpoint_dir and not checkpoint_dir.startswith(
-            "file:"
-        ):
-            return None  # genuinely fresh LOCAL checkpoint
-        # a URI the local fallback cannot reach is NOT evidence of a
-        # fresh checkpoint — fall through to the loud disarm warning
-        _warn_unguarded(meta_dir, exc)
-        return None
-    except OSError as exc:
-        _warn_unguarded(meta_dir, exc)
-        return None
+    A fresh or absent directory has no rows and passes; so does
+    metadata Spark cannot read (the source logs
+    ``STDS_FAILED_TO_READ_OPERATOR_METADATA`` and returns no rows —
+    Spark's own validation owns such a checkpoint).  A checkpoint URI
+    Spark cannot reach raises the reader's error: the query could not
+    write its checkpoint there either.
 
-
-def _warn_unguarded(meta_dir: str, exc: Exception) -> None:
-    """The directory exists (or is a URI the local fallback cannot
-    reach) but can't be read: the guard is DISARMED for this restart —
-    say so loudly rather than silently passing, since an old-name
-    checkpoint would silently drop in-flight sessions."""
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "TWS checkpoint state-name guard could not inspect %r (%s): "
-        "proceeding UNGUARDED — a renamed state variable would "
-        "silently drop in-flight sessions", meta_dir, exc,
-    )
-
-
-def assert_checkpoint_state_compatible(checkpoint_dir: str) -> None:
-    """Raise before restart if ``checkpoint_dir`` was written by a TWS
-    processor whose user state variables or physical operator differ
-    from this handler's.
-
-    Spark records each stateful operator's name (``operatorInfo`` →
-    ``operatorName``) and state-variable names
-    (``operatorPropertiesJson`` → ``stateVariables``) in
-    ``state/<op>/_metadata/v2/<batch>``.  Two mismatches are refused:
-
-    - a renamed state variable: ACCEPTED by Spark (add/remove is legal
-      schema evolution), which here would silently drop every
-      in-flight session — this guard turns the rename into the loud
-      failure the version suffix was meant to provide;
-    - another operator, e.g. ``transformWithStateInPandasExec`` from
-      the pandas flavour of this processor: Spark fails the restart
-      inside the query with an error that does not say what to do.
-
-    A fresh/absent checkpoint passes; internal ``$procTimers_*``
-    variables are ignored; unreadable metadata CONTENT is ignored
-    (Spark's own validation owns malformed checkpoints), while an
-    UNINSPECTABLE directory logs a loud warning
-    (:func:`_latest_tws_metadata` — checked through the Hadoop
-    FileSystem API, so remote ``hdfs://``/``s3a://`` checkpoints are
-    covered too).
-
-    Migration: either drain the old query with its old handler (stop
-    the feed, let every session evict and emit) and start this handler
-    on a FRESH checkpoint directory, or carry the in-flight sessions
-    across with :func:`legacy_session_initial_state` (naming the
-    recorded state variable) + ``event_stream_tws(...,
-    initial_state=...)``, which reads the old column family via the
-    state-store reader and replays it into the new checkpoint's
-    ``session_v2`` on the first batch.
+    Migration: either drain the old query with the engine that wrote
+    it (stop the feed, let every session evict and emit) and start on
+    a FRESH checkpoint directory, or — from a transformWithState
+    checkpoint — carry the in-flight sessions across with
+    :func:`legacy_session_initial_state` (naming the recorded state
+    variable) + ``event_stream_tws(..., initial_state=...)``, which
+    replays them into the new checkpoint's ``session_v2`` on the first
+    batch.
     """
-    import json
-
-    content = _latest_tws_metadata(checkpoint_dir)
-    if content is None:
+    rows = (
+        spark.read.format("state-metadata").load(checkpoint_dir)
+        .select("operatorName", "operatorProperties").collect()
+    )
+    operators = {r.operatorName for r in rows}
+    names = {
+        v["stateName"]
+        for r in rows if r.operatorProperties
+        for v in json.loads(r.operatorProperties).get("stateVariables", [])
+        if not v["stateName"].startswith("$")
+    }
+    expected = ENGINE_OPERATORS[engine]
+    if operators <= {expected} and names <= {TWS_STATE_NAME}:
         return
-    try:
-        meta = json.loads(content.splitlines()[1])
-        props = json.loads(meta["operatorPropertiesJson"])
-        names = {
-            v["stateName"]
-            for v in props.get("stateVariables", [])
-            if not v["stateName"].startswith("$")
-        }
-        operator = meta.get("operatorInfo", {}).get("operatorName")
-    except (ValueError, KeyError, IndexError, AttributeError):
-        return  # malformed metadata: defer to Spark's own validation
-    if names and names != {TWS_STATE_NAME}:
-        raise RuntimeError(
-            f"checkpoint {checkpoint_dir!r} was written with TWS state "
-            f"variables {sorted(names)}, but this handler uses "
-            f"{TWS_STATE_NAME!r}. Spark would restart cleanly and "
-            "silently DROP every in-flight session stored under the old "
-            "name. Either drain the old query with its original handler "
-            "and restart on a fresh checkpoint directory, or migrate the "
-            "in-flight sessions with legacy_session_initial_state(...) + "
-            "event_stream_tws(..., initial_state=...)."
+    routes = [
+        "drain the old query with the engine that wrote it and restart "
+        "on a fresh checkpoint directory"
+    ]
+    if operators != {expected}:
+        problem = (
+            f"was written by the stateful operator {sorted(operators)}, but "
+            f"engine {engine!r} runs {expected!r}; Spark refuses that "
+            "restart inside the started query"
         )
-    if operator and operator != TWS_OPERATOR_NAME:
-        raise RuntimeError(
-            f"checkpoint {checkpoint_dir!r} was written by the stateful "
-            f"operator {operator!r}, but this handler runs "
-            f"{TWS_OPERATOR_NAME!r}; Spark refuses that restart. Either "
-            "drain the old query with its original handler and restart "
-            "on a fresh checkpoint directory, or migrate the in-flight "
-            "sessions to a fresh checkpoint with "
-            "legacy_session_initial_state(spark, "
-            f"{checkpoint_dir!r}, state_name={TWS_STATE_NAME!r}) + "
-            "event_stream_tws(..., initial_state=...)."
+        routes += [
+            f"restart it with engine={e!r}"
+            for e, op in ENGINE_OPERATORS.items() if {op} == operators
+        ]
+    else:
+        problem = (
+            f"was written with TWS state variables {sorted(names)}, but "
+            f"this handler uses {TWS_STATE_NAME!r}; Spark would restart "
+            "cleanly and silently DROP every in-flight session stored "
+            "under the old name"
         )
+    if engine == "tws" and names:
+        old = " or ".join(repr(n) for n in sorted(names))
+        routes.append(
+            "migrate the in-flight sessions to a fresh checkpoint with "
+            f"legacy_session_initial_state(spark, {checkpoint_dir!r}, "
+            f"state_name={old}) + event_stream_tws(..., initial_state=...)"
+        )
+    raise RuntimeError(
+        f"checkpoint {checkpoint_dir!r} {problem}. Either "
+        + ", or ".join(routes) + "."
+    )
 
 
 #: STATE_SCHEMA field names, in declaration order — the column

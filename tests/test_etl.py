@@ -206,19 +206,15 @@ def _descriptions_after(sc, last: int) -> list[str | None]:
 
 
 def test_output_path_jobs_are_named_per_scope(spark, tmp_path):
-    """Every job of a build is named after the build, its numbering
-    task or write, and the scoped operator inside it, and each scope
-    runs an exact number of jobs.  Two counts depend on thread timing,
-    and each one job of it is named here:
-
-    - numbering: each pass runs 5 jobs of its own, plus one job that
-      materializes the session pin (AQE's table-cache query stage) if
-      its query starts before the pin is loaded; the first pass to
-      reach the pin also runs the pin's 3 build jobs.  The events pass
-      plans the attribution first and sometimes starts after the load.
-    - write:takeoffs: this capture has no takeoffs.  AQE may drop the
-      empty join as soon as the takeoffs side's shuffle stage finishes,
-      or first broadcast the flight-id side (one job) at runtime."""
+    """Every job of a build is named after the build, its pin load,
+    numbering task or write, and the scoped operator inside it, and
+    each scope runs an exact number of jobs.  The session pin is loaded
+    (6 jobs) before the numbering passes start, so each pass runs its
+    own 5 and none materializes the pin again.  One count depends on
+    timing: this capture has no takeoffs, and in ``write:takeoffs`` AQE
+    may drop the empty join as soon as the takeoffs side's shuffle
+    stage finishes, or first broadcast the flight-id side (one job) at
+    runtime."""
     sc = spark.sparkContext
     raw = spark.createDataFrame([(l,) for l in CAPTURE], "value string")
     last = max(_jobs(sc), default=-1)
@@ -230,15 +226,14 @@ def test_output_path_jobs_are_named_per_scope(spark, tmp_path):
     assert descs and all("plans.etl.build_tables" in (d or "") for d in descs)
     per_scope = Counter(d.split("plans.etl.build_tables / ", 1)[1] for d in descs)
     dense = " / operators.ids.with_dense_ids"
-    numbering = {f"number:{t}{dense}" for t in ("flights", "positions", "events")}
-    writes = {"write:flights": 4, "write:positions": 7, "write:landings": 7}
-    assert set(per_scope) == numbering | set(writes) | {"write:takeoffs"}
-    assert {s: per_scope[s] for s in writes} == writes
+    exact = {
+        "pin:sessions": 6,
+        **{f"number:{t}{dense}": 5 for t in ("flights", "positions", "events")},
+        "write:flights": 4, "write:positions": 7, "write:landings": 7,
+    }
+    assert set(per_scope) == set(exact) | {"write:takeoffs"}
+    assert {s: per_scope[s] for s in exact} == exact, per_scope
     assert per_scope["write:takeoffs"] in (5, 6)
-    first_pass = max(numbering, key=per_scope.__getitem__)
-    own = {s: per_scope[s] - 3 * (s == first_pass) for s in numbering}
-    assert own[first_pass] == 6, per_scope
-    assert all(n in (5, 6) for n in own.values()), per_scope
 
 
 def test_adsb_build_jobs_carry_the_function_name(spark, tables, monkeypatch):

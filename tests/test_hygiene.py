@@ -4,8 +4,8 @@
   import whose bound name is never referenced in the same module
   fails, unless its line carries ``noqa`` or the name is listed as a
   string in ``__all__``;
-- every public top-level function and class of the package is
-  referenced somewhere outside its own definition;
+- every public top-level function, class and module-level constant
+  of the package is referenced somewhere outside its own definition;
 - every citation in COVERAGE.md of a test or of a package name
   resolves.
 """
@@ -90,12 +90,25 @@ def _exported(tree: ast.Module) -> set[str]:
     }
 
 
+def _bound_names(node: ast.stmt) -> list[str]:
+    """The names a top-level statement binds: a def or class, or the
+    plain names on the left of a module-level assignment."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = (
+        node.targets if isinstance(node, ast.Assign)
+        else [node.target] if isinstance(node, ast.AnnAssign) else []
+    )
+    return [t.id for t in targets if isinstance(t, ast.Name)]
+
+
 def test_no_unreferenced_public_names():
-    """A public top-level def or class that nothing names — no caller,
-    no test, no registry entry — is dead code.  References are
-    searched in the package, tests, scripts, wirebench, bench.py and
-    __spark_entry__.py; one inside the definition itself (recursion)
-    does not count, a listing in its own module's ``__all__`` does."""
+    """A public top-level def, class or module constant that nothing
+    names — no caller, no test, no registry entry — is dead code.
+    References are searched in the package, tests, scripts, wirebench,
+    bench.py and __spark_entry__.py; one inside the definition itself
+    (recursion) does not count, a listing in its own module's
+    ``__all__`` does."""
     trees = {p: ast.parse(p.read_text(), filename=str(p)) for p in _searched_files()}
     refs = {p: _referenced(t) for p, t in trees.items()}
     found = []
@@ -105,28 +118,20 @@ def test_no_unreferenced_public_names():
         elsewhere = set().union(*(r for q, r in refs.items() if q != p))
         per_node = [_referenced(n) for n in tree.body]
         for i, node in enumerate(tree.body):
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) or node.name.startswith("_") or node.name in exported:
-                continue
-            if node.name in elsewhere or any(
-                node.name in names for j, names in enumerate(per_node) if j != i
-            ):
-                continue
-            found.append(f"{p.relative_to(ROOT)}:{node.lineno}: {node.name}")
+            for name in _bound_names(node):
+                if name.startswith("_") or name in exported:
+                    continue
+                if name in elsewhere or any(
+                    name in names for j, names in enumerate(per_node) if j != i
+                ):
+                    continue
+                found.append(f"{p.relative_to(ROOT)}:{node.lineno}: {name}")
     assert found == [], "never referenced:\n" + "\n".join(found)
 
 
 def _top_level_names(path: pathlib.Path) -> set[str]:
-    names = set()
-    for n in ast.parse(path.read_text(), filename=str(path)).body:
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            names.add(n.name)
-        elif isinstance(n, ast.Assign):
-            names.update(t.id for t in n.targets if isinstance(t, ast.Name))
-        elif isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name):
-            names.add(n.target.id)
-    return names
+    tree = ast.parse(path.read_text(), filename=str(path))
+    return {name for n in tree.body for name in _bound_names(n)}
 
 
 def test_coverage_citations_resolve():

@@ -1135,44 +1135,6 @@ def test_resolve_stream_engine():
     assert resolve_stream_engine() == expected
 
 
-def _write_tws_metadata(
-    ckpt: str,
-    state_names: list[str],
-    operator_name: str = "transformWithStateInPySparkExec",
-) -> None:
-    """Synthesize the state/<op>/_metadata/v2/<batch> file Spark writes
-    for a TWS operator (shape copied from a real Spark-4 checkpoint)."""
-    import json
-
-    d = os.path.join(ckpt, "state", "0", "_metadata", "v2")
-    os.makedirs(d, exist_ok=True)
-    props = {
-        "timeMode": "ProcessingTime",
-        "outputMode": "Append",
-        "stateVariables": [
-            {"stateName": n, "stateVariableType": "ValueState", "ttlEnabled": False}
-            for n in state_names
-        ]
-        + [
-            {
-                "stateName": "$procTimers_keyToTimestamp",
-                "stateVariableType": "TimerState",
-                "ttlEnabled": False,
-            }
-        ],
-    }
-    meta = {
-        "operatorInfo": {
-            "operatorId": 0,
-            "operatorName": operator_name,
-        },
-        "stateStoreInfo": [{"storeName": "default", "numPartitions": 4}],
-        "operatorPropertiesJson": json.dumps(props),
-    }
-    with open(os.path.join(d, "0"), "w") as fh:
-        fh.write("v2\n" + json.dumps(meta))
-
-
 def _legacy_name_processor_cls(state_name: str = "session"):
     """Pandas-flavour TWS processor (``transformWithStateInPandas``) —
     the checkpoint writer for the guard and migration tests.  With the
@@ -1224,12 +1186,44 @@ def _legacy_name_processor_cls(state_name: str = "session"):
     return LegacyNameProcessor
 
 
+def _renamed_processor(state_name: str):
+    """The row-based processor with its session state stored under
+    ``state_name`` instead of TWS_STATE_NAME: the writer of a real
+    checkpoint whose only difference from the current handler is the
+    state variable's name."""
+    from dump1090_postgis_spark.streaming.tws import (
+        TWS_STATE_SCHEMA,
+        SessionProcessor,
+    )
+
+    class RenamedProcessor(SessionProcessor):
+        def init(self, handle):
+            self._handle = handle
+            self._sess = handle.getValueState(state_name, TWS_STATE_SCHEMA)
+
+    return RenamedProcessor()
+
+
+def _await_two_batches(q) -> None:
+    """Wait until the query has committed batches 0 and 1, then stop it."""
+    deadline = time.time() + 90
+    while time.time() < deadline:
+        p = q.lastProgress
+        if p and p.get("batchId", -1) >= 1:
+            break
+        time.sleep(1)
+    q.stop()
+    q.awaitTermination(60)
+
+
 def _run_legacy_name_checkpoint(
-    spark, drop: str, ckpt: str, state_name: str = "session"
+    spark, drop: str, ckpt: str, state_name: str = "session",
+    row_based: bool = False,
 ) -> None:
-    """Run the pandas-flavour processor over the text drop dir until at
-    least two batches commit, writing a REAL checkpoint of that
-    operator (pre-rename by default)."""
+    """Run a transformWithState processor over the text drop dir until
+    two batches commit, writing a REAL checkpoint of that operator:
+    the pandas flavour (pre-rename by default), or with ``row_based``
+    the current handler under another state name."""
     from dump1090_postgis_spark.streaming.pipeline import parsed_stream
     from dump1090_postgis_spark.streaming.state import EVENT_OUTPUT_SCHEMA
     from dump1090_postgis_spark.streaming.tws import ROCKSDB_PROVIDER
@@ -1238,12 +1232,16 @@ def _run_legacy_name_checkpoint(
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
     )
+    grouped = parsed_stream(spark.readStream.text(drop)).groupBy("hexident")
+    if row_based:
+        apply, proc = grouped.transformWithState, _renamed_processor(state_name)
+    else:
+        apply = grouped.transformWithStateInPandas
+        proc = _legacy_name_processor_cls(state_name)()
     try:
-        q = (
-            parsed_stream(spark.readStream.text(drop))
-            .groupBy("hexident")
-            .transformWithStateInPandas(
-                _legacy_name_processor_cls(state_name)(),
+        _await_two_batches(
+            apply(
+                proc,
                 outputStructType=EVENT_OUTPUT_SCHEMA,
                 outputMode="append",
                 timeMode="ProcessingTime",
@@ -1254,14 +1252,6 @@ def _run_legacy_name_checkpoint(
             .trigger(processingTime="1 second")
             .start()
         )
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p.get("batchId", -1) >= 1:
-                break
-            time.sleep(1)
-        q.stop()
-        q.awaitTermination(60)
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -1271,66 +1261,42 @@ def _run_legacy_name_checkpoint(
             )
 
 
-def test_checkpoint_state_guard_unit(tmp_path, caplog):
-    """assert_checkpoint_state_compatible: raises on a renamed state
-    variable, passes on match / fresh / malformed checkpoints (Spark's
-    own validation owns malformed — the guard only closes the SILENT
-    rename hole), and is LOUD — not silent — when a checkpoint URI
-    cannot be inspected at all (round-9 advisor: the silent return
-    disarmed the guard exactly for remote at-scale checkpoints)."""
-    import logging
+def _run_pipeline_checkpoint(spark, drop: str, ckpt: str, engine: str) -> None:
+    """Run ``start_pipeline`` on ``engine`` until two batches commit."""
+    from dump1090_postgis_spark.streaming.pipeline import start_pipeline
 
+    _await_two_batches(
+        start_pipeline(
+            spark.readStream.text(drop), lambda bdf, eid: bdf.collect(), ckpt,
+            engine=engine,
+        )
+    )
+
+
+def test_checkpoint_state_guard_unit(spark, tmp_path):
+    """assert_checkpoint_state_compatible over checkpoints that hold no
+    session state: a fresh path, an empty directory and metadata Spark
+    cannot read all pass (the state-metadata source returns no rows),
+    while a checkpoint URI Spark cannot reach fails the start instead
+    of passing as fresh."""
     from dump1090_postgis_spark.streaming.tws import (
         assert_checkpoint_state_compatible,
     )
 
-    # an uninspectable remote URI must not silently pass as "fresh"
-    with caplog.at_level(logging.WARNING, logger="dump1090_postgis_spark"):
-        assert_checkpoint_state_compatible("s3a://no-such-bucket/ckpt")
-    assert any(
-        "could not inspect" in r.message or "UNGUARDED" in r.message
-        for r in caplog.records
-    ), caplog.records
+    assert_checkpoint_state_compatible(spark, str(tmp_path / "fresh"), "tws")
+    os.makedirs(tmp_path / "empty")
+    assert_checkpoint_state_compatible(spark, str(tmp_path / "empty"), "legacy")
 
-    # fresh checkpoint: no state dir at all
-    assert_checkpoint_state_compatible(str(tmp_path / "fresh"))
+    bad = tmp_path / "bad" / "state" / "0" / "_metadata" / "v2"
+    os.makedirs(bad)
+    (bad / "0").write_text("not json at all")
+    assert_checkpoint_state_compatible(spark, str(tmp_path / "bad"), "tws")
 
-    # matching name passes
-    ok = str(tmp_path / "ok")
-    _write_tws_metadata(ok, ["session_v2"])
-    assert_checkpoint_state_compatible(ok)
-
-    # old pre-rename name fails loudly, with migration guidance
-    old = str(tmp_path / "old")
-    _write_tws_metadata(old, ["session"])
-    with pytest.raises(RuntimeError, match="session_v2"):
-        assert_checkpoint_state_compatible(old)
-
-    # a checkpoint of the pandas operator is refused before start, and
-    # the message names both ways out
-    pandas_op = str(tmp_path / "pandas_op")
-    _write_tws_metadata(
-        pandas_op, ["session_v2"], operator_name="transformWithStateInPandasExec"
-    )
-    with pytest.raises(RuntimeError, match="transformWithStateInPandasExec") as ei:
-        assert_checkpoint_state_compatible(pandas_op)
-    assert "fresh checkpoint" in str(ei.value)
-    assert "state_name='session_v2'" in str(ei.value)
-    assert "initial_state=" in str(ei.value)
-
-    # internal $procTimers_* variables alone (no user state recorded
-    # yet) pass — nothing user-visible to drop
-    onlyt = str(tmp_path / "onlyt")
-    _write_tws_metadata(onlyt, [])
-    assert_checkpoint_state_compatible(onlyt)
-
-    # malformed metadata: defer to Spark, no crash here
-    bad = str(tmp_path / "bad")
-    d = os.path.join(bad, "state", "0", "_metadata", "v2")
-    os.makedirs(d)
-    with open(os.path.join(d, "0"), "w") as fh:
-        fh.write("not json at all")
-    assert_checkpoint_state_compatible(bad)
+    # no s3a filesystem is on the classpath: the reader fails at once
+    with pytest.raises(Exception, match="s3a"):
+        assert_checkpoint_state_compatible(
+            spark, "s3a://no-such-bucket/ckpt", "tws"
+        )
 
 
 @pytest.mark.skipif(
@@ -1338,13 +1304,14 @@ def test_checkpoint_state_guard_unit(tmp_path, caplog):
     reason="needs the TWS transport to write a real legacy-named checkpoint",
 )
 def test_tws_restart_from_legacy_name_checkpoint_fails_loudly(spark, tmp_path):
-    """The session_v2 rename's actual contract (round-8 advisor
-    finding): Spark 4 permits add/remove of state variables on restart,
-    so a restart from a pre-rename checkpoint would SUCCEED and
-    silently drop in-flight sessions (measured on this build).  The
-    loud failure is the driver-side guard — write a REAL checkpoint
-    with the old 'session' state name, then assert both the guard and
-    the start_pipeline TWS path refuse it."""
+    """The session_v2 rename's actual contract: Spark 4 permits
+    add/remove of state variables on restart, so a restart from a
+    checkpoint of this handler under the pre-rename 'session' name
+    would SUCCEED and silently drop in-flight sessions (measured on
+    this build).  The loud failure is the driver-side guard — write a
+    REAL row-based checkpoint with the old state name, then assert both
+    the guard and the start_pipeline TWS path refuse it, naming the
+    migration from the old variable."""
     from dump1090_postgis_spark.streaming.pipeline import start_pipeline
     from dump1090_postgis_spark.streaming.tws import (
         assert_checkpoint_state_compatible,
@@ -1356,18 +1323,19 @@ def test_tws_restart_from_legacy_name_checkpoint_fails_loudly(spark, tmp_path):
     with open(os.path.join(drop, "a.txt"), "w") as f:
         f.write(LINES[0] + "\n" + LINES[2])
 
-    _run_legacy_name_checkpoint(spark, drop, ckpt)
+    _run_legacy_name_checkpoint(spark, drop, ckpt, row_based=True)
 
     with pytest.raises(RuntimeError, match="in-flight session"):
-        assert_checkpoint_state_compatible(ckpt)
+        assert_checkpoint_state_compatible(spark, ckpt, "tws")
 
-    with pytest.raises(RuntimeError, match="fresh checkpoint"):
+    with pytest.raises(RuntimeError, match="fresh checkpoint") as ei:
         start_pipeline(
             spark.readStream.text(drop),
             lambda bdf, eid: None,
             ckpt,
             engine="tws",
         )
+    assert "state_name='session')" in str(ei.value)
 
 
 @pytest.mark.skipif(
@@ -1395,14 +1363,17 @@ def test_tws_restart_from_pandas_operator_checkpoint_fails_loudly(spark, tmp_pat
     _run_legacy_name_checkpoint(spark, drop, ckpt, state_name="session_v2")
 
     with pytest.raises(RuntimeError, match="transformWithStateInPandasExec"):
-        assert_checkpoint_state_compatible(ckpt)
-    with pytest.raises(RuntimeError, match="state_name='session_v2'"):
+        assert_checkpoint_state_compatible(spark, ckpt, "tws")
+    with pytest.raises(RuntimeError, match="state_name='session_v2'") as ei:
         start_pipeline(
             spark.readStream.text(drop),
             lambda bdf, eid: None,
             ckpt,
             engine="tws",
         )
+    # both ways out: drain to a fresh checkpoint, or migrate
+    assert "fresh checkpoint" in str(ei.value)
+    assert "initial_state=" in str(ei.value)
 
     rows = legacy_session_initial_state(
         spark, ckpt, state_name="session_v2"
@@ -1410,6 +1381,69 @@ def test_tws_restart_from_pandas_operator_checkpoint_fails_loudly(spark, tmp_pat
     assert [(r.hexident, r.n_messages, r.callsign) for r in rows] == [
         ("AAA111", 3, "TST100")
     ]
+
+
+def test_tws_refuses_legacy_engine_checkpoint(spark, tmp_path):
+    """legacy → TWS, e.g. ``engine='auto'`` on a host that ran the
+    legacy fallback and later gained a protobuf runtime: without the
+    guard the TWS query starts and then dies inside Spark
+    (STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA).  The
+    guard refuses before start and names the engine that wrote the
+    checkpoint; the legacy engine itself resumes from it."""
+    from dump1090_postgis_spark.streaming.pipeline import start_pipeline
+    from dump1090_postgis_spark.streaming.tws import (
+        assert_checkpoint_state_compatible,
+    )
+
+    drop = str(tmp_path / "drop")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(drop)
+    with open(os.path.join(drop, "a.txt"), "w") as f:
+        f.write("\n".join(LINES[:3]))
+    _run_pipeline_checkpoint(spark, drop, ckpt, "legacy")
+
+    assert_checkpoint_state_compatible(spark, ckpt, "legacy")
+    with pytest.raises(RuntimeError, match="'applyInPandasWithState'") as ei:
+        start_pipeline(
+            spark.readStream.text(drop), lambda bdf, eid: None, ckpt,
+            engine="tws",
+        )
+    assert "fresh checkpoint" in str(ei.value)
+    assert "engine='legacy'" in str(ei.value)
+    # the migration helper reads transformWithState state only
+    assert "initial_state=" not in str(ei.value)
+
+
+@pytest.mark.skipif(
+    not _has_protobuf(),
+    reason="needs the TWS transport to write a real TWS checkpoint",
+)
+def test_legacy_refuses_tws_engine_checkpoint(spark, tmp_path):
+    """TWS → legacy, e.g. ``engine='auto'`` after the protobuf runtime
+    went away: the legacy engine is refused before start, and the
+    message names the engine that wrote the checkpoint."""
+    from dump1090_postgis_spark.streaming.pipeline import start_pipeline
+    from dump1090_postgis_spark.streaming.tws import (
+        assert_checkpoint_state_compatible,
+    )
+
+    drop = str(tmp_path / "drop")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(drop)
+    with open(os.path.join(drop, "a.txt"), "w") as f:
+        f.write("\n".join(LINES[:3]))
+    _run_pipeline_checkpoint(spark, drop, ckpt, "tws")
+
+    assert_checkpoint_state_compatible(spark, ckpt, "tws")
+    with pytest.raises(
+        RuntimeError, match="'transformWithStateInPySparkExec'"
+    ) as ei:
+        start_pipeline(
+            spark.readStream.text(drop), lambda bdf, eid: None, ckpt,
+            engine="legacy",
+        )
+    assert "fresh checkpoint" in str(ei.value)
+    assert "engine='tws'" in str(ei.value)
 
 
 @pytest.mark.skipif(
