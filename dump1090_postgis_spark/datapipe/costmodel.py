@@ -2,11 +2,9 @@
 
 Every vectorized/scale engine in this package (blocked brute-force
 ANN, bucketed LSH verifies, the BLAS centroid assignment) is chosen
-by size, not by the caller — the operators take no engine argument
-(``semantic_dedup(pairwise=)`` is kept as the one explicit opt-in,
-because the approximate assignment tree exists only on its vectorized
-pairwise).  Oracle-checked scales stay on the bit-exact declarative
-path and only genuinely large inputs pay the Arrow seam.  A caller
+by size, not by the caller — the operators take no engine argument.
+Oracle-checked scales stay on the bit-exact declarative path and
+only genuinely large inputs pay the Arrow seam.  A caller
 that knows its corpus size passes it as the ``corpus_rows`` hint;
 that hint, or in tests a monkeypatched budget constant, is what moves
 a call across a gate.  Until round 8 each gate made that decision

@@ -16,11 +16,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
+from ..session import job_scope
 from .artifact_io import publish, sidecar_rows, verify
 from .costmodel import work_exceeds
 from .dedup import _double_sql, embedding_cosine
 
 
+@job_scope("datapipe.similarity.brute_force_topk")
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -270,23 +272,9 @@ def _mean_centroids(assigned: DataFrame) -> DataFrame:
     )
 
 
-def _centroid_array(centroids: DataFrame):
-    """Collapse the (tiny) centroid table into ONE row holding
-    array<struct<centroid_id, centroid>> sorted by id — broadcast-able
-    as a single-row nested-loop join that amounts to attaching a
-    literal array column to every row."""
-    return F.broadcast(
-        centroids.agg(
-            F.array_sort(
-                F.collect_list(F.struct("centroid_id", "centroid"))
-            ).alias("_cen")
-        )
-    )
-
-
 # Above this many scalar literals (C × dim), compiling centroids into
-# the plan would bloat the expression tree — fall back to the
-# broadcast single-row array join.
+# the plan would bloat the expression tree — ship them as a broadcast
+# one-row LocalRelation instead (see _centroid_set).
 _LITERAL_COMPILE_LIMIT = 20_000
 
 #: Salt fan-out for semantic_dedup's within-cluster pairwise join —
@@ -363,18 +351,62 @@ def _centroid_structs_sql(rows, id_name: str, id_suffix: str) -> str:
     return "array(" + ",".join(parts) + ")"
 
 
-def _centroid_literal(centroids: DataFrame, _rows: list | None = None):
-    """Plan-time compile of a broadcast-class centroid table into a
-    LITERAL array<struct<centroid_id, centroid>> column (the
-    operators/attribution.py pattern): the centroid-build pipeline runs
-    exactly once (driver collect of C rows), and every consumer plan
-    embeds the values — no recompute per branch, no exchange at all on
-    the corpus side.  Returns None when the table exceeds the literal
-    budget (caller then uses _centroid_array)."""
+def _centroid_arrow(rows, id_type):
+    """Arrow ``(ids, centroids)`` arrays of collected centroid rows.
+    A pa array, NOT a pandas frame: Spark's pandas ingestion applies
+    from_pandas semantics (NaN coerced to null), which would corrupt
+    NaN centroid strata; the direct Arrow path keeps binary doubles
+    intact and compiles to a LocalRelation (no RDD job)."""
+    import pyarrow as pa
+
+    ids = pa.array([int(r.centroid_id) for r in rows], id_type)
+    cens = pa.array(
+        [
+            None
+            if r.centroid is None
+            else [None if x is None else float(x) for x in r.centroid]
+            for r in rows
+        ],
+        pa.list_(pa.float64()),
+    )
+    return ids, cens
+
+
+def _centroid_set(centroids: DataFrame, _rows: list | None = None):
+    """The k centroids as the ONE value :func:`_ranked_centroids`
+    reads, array<struct<centroid_id, centroid>> sorted by id, built
+    from one collect of the (tiny) table (or the caller's
+    already-collected ``_rows``):
+
+    - while k·dim fits :data:`_LITERAL_COMPILE_LIMIT`, a plan LITERAL
+      Column (the operators/attribution.py pattern): every consumer
+      plan embeds the values — no recompute per branch, no exchange at
+      all on the corpus side;
+    - past it, a broadcast one-row LocalRelation DataFrame whose
+      ``_cen`` column holds the same array: no expression-tree bloat,
+      and never the lazy centroid frame, whose broadcast would re-run
+      the corpus aggregation (see :func:`_centroid_dim`).
+
+    Same ids (INT, as the literal parses them) and the same binary
+    doubles either way, so the ranking is bit-identical at every
+    size."""
     rows = _rows if _rows is not None else _collect_centroids(centroids)
-    if not rows or len(rows) * len(rows[0].centroid) > _LITERAL_COMPILE_LIMIT:
-        return None
-    return F.expr(_centroid_structs_sql(rows, "centroid_id", ""))
+    dim = len(rows[0].centroid) if rows and rows[0].centroid is not None else 0
+    if rows and len(rows) * dim <= _LITERAL_COMPILE_LIMIT:
+        return F.expr(_centroid_structs_sql(rows, "centroid_id", ""))
+    import pyarrow as pa
+
+    int32 = all(-(2**31) <= int(r.centroid_id) < 2**31 for r in rows)
+    ids, cens = _centroid_arrow(rows, pa.int32() if int32 else pa.int64())
+    structs = pa.StructArray.from_arrays(
+        [ids, cens], names=["centroid_id", "centroid"]
+    )
+    one_row = pa.ListArray.from_arrays(
+        pa.array([0, len(rows)], pa.int32()), structs
+    )
+    return F.broadcast(
+        centroids.sparkSession.createDataFrame(pa.table({"_cen": one_row}))
+    )
 
 
 def _centroid_dim(
@@ -416,25 +448,8 @@ def _centroid_dim(
         )
     import pyarrow as pa
 
-    # pa.Table, NOT a pandas frame: Spark's pandas ingestion applies
-    # from_pandas semantics (NaN coerced to null), which would corrupt
-    # NaN centroid strata; the direct Arrow path keeps binary doubles
-    # intact and compiles to a LocalRelation (no RDD job).
-    tbl = pa.table({
-        id_alias: pa.array(
-            [int(r.centroid_id) for r in rows], pa.int64()
-        ),
-        "centroid": pa.array(
-            [
-                None
-                if r.centroid is None
-                else [None if x is None else float(x) for x in r.centroid]
-                for r in rows
-            ],
-            pa.list_(pa.float64()),
-        ),
-    })
-    return spark.createDataFrame(tbl)
+    ids, cens = _centroid_arrow(rows, pa.int64())
+    return spark.createDataFrame(pa.table({id_alias: ids, "centroid": cens}))
 
 
 def _ranked_centroids(vec_col, cen_arr) -> "F.Column":
@@ -451,10 +466,23 @@ def _ranked_centroids(vec_col, cen_arr) -> "F.Column":
     return F.array_sort(sims)
 
 
-#: Coarse cells searched by the two-level (tree) assignment — the
-#: boundary-miss hedge: a row whose true nearest fine centroid sits
-#: just across a coarse Voronoi edge is still found as long as that
-#: cell ranks within the probe count.
+def _with_ranked_centroids(df: DataFrame, vec: str, cen):
+    """``(df', ranked, drop)``: :func:`_ranked_centroids` of ``vec``
+    over the centroid set ``cen`` (:func:`_centroid_set`).  A literal
+    set is read in place; a one-row frame is crossJoined (a broadcast
+    nested-loop join that attaches its ``_cen`` column to every row),
+    which the caller drops again."""
+    if isinstance(cen, DataFrame):
+        ranked = _ranked_centroids(F.col(vec), F.col("_cen"))
+        return df.crossJoin(cen), ranked, ("_cen",)
+    return df, _ranked_centroids(F.col(vec), cen), ()
+
+
+#: Coarse cells searched by the two-level numpy assignment
+#: (:func:`_numpy_centroid_tree`) — the boundary-miss hedge: a row
+#: whose true nearest fine centroid sits just across a coarse Voronoi
+#: edge is still found as long as that cell ranks within the probe
+#: count.
 _TREE_COARSE_PROBES = 2
 
 #: FLOPs budget for the EXACT all-k vectorized assignment: n·k·dim
@@ -495,8 +523,8 @@ _IVF_ASSIGN_LITERAL_MAX_FLOPS = 1.0e9
 def resolve_assignment_probes(
     n_rows: int, k: int, dim: int
 ) -> int | None:
-    """``assignment_probes='auto'`` rule for the vectorized assignment
-    engine: EXACT all-k matmul (None) while ``n·k·dim`` fits
+    """Coarse probes of the vectorized assignment engine: EXACT all-k
+    matmul (None) while ``n·k·dim`` fits
     :data:`_ASSIGN_EXACT_MAX_FLOPS`, the two-level coarse/fine tree
     (:data:`_TREE_COARSE_PROBES` probes) past it.  Pure function of
     the three sizes so the budget decision itself is unit-testable."""
@@ -505,99 +533,13 @@ def resolve_assignment_probes(
     return _TREE_COARSE_PROBES
 
 
-def _centroid_tree_array(centroids: DataFrame, coarse_probes: int):
-    """Two-level centroid index for the over-budget assignment path.
-
-    The flat over-budget fallback evaluates k cosines per corpus row
-    through interpreted higher-order functions — O(n·k), and because
-    auto-k grows k with n this is O(n²/target): at ×1000 (2M vectors,
-    k=1954) the flat assignment pinned 32 cores for tens of minutes.
-    This is the two-level fix promised in :func:`semantic_dedup`'s
-    docstring: cluster the (driver-small) fine centroids into
-    √k coarse cells (pure-Python Lloyd over ≤ ~10⁵ points — trivial
-    next to one corpus pass), then per corpus row rank the √k coarse
-    cells and search only the fines of the best ``coarse_probes``
-    cells: ~√k·(1+probes) cosines per row instead of k.
-
-    Returns a single-row broadcast DataFrame whose ``_tree`` column is
-    array<struct<coarse, fines>>.  The assignment is APPROXIMATE at
-    cell boundaries (exact when coarse_probes covers the geometry);
-    callers on the literal path — every oracle-checked scale — are
-    unaffected.
-    """
-    import math
-
-    rows = centroids.select("centroid_id", "centroid").collect()
-    k = len(rows)
-    kc = max(2, math.ceil(math.sqrt(k)))
-    fines = [(int(r.centroid_id), [float(x) for x in r.centroid]) for r in rows]
-    dim = len(fines[0][1])
-    # deterministic seed means (id % kc), then 3 Lloyd rounds — all
-    # driver-side over k points, no RNG.
-    assign = [fid % kc for fid, _ in fines]
-    coarse = [[0.0] * dim for _ in range(kc)]
-    for _ in range(4):  # seed-mean pass + 3 refinements
-        sums = [[0.0] * dim for _ in range(kc)]
-        counts = [0] * kc
-        for (fid, v), a in zip(fines, assign):
-            counts[a] += 1
-            s = sums[a]
-            for i, x in enumerate(v):
-                s[i] += x
-        coarse = [
-            [x / c for x in s] if c else list(fines[j % k][1])
-            for j, (s, c) in enumerate(zip(sums, counts))
-        ]
-        assign = []
-        for fid, v in fines:
-            best_j, best_d = 0, float("inf")
-            for j, cvec in enumerate(coarse):
-                d = sum((x - y) * (x - y) for x, y in zip(v, cvec))
-                if d < best_d:
-                    best_j, best_d = j, d
-            assign.append(best_j)
-    cells: dict[int, list] = {}
-    for (fid, v), a in zip(fines, assign):
-        cells.setdefault(a, []).append((fid, v))
-    tree = [
-        (coarse[j], [(fid, v) for fid, v in members])
-        for j, members in sorted(cells.items())
-    ]
-    spark = centroids.sparkSession
-    tdf = spark.createDataFrame(
-        [(tree,)],
-        "_tree array<struct<coarse: array<double>, "
-        "fines: array<struct<centroid_id: bigint, centroid: array<double>>>>>",
-    )
-    return F.broadcast(tdf)
-
-
-def _tree_best(vec_col, coarse_probes: int):
-    """Expression: nearest fine centroid via the two-level index in
-    the crossJoined ``_tree`` column."""
-    ranked_cells = F.array_sort(
-        F.transform(
-            F.col("_tree"),
-            lambda t: F.struct(
-                (-embedding_cosine(vec_col, t["coarse"])).alias("neg"),
-                t["fines"].alias("fines"),
-            ),
-        )
-    )
-    cand = F.flatten(
-        F.transform(
-            F.slice(ranked_cells, 1, coarse_probes), lambda c: c["fines"]
-        )
-    )
-    return F.element_at(_ranked_centroids(vec_col, cand), 1)
-
-
 def _numpy_centroid_tree(cen_mat, coarse_k: int | None = None):
     """Driver-side two-level index over the (already collected)
-    centroid matrix — the numpy twin of :func:`_centroid_tree_array`
-    for the VECTORIZED assignment path.  Deterministic (seed assign =
-    index % kc, one seed-mean pass + 3 Lloyd rounds on squared
-    euclidean — no RNG), all over k points, never the corpus.
+    centroid matrix for the VECTORIZED assignment path past
+    :data:`_ASSIGN_EXACT_MAX_FLOPS`: ⌈√k⌉ coarse cells over the fine
+    centroids.  Deterministic (seed assign = index % kc, one seed-mean
+    pass + 3 Lloyd rounds on squared euclidean — no RNG), all over k
+    points, never the corpus.
 
     Returns (coarse_mat kc'×d, coarse_norm, cells) where cells is a
     list of ascending fine-INDEX arrays, one per non-empty coarse
@@ -641,36 +583,34 @@ def _assign_nearest_vectorized(
     coarse_probes: int | None = None, _cen_rows: list | None = None,
 ) -> DataFrame:
     """EXACT nearest-centroid assignment as an Arrow ``mapInPandas``
-    blocked numpy matmul — the scale twin of the literal-projection
-    assignment in :func:`with_nearest_centroid`, for callers already
-    off the bit-exact oracle path.
+    blocked numpy matmul — the scale twin of the declarative ranking in
+    :func:`with_nearest_centroid`.  Callers reach it only through their
+    own size gates (the IVF family's n·k·dim FLOPs budget,
+    :func:`semantic_dedup`'s vectorized engine, :func:`build_centroids`'
+    Lloyd budget), never on an oracle-checked scale.  Every row batch
+    computes all k cosines as one blocked BLAS matmul against the
+    broadcast centroid matrix: exact (all k probed) and ~50×
+    cheaper per cosine than the interpreted ranking (measured: 205 s
+    of interpreted assignment for 2M rows × k=1954 at ×1000).
 
-    ``coarse_probes`` (opt-in) switches to a two-level BLAS search —
-    :func:`_numpy_centroid_tree` coarse matmul over ~√k cells, fine
-    matmul only within each row's best ``coarse_probes`` cells:
+    ``coarse_probes`` (picked by :func:`resolve_assignment_probes` past
+    :data:`_ASSIGN_EXACT_MAX_FLOPS`) switches to a two-level BLAS
+    search — :func:`_numpy_centroid_tree` coarse matmul over ~√k cells,
+    fine matmul only within each row's best ``coarse_probes`` cells:
     O(n·√k·(1+probes)) instead of O(n·k).  APPROXIMATE at coarse-cell
-    boundaries exactly like the declarative tree (exact when probes
-    cover the geometry); tie-break/NULL/NaN semantics are identical to
-    the exact path.  This is the eighth-decade lever: auto-k grows k
-    with n, so the exact matmul is O(n²/target) — at ~60M vectors
-    (k≈58k) the tree cuts the assignment FLOPs ~40×.
+    boundaries (exact when probes cover the geometry); tie-break/NULL/
+    NaN semantics are identical to the exact path.  This is the
+    eighth-decade lever: auto-k grows k with n, so the exact matmul is
+    O(n²/target) — at ~60M vectors (k≈58k) the tree cuts the
+    assignment FLOPs ~40×.
 
-    Past the 20k-literal budget the declarative fallback is the
-    two-level centroid tree — APPROXIMATE at coarse-cell boundaries
-    and still ~3√k INTERPRETED higher-order cosines per row (measured:
-    205 s for 2M rows × k=1954 at ×1000 — the dominant cost of the
-    whole SemDeDup plan once the pairwise is vectorized).  Here every
-    row batch computes all k cosines as one blocked BLAS matmul
-    against the driver-broadcast centroid matrix: EXACT (all k
-    probed, better than the tree) and ~50× cheaper per cosine.
-
-    Parity with the declarative paths (pinned by the semantic_dedup
+    Parity with the declarative ranking (pinned by the semantic_dedup
     join-vs-vectorized equivalence pytest):
     - argmax tie-break is lowest centroid_id (numpy first-max over the
       id-sorted matrix = Spark's (−sim, id) ascending sort);
     - NULL / NULL-element / NaN-component vectors assign to the MIN
-      centroid id — exactly what the literal and tree expressions
-      produce (every neg_sim NULL or NaN → all-tie → id ascending);
+      centroid id — exactly what the declarative ranking produces
+      (every neg_sim NULL or NaN → all-tie → id ascending);
     - divergence: zero-norm vectors assign to the min centroid id here
       (0/0 → NaN sims) instead of raising DIVIDE_BY_ZERO as the ANSI
       declarative cosine does — zero-norm is out of contract in both
@@ -693,14 +633,7 @@ def _assign_nearest_vectorized(
 
     # `_cen_rows` (pre-collected, id-sorted — _collect_centroids) lets
     # multi-consumer plans run the centroid pipeline exactly once.
-    rows = (
-        _cen_rows
-        if _cen_rows is not None
-        else sorted(
-            centroids.select("centroid_id", "centroid").collect(),
-            key=lambda r: r.centroid_id,
-        )
-    )
+    rows = _cen_rows if _cen_rows is not None else _collect_centroids(centroids)
     cen_ids = np.array([int(r.centroid_id) for r in rows], dtype="int64")
     cen_mat = np.array(
         [[float(x) for x in r.centroid] for r in rows], dtype="float64"
@@ -796,76 +729,52 @@ def _assign_nearest_vectorized(
 
 def with_nearest_centroid(
     df: DataFrame, centroids: DataFrame, vec: str, out: str = "list_id",
-    _cen_lit=None, over_budget: str = "exact",
+    _cen=None,
 ) -> DataFrame:
-    """Nearest-centroid assignment as a PURE PROJECTION: the centroid
-    set is compiled into the plan as a literal array and the argmax is
-    an array_sort+element_at expression — zero shuffle and zero join
-    on the corpus side.  Every oracle-checked scale fits the 20k
-    literal budget, so the DuckDB-audited plans never leave this path.
+    """Nearest-centroid assignment as a PURE PROJECTION: element 1 of
+    :func:`_ranked_centroids` (similarity DESC, centroid_id ASC) over
+    the centroid set of :func:`_centroid_set` — a plan literal while
+    k·dim fits the 20k budget (every oracle-checked scale, so the
+    DuckDB-audited plans never leave it), a broadcast one-row
+    LocalRelation past it.  Exact at every size, bit-identical across
+    the budget, zero shuffle on the corpus side.  ``_cen``: a centroid
+    set the caller already built, so several consumers share one
+    collect.
 
-    Past the literal budget (``over_budget=``):
-
-    - ``'exact'`` (default): :func:`_assign_nearest_vectorized` — an
-      Arrow ``mapInPandas`` blocked matmul probing ALL k against the
-      driver-broadcast centroid matrix.  EXACT on every geometry and
-      ~50× cheaper per cosine than the interpreted tree (measured in
-      the SemDeDup ×1000 run), at the cost of one Python seam and the
-      Arrow NULL-element→NaN rewrite of `df`'s array columns (see the
-      helper's docstring for the parity contract).
-    - ``'tree'``: the declarative two-level centroid tree
-      (:func:`_centroid_tree_array`) — stays JVM-side but is
-      APPROXIMATE at coarse-cell boundaries (default 2 probes) and
-      pays ~3·√k interpreted cosines per row.  Kept for callers that
-      cannot tolerate a Python stage in the plan.
+    The blocked BLAS twin (:func:`_assign_nearest_vectorized`) is not a
+    fallback of this function: callers reach it only through their own
+    size gates.
 
     (The round-1 plan crossJoined corpus×C and ran a
     row_number().over(partitionBy(id)) — a full shuffle+sort of the
     expanded corpus just to take an argmax.)"""
-    if over_budget not in ("exact", "tree"):
-        raise ValueError(f"over_budget must be exact|tree, got {over_budget!r}")
-    cen = _cen_lit if _cen_lit is not None else _centroid_literal(centroids)
-    if cen is not None:
-        best = F.element_at(_ranked_centroids(F.col(vec), cen), 1)
-        return df.withColumn(out, best["centroid_id"])
-    if over_budget == "exact":
-        return _assign_nearest_vectorized(df, centroids, vec, out)
-    best = _tree_best(F.col(vec), _TREE_COARSE_PROBES)
-    return (
-        df.crossJoin(_centroid_tree_array(centroids, _TREE_COARSE_PROBES))
-        .withColumn(out, best["centroid_id"])
-        .drop("_tree")
-    )
+    cen = _cen if _cen is not None else _centroid_set(centroids)
+    df, ranked, drop = _with_ranked_centroids(df, vec, cen)
+    best = F.element_at(ranked, 1)
+    return df.withColumn(out, best["centroid_id"]).drop(*drop)
 
 
 def with_probed_centroids(
     df: DataFrame, centroids: DataFrame, probes: int, vec: str,
-    out: str = "list_id", _cen_lit=None,
+    out: str = "list_id", _cen=None,
 ) -> DataFrame:
-    """Top-`probes` nearest centroids per row: the same projection
-    ranking, sliced and exploded (×probes only on the small query
-    side)."""
-    cen = _cen_lit if _cen_lit is not None else _centroid_literal(centroids)
-    if cen is not None:
-        top = F.slice(_ranked_centroids(F.col(vec), cen), 1, probes)
-        # explode_outer: plain explode infers a size>0 filter that
-        # re-evaluates the whole centroid ranking per row (see
-        # dedup.explode_computed); the slice is never empty by
-        # construction (k >= probes >= 1).
-        return (
-            df.withColumn("_probe", F.explode_outer(top))
-            .withColumn(out, F.col("_probe")["centroid_id"])
-            .drop("_probe")
-        )
-    top = F.slice(_ranked_centroids(F.col(vec), F.col("_cen")), 1, probes)
+    """Top-`probes` nearest centroids per row: the
+    :func:`with_nearest_centroid` ranking, sliced to ``1..probes`` and
+    exploded (×probes only on the small query side)."""
+    cen = _cen if _cen is not None else _centroid_set(centroids)
+    df, ranked, drop = _with_ranked_centroids(df, vec, cen)
+    # explode_outer: plain explode infers a size>0 filter that
+    # re-evaluates the whole centroid ranking per row (see
+    # dedup.explode_computed); the slice is never empty by
+    # construction (k >= probes >= 1).
     return (
-        df.crossJoin(_centroid_array(centroids))
-        .withColumn("_probe", F.explode_outer(top))
+        df.withColumn("_probe", F.explode_outer(F.slice(ranked, 1, probes)))
         .withColumn(out, F.col("_probe")["centroid_id"])
-        .drop("_cen", "_probe")
+        .drop(*drop, "_probe")
     )
 
 
+@job_scope("datapipe.similarity.build_centroids")
 def build_centroids(corpus: DataFrame, num_centroids: int = 16,
                     vec: str = "embedding", id_col: str = "vec_id",
                     iterations: int = 0,
@@ -880,14 +789,15 @@ def build_centroids(corpus: DataFrame, num_centroids: int = 16,
     at 122 s and TRAINING at 632 s — the Lloyd loop was the last
     literal-at-any-n assignment): the engine is chosen ONCE by size
     (n·k·dim vs :data:`_IVF_ASSIGN_LITERAL_MAX_FLOPS`, size source
-    ``corpus_rows`` hint → plan stats → bounded probe) — the literal
-    interpreted projection on every oracle-checked scale
-    (``kmeans_refine``'s DuckDB twin replays it bit-exactly), the
-    blocked BLAS matmul (:func:`_assign_nearest_vectorized`) past the
-    budget.  On the vectorized branch degenerate vectors (NULL /
-    wrong-length / NULL-element / NaN-component) are split out
-    Spark-side and assigned the min centroid id with their ORIGINAL
-    element values — the literal path's exact behavior — because the
+    ``corpus_rows`` hint → plan stats → bounded probe) — the
+    declarative ranking of :func:`with_nearest_centroid` under it (on
+    every oracle-checked scale ``kmeans_refine``'s DuckDB twin replays
+    it bit-exactly), the blocked BLAS matmul
+    (:func:`_assign_nearest_vectorized`) past it.  On the vectorized
+    branch degenerate vectors (NULL / wrong-length / NULL-element /
+    NaN-component) are split out Spark-side and assigned the min
+    centroid id with their ORIGINAL element values — the declarative
+    ranking's exact behavior — because the
     Arrow round-trip would otherwise rewrite NULL elements to NaN (and
     back), changing which elements the mean aggregation sees.  One
     driver collect per iteration either way (the k-row centroid
@@ -937,7 +847,7 @@ def build_centroids(corpus: DataFrame, num_centroids: int = 16,
         else:
             reassigned = with_nearest_centroid(
                 base, centroids, vec="_v", out="centroid_id",
-                _cen_lit=_centroid_literal(centroids, _rows=cen_rows),
+                _cen=_centroid_set(centroids, _rows=cen_rows),
             ).select("centroid_id", "_v")
         centroids = _mean_centroids(reassigned)
     return centroids
@@ -951,10 +861,11 @@ def _resolve_ivf_assignment(
     _cen_rows: list | None = None,
 ):
     """Shared corpus-assignment dispatch for the IVF family: returns
-    ``(assigned_fn, cen_lit, cen_rows, vectorized)`` where
+    ``(assigned_fn, cen, cen_rows, vectorized)`` where
     ``assigned_fn(df)`` attaches ``list_id`` to a ``_deg``-flagged
-    corpus frame and ``vectorized`` is the RESOLVED engine (callers
-    key scale-only defaults like :func:`ivf_pq_topk`'s
+    corpus frame, ``cen`` is the centroid set (:func:`_centroid_set`)
+    the query-side probing shares, and ``vectorized`` is the RESOLVED
+    engine (callers key scale-only defaults like :func:`ivf_pq_topk`'s
     ``rerank='auto'`` off it, so the budget decision is made exactly
     once).
 
@@ -971,9 +882,9 @@ def _resolve_ivf_assignment(
     cen_rows = (
         _cen_rows if _cen_rows is not None else _collect_centroids(centroids)
     )
-    cen_lit = _centroid_literal(centroids, _rows=cen_rows)
+    cen = _centroid_set(centroids, _rows=cen_rows)
     kdim = len(cen_rows) * (len(cen_rows[0].centroid) if cen_rows else 0)
-    vectorized = cen_lit is None or work_exceeds(
+    vectorized = isinstance(cen, DataFrame) or work_exceeds(
         corpus, _IVF_ASSIGN_LITERAL_MAX_FLOPS, kdim, size_hint=corpus_rows
     )
     if vectorized:
@@ -984,9 +895,9 @@ def _resolve_ivf_assignment(
     else:
         def assigned_fn(df):
             return with_nearest_centroid(
-                df, centroids, vec, "list_id", _cen_lit=cen_lit
+                df, centroids, vec, "list_id", _cen=cen
             )
-    return assigned_fn, cen_lit, cen_rows, vectorized
+    return assigned_fn, cen, cen_rows, vectorized
 
 
 def _exact_score_flags(vec: str):
@@ -1033,6 +944,7 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+@job_scope("datapipe.similarity.ivf_topk")
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1085,12 +997,12 @@ def ivf_topk(
     contract as :func:`ivf_pq_topk`'s store path, results pinned
     identical to the storeless plan; the centroid sidecar is verified
     first)."""
-    assigned_fn, cen_lit, cen_rows_l, _ = _resolve_ivf_assignment(
+    assigned_fn, cen, cen_rows_l, _ = _resolve_ivf_assignment(
         corpus, centroids, vec, corpus_rows
     )
     deg, nan_flag = _exact_score_flags(vec)
     query_probes = with_probed_centroids(
-        queries, centroids, probes, vec, "list_id", _cen_lit=cen_lit
+        queries, centroids, probes, vec, "list_id", _cen=cen
     )
     if corpus_store is not None:
         store = _load_ivf_cell_store(
@@ -1639,6 +1551,7 @@ def _load_ivf_cell_store(
 _PQ_RERANK_M = 4096
 
 
+@job_scope("datapipe.similarity.ivf_pq_topk")
 def ivf_pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1675,7 +1588,7 @@ def ivf_pq_topk(
     The corpus-side ENCODE assignment is FLOPs-budgeted exactly like
     :func:`ivf_topk` (one size decision, ``corpus_rows`` the hint,
     shared with :func:`pq_encode_residual`); query probing stays on the
-    literal projection — the query side is the small side.
+    declarative ranking — the query side is the small side.
 
     ``rerank`` — the two-stage refine leg (FAISS IndexRefineFlat
     convention): rank candidates by the cheap PQ reconstruction, keep
@@ -1735,13 +1648,13 @@ def ivf_pq_topk(
     # inside this function — measured 3 + 5 driver-blocking jobs per
     # call at sf0.1 (round-13 opt).  Same convention as
     # _resolve_ivf_assignment's _cen_rows: the caller owns coherence.
-    assigned_fn, cen_lit, cen_rows, vectorized = _resolve_ivf_assignment(
+    assigned_fn, cen, cen_rows, vectorized = _resolve_ivf_assignment(
         corpus, centroids, vec, corpus_rows, _cen_rows=_cen_rows,
     )
     if rerank == "auto":
         rerank = vectorized
     query_probes = with_probed_centroids(
-        queries, centroids, probes, vec, "list_id", _cen_lit=cen_lit
+        queries, centroids, probes, vec, "list_id", _cen=cen
     )
     store_pruned = None
     if corpus_store is not None:
@@ -1914,11 +1827,11 @@ _SEM_TARGET_CLUSTER = 1024
 #: auto-k changes nothing below ~8k rows by construction.
 _SEM_K_FLOOR = 8
 
-#: semantic_dedup pairwise='auto' switches to the Arrow/numpy matmul
-#: pairwise at this corpus size.  Gated so every DuckDB-oracle scale
-#: (sf0.01: 500 rows, sf0.1: 2,000, ×10: 20k) stays on the bit-exact
-#: codegen'd join path — the same discipline as the 20k-literal
-#: centroid-tree budget.  ×30 and beyond (60k+) cross the gate, where
+#: semantic_dedup switches to the Arrow/numpy matmul pairwise (and
+#: the numpy assignment) at this corpus size.  Gated so every
+#: DuckDB-oracle scale (sf0.01: 500 rows, sf0.1: 2,000, ×10: 20k)
+#: stays on the bit-exact codegen'd join path and the declarative
+#: assignment.  ×30 and beyond (60k+) cross the gate, where
 #: the interpreted HOF dot product is the measured bottleneck (~10⁹
 #: interpreted dots = 1,102 s uncollapsed at ×1000).
 _SEM_VECTORIZE_MIN_ROWS = 50_000
@@ -2066,6 +1979,7 @@ def semantic_dedup_auto_k(
     return max(floor, math.ceil(n_rows / max(1, target_cluster_size)))
 
 
+@job_scope("datapipe.similarity.semantic_dedup")
 def semantic_dedup(
     corpus: DataFrame,
     num_centroids: int | None = 8,
@@ -2075,8 +1989,6 @@ def semantic_dedup(
     centroids: DataFrame | None = None,
     target_cluster_size: int = _SEM_TARGET_CLUSTER,
     collapse_exact: bool = True,
-    pairwise: str = "auto",
-    assignment_probes: int | None | str = "auto",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -2091,8 +2003,9 @@ def semantic_dedup(
 
     Plan shape, Spark-first:
     - assignment is the :func:`with_nearest_centroid` pure projection
-      (centroids compiled to a plan literal under the 20k budget,
-      broadcast past it) — zero corpus shuffle;
+      (centroids compiled to a plan literal under the 20k budget, a
+      broadcast one-row LocalRelation past it; exact either way) —
+      zero corpus shuffle;
     - within-cluster pairs come from a salted self equi-join on
       ``(list_id, salt)`` with the cosine filter inside the join; the
       staged assignment feeds three consumers (both join sides and
@@ -2114,10 +2027,7 @@ def semantic_dedup(
     ``count()`` at plan-build time (parquet-metadata cheap, and the
     knob it sets cannot come from a lazy plan); the floor of 8 makes
     it a semantic no-op below ~8k rows — every oracle scale resolves
-    to exactly k=8.  Past the 20k-literal budget the assignment itself
-    switches to the broadcast two-level centroid tree
-    (:func:`_centroid_tree_array`) — ~3√k cosines per row instead of
-    the O(n·k) flat scan.
+    to exactly k=8.
 
     ``collapse_exact`` (default on) runs the O(b²) pairwise over ONE
     representative per DISTINCT vector instead of per row — exact
@@ -2142,38 +2052,32 @@ def semantic_dedup(
     back; on corpora with heavy exact duplication the pairwise shrinks
     by the duplication factor squared.
 
-    ``pairwise`` selects the within-cluster pair engine: ``'join'`` is
-    the salted codegen'd self-join (bit-exact vs the DuckDB oracle —
-    its interpreted HOF dot evaluates left-to-right like the SQL
-    formula); ``'vectorized'`` is the Arrow ``applyInPandas`` blocked
-    numpy matmul (:func:`_pairwise_drops_vectorized`, same pair
-    semantics and salt fan-out, ~10–50× less per-dot cost — BLAS sum
-    order differs in ulps, so only the 4-decimal rounding boundary
-    could ever diverge); ``'auto'`` (default) takes the vectorized
-    path when the corpus row count is known (auto-k mode) and ≥
-    ``_SEM_VECTORIZE_MIN_ROWS`` — every oracle-checked scale stays on
-    the bit-exact join path, exactly like the centroid-tree literal
-    budget.
+    The within-cluster pair engine is picked by size, never by the
+    caller: the salted codegen'd self-join (bit-exact vs the DuckDB
+    oracle — its interpreted HOF dot evaluates left-to-right like the
+    SQL formula) until the corpus row count is known (auto-k, or a
+    ``corpus_rows`` hint) and ≥ :data:`_SEM_VECTORIZE_MIN_ROWS`; past
+    it the Arrow ``applyInPandas`` blocked numpy matmul
+    (:func:`_pairwise_drops_vectorized`, same pair semantics and salt
+    fan-out, ~10–50× less per-dot cost — BLAS sum order differs in
+    ulps, so only the 4-decimal rounding boundary could ever diverge).
+    Every oracle-checked scale stays on the join engine and the exact
+    declarative assignment.
 
-    ``assignment_probes`` (vectorized engine only): the assignment
-    search inside the vectorized path.  ``None`` forces the EXACT
-    all-k matmul; an int forces the two-level coarse/fine BLAS search
-    with that many coarse probes — O(n·√k·(1+probes)) vs O(n·k),
-    APPROXIMATE at coarse-cell boundaries (see
-    :func:`_assign_nearest_vectorized`).  The default ``'auto'`` is
-    FLOPs-budgeted (:func:`resolve_assignment_probes`): because auto-k
-    grows k with n, exact assignment is O(n²/target) — measured ~half
-    the ×10000 uncollapsed envelope (1,519 s exact vs 813 s tree,
-    kept-set divergence 6 of ~1900) — so past
-    :data:`_ASSIGN_EXACT_MAX_FLOPS` (n·k·dim) the tree becomes the
-    DEFAULT, not a knob.  The budget probe costs one ``first()`` for
-    the vector dim; oracle-checked scales resolve pairwise='join' and
-    never reach it.  The budget is computed on the CORPUS row count —
-    an upper bound of the assignment pool under ``collapse_exact``
-    (pool = distinct vectors); on the distinct-heavy corpora this
-    budget exists for, the two coincide, and on replication-heavy test
-    corpora the flip is merely conservative (the tree on a tiny pool
-    costs the same as exact).
+    The vectorized engine assigns with :func:`_assign_nearest_vectorized`:
+    the EXACT all-k matmul while n·k·dim fits
+    :data:`_ASSIGN_EXACT_MAX_FLOPS`, the two-level coarse/fine BLAS
+    search past it (:func:`resolve_assignment_probes`) —
+    O(n·√k·(1+probes)) vs O(n·k), APPROXIMATE at coarse-cell
+    boundaries.  Because auto-k grows k with n, exact assignment is
+    O(n²/target) — measured ~half the ×10000 uncollapsed envelope
+    (1,519 s exact vs 813 s tree, kept-set divergence 6 of ~1900).  The
+    budget costs one ``first()`` for the vector dim.  It is computed on
+    the CORPUS row count — an upper bound of the assignment pool under
+    ``collapse_exact`` (pool = distinct vectors); on the distinct-heavy
+    corpora this budget exists for, the two coincide, and on
+    replication-heavy test corpora the flip is merely conservative (the
+    tree on a tiny pool costs the same as exact).
 
     ``corpus_rows`` accuracy caveat (round-9 advisor, GUARDED since
     round 11): the hint is jobs-not-answers ONLY while the decisions
@@ -2186,15 +2090,11 @@ def semantic_dedup(
     at the flip threshold: a confirmed flip proceeds (the probe is one
     bounded scan, ≪ the assignment it gates), an inflated hint warns
     loudly and keeps the exact all-k search (property-pinned: no hint
-    value can change output at oracle scales).  An EXPLICIT
-    ``assignment_probes`` int remains the unguarded opt-in; pin
-    ``assignment_probes=None`` to force exact regardless of size.
+    value can change output at oracle scales).
     """
     from .costmodel import plan_rows
     from .dedup import spread_for_compute
 
-    if pairwise not in ("auto", "join", "vectorized"):
-        raise ValueError(f"pairwise must be auto|join|vectorized, got {pairwise!r}")
     # ``corpus_rows`` is the no-job size hint (100 TB contract: a
     # pipeline that already knows its corpus size passes it and the
     # auto-k / engine decisions run zero jobs).  Unlike the boolean
@@ -2212,115 +2112,92 @@ def semantic_dedup(
         if n_rows is None:
             n_rows = corpus.count()
         num_centroids = semantic_dedup_auto_k(n_rows, target_cluster_size)
-        if pairwise == "auto":
-            pairwise = (
-                "vectorized"
-                if n_rows >= _SEM_VECTORIZE_MIN_ROWS
-                else "join"
-            )
-    elif pairwise == "auto":
-        # explicit k = the oracle/test path; without a scale signal,
-        # stay on the bit-exact join engine — but an explicit
-        # corpus_rows hint IS a scale signal and is honored.
-        pairwise = (
-            "vectorized"
-            if n_rows is not None and n_rows >= _SEM_VECTORIZE_MIN_ROWS
-            else "join"
+    # explicit k = the oracle/test path; without a scale signal, stay on
+    # the bit-exact join engine — but an explicit corpus_rows hint IS a
+    # scale signal and is honored.
+    vectorized = n_rows is not None and n_rows >= _SEM_VECTORIZE_MIN_ROWS
+    coarse_probes = None
+    if vectorized:
+        dim_row = (
+            corpus.select(F.size(F.col(vec)).alias("_d"))
+            .filter(F.col("_d").isNotNull())
+            .first()
         )
-    if assignment_probes == "auto":
-        if pairwise == "vectorized":
-            if n_rows is None:
-                n_rows = plan_rows(corpus)
-            if n_rows is None:
-                n_rows = corpus.count()
-            dim_row = (
-                corpus.select(F.size(F.col(vec)).alias("_d"))
-                .filter(F.col("_d").isNotNull())
-                .first()
-            )
-            dim = dim_row["_d"] if dim_row else 0
-            assignment_probes = resolve_assignment_probes(
-                n_rows, num_centroids, dim
-            )
-            if assignment_probes is not None and corpus_rows is not None:
-                # The tree flip is ANSWER-affecting (approximate at
-                # coarse-cell boundaries), and here a caller HINT alone
-                # pushed it — cross-check with a BOUNDED limit-probe at
-                # the flip threshold before trusting it (round-10
-                # advisor: an over-stated hint must not silently change
-                # keep/drop).  At genuine decade scale the probe
-                # confirms in one bounded scan (≪ the assignment it
-                # gates); an inflated hint is exposed and the EXACT
-                # all-k search stands, loudly.
-                from .costmodel import (
-                    JVM_INT_MAX,
-                    rows_at_least,
-                    work_rows_threshold,
-                )
-
-                flip_rows = work_rows_threshold(
-                    _ASSIGN_EXACT_MAX_FLOPS,
-                    max(1, num_centroids) * max(1, dim),
-                )
-                # Small k·dim pushes flip_rows past the JVM int clamp
-                # (2^31−1), where the limit-probe saturates and can
-                # never CONFIRM the flip — probing at the clamped cap
-                # instead keeps the probe decisive in the one direction
-                # it can be: a corpus smaller than the cap is
-                # definitively smaller than the flip threshold too
-                # (round-11 advisor: an ACCURATE decade-scale hint must
-                # not be overridden with a false 'over-stated' warning
-                # after a 2^31-row scan that cannot succeed).
-                probe_cap = min(flip_rows, JVM_INT_MAX)
-                if not rows_at_least(corpus, probe_cap):
-                    import warnings
-
-                    warnings.warn(
-                        f"corpus_rows={corpus_rows} would flip the "
-                        "assignment to the APPROXIMATE two-level tree, "
-                        f"but a bounded probe found < {probe_cap} rows "
-                        "— the hint is over-stated; keeping the EXACT "
-                        "all-k assignment.  Pass assignment_probes "
-                        "explicitly to force the tree.",
-                        stacklevel=2,
-                    )
-                    assignment_probes = None
-                elif flip_rows > probe_cap:
-                    import warnings
-
-                    # The probe saturated at the JVM cap: the corpus is
-                    # confirmed ≥ 2^31−1 rows, the hint is plausible at
-                    # that magnitude, and the exact flip threshold is
-                    # unverifiable — trust the hint (the guard's target
-                    # — an inflated hint flipping a SMALL oracle corpus
-                    # — is excluded by the ≥2^31−1 confirmation) and
-                    # say the probe was inconclusive, not over-stated.
-                    warnings.warn(
-                        f"corpus_rows={corpus_rows} flips the assignment "
-                        "to the APPROXIMATE two-level tree; the bounded "
-                        f"probe confirmed ≥ {probe_cap} rows but the "
-                        f"flip threshold {flip_rows} exceeds the probe's "
-                        "JVM limit — proceeding on the hint "
-                        "(inconclusive probe).  Pin "
-                        "assignment_probes=None to force exact.",
-                        stacklevel=2,
-                    )
-        else:
-            assignment_probes = None
-    elif assignment_probes is not None and pairwise != "vectorized":
-        # the two-level search is a property of the vectorized
-        # assigner; silently ignoring it on the join engine would hide
-        # an output-affecting knob.
-        raise ValueError(
-            "assignment_probes requires the vectorized engine "
-            f"(resolved pairwise={pairwise!r})"
+        dim = dim_row["_d"] if dim_row else 0
+        coarse_probes = resolve_assignment_probes(
+            n_rows, num_centroids, dim
         )
+        if coarse_probes is not None and corpus_rows is not None:
+            # The tree flip is ANSWER-affecting (approximate at
+            # coarse-cell boundaries), and here a caller HINT alone
+            # pushed it — cross-check with a BOUNDED limit-probe at
+            # the flip threshold before trusting it (round-10
+            # advisor: an over-stated hint must not silently change
+            # keep/drop).  At genuine decade scale the probe
+            # confirms in one bounded scan (≪ the assignment it
+            # gates); an inflated hint is exposed and the EXACT
+            # all-k search stands, loudly.
+            from .costmodel import (
+                JVM_INT_MAX,
+                rows_at_least,
+                work_rows_threshold,
+            )
+
+            flip_rows = work_rows_threshold(
+                _ASSIGN_EXACT_MAX_FLOPS,
+                max(1, num_centroids) * max(1, dim),
+            )
+            # Small k·dim pushes flip_rows past the JVM int clamp
+            # (2^31−1), where the limit-probe saturates and can
+            # never CONFIRM the flip — probing at the clamped cap
+            # instead keeps the probe decisive in the one direction
+            # it can be: a corpus smaller than the cap is
+            # definitively smaller than the flip threshold too
+            # (round-11 advisor: an ACCURATE decade-scale hint must
+            # not be overridden with a false 'over-stated' warning
+            # after a 2^31-row scan that cannot succeed).
+            probe_cap = min(flip_rows, JVM_INT_MAX)
+            if not rows_at_least(corpus, probe_cap):
+                import warnings
+
+                warnings.warn(
+                    f"corpus_rows={corpus_rows} would flip the "
+                    "assignment to the APPROXIMATE two-level tree, "
+                    f"but a bounded probe found < {probe_cap} rows "
+                    "— the hint is over-stated; keeping the EXACT "
+                    "all-k assignment.",
+                    stacklevel=3,
+                )
+                coarse_probes = None
+            elif flip_rows > probe_cap:
+                import warnings
+
+                # The probe saturated at the JVM cap: the corpus is
+                # confirmed ≥ 2^31−1 rows, the hint is plausible at
+                # that magnitude, and the exact flip threshold is
+                # unverifiable — trust the hint (the guard's target
+                # — an inflated hint flipping a SMALL oracle corpus
+                # — is excluded by the ≥2^31−1 confirmation) and
+                # say the probe was inconclusive, not over-stated.
+                warnings.warn(
+                    f"corpus_rows={corpus_rows} flips the assignment "
+                    "to the APPROXIMATE two-level tree; the bounded "
+                    f"probe confirmed ≥ {probe_cap} rows but the "
+                    f"flip threshold {flip_rows} exceeds the probe's "
+                    "JVM limit — proceeding on the hint "
+                    "(inconclusive probe).",
+                    stacklevel=3,
+                )
     if centroids is None:
         # centroid SEEDS always come from the full corpus (pmod over
         # every id), so collapse_exact cannot change the clustering —
         # a precondition of its output-equality proof below.
         centroids = build_centroids(corpus, num_centroids, vec=vec, id_col=id_col)
-    cen_lit = None if pairwise == "vectorized" else _centroid_literal(centroids)
+    # collect BEFORE the pool below is built: collected after it, the
+    # optimizer failed the plan with `key not found: embedding#N` in
+    # the pool union's constraint propagation (Spark 4.1.2,
+    # semdedup_prune at sf0.01).
+    cen = None if vectorized else _centroid_set(centroids)
 
     # Exact-duplicate collapse (standard practice: exact dedup before
     # near-dup).  Identical vectors always share a cluster (assignment
@@ -2381,11 +2258,10 @@ def semantic_dedup(
         # dedup.spread_for_compute); the collapse branch is already
         # distributed by its groupBy exchange.
         pool = spread_for_compute(corpus.select(id_col, vec), id_col)
-    if pairwise == "vectorized":
-        # exact all-k numpy assignment: the interpreted tree assignment
-        # was THE residual cost once the pairwise went vectorized
-        # (measured 205 s of 238 s at ×1000) — and the matmul probes
-        # all k, so assignment is EXACT here, not boundary-approximate.
+    if vectorized:
+        # numpy assignment: the interpreted assignment was THE residual
+        # cost once the pairwise went vectorized (measured 205 s of
+        # 238 s at ×1000).  Exact all-k under _ASSIGN_EXACT_MAX_FLOPS.
         # Degenerate/NaN flags MUST come from the pre-pandas vector:
         # the Arrow round-trip rewrites NULL elements as NaN (see
         # _pairwise_drops_vectorized).
@@ -2401,21 +2277,18 @@ def semantic_dedup(
         )
         assigned = _assign_nearest_vectorized(
             flagged, centroids, vec, "list_id",
-            coarse_probes=assignment_probes,
+            coarse_probes=coarse_probes,
         ).select(
             id_col, "list_id", F.col(vec).alias("_v"), "_deg", "_isnan"
         )
     else:
-        # over_budget='tree' (not the exact-matmul default): the join
-        # engine's NULL-vs-NaN-element pairwise semantics are defined
+        # declarative at every k·dim: the join engine's
+        # NULL-vs-NaN-element pairwise semantics are defined
         # declaratively, and the Arrow round-trip in the vectorized
         # assigner would rewrite NULL elements to NaN before the
-        # interpreted pairwise ever saw them.  (Unreachable from
-        # pairwise='auto': auto-k only exceeds the literal budget at
-        # row counts that already selected the vectorized engine.)
+        # interpreted pairwise ever saw them.
         assigned = with_nearest_centroid(
-            pool, centroids, vec, "list_id", _cen_lit=cen_lit,
-            over_budget="tree",
+            pool, centroids, vec, "list_id", _cen=cen
         ).select(id_col, "list_id", F.col(vec).alias("_v"))
 
     # Stage the double cast and the vector norm ONCE PER ROW before the
@@ -2428,7 +2301,7 @@ def semantic_dedup(
     # interpreted per-row norm there.)
     dbl = F.transform(F.col("_v"), lambda x: x.cast("double"))
     staged = assigned.withColumn("_dv", dbl)
-    if pairwise != "vectorized":
+    if not vectorized:
         staged = staged.withColumn(
             "_nn",
             F.sqrt(
@@ -2450,7 +2323,7 @@ def semantic_dedup(
     # eager driver barrier at plan-build time; every later reference
     # still reads the persisted blocks.
     staged = staged.localCheckpoint(eager=False)
-    if pairwise == "vectorized":
+    if vectorized:
         # Arrow/numpy blocked-matmul engine — same pair semantics and
         # salt fan-out as the join below, ~10–50× cheaper per dot (the
         # ×1000 uncollapsed envelope was ~10⁹ INTERPRETED HOF dots =

@@ -11,11 +11,19 @@ join envelope at ×1000: 1,102 s).
 Usage:
     SPARK_GRAFT_SCALE=1000 python scripts/bench_semdedup_envelope.py [join|vectorized|vectorized-tree|both]
 
-``vectorized-tree`` adds assignment_probes=2 (the two-level BLAS
-assignment) — the eighth-decade lever: past ~20M rows auto-k makes the
-EXACT all-k assignment matmul the dominant term (O(n^2/target)), and
-the coarse/fine search cuts it ~sqrt(k)/ (1+probes)-fold at the cost of
-coarse-boundary approximation (kept counts reported for comparison).
+(``scripts/bench_scale.py`` generates the replicated set; with
+``SPARK_GRAFT_BENCH_TABLES=embeddings`` it writes only this table.)
+
+semantic_dedup picks its engines by size, so each mode moves the size
+gates instead: ``join`` lifts ``_SEM_VECTORIZE_MIN_ROWS`` past the
+corpus, ``vectorized`` drops it to 0 and lifts
+``_ASSIGN_EXACT_MAX_FLOPS`` (exact all-k assignment), and
+``vectorized-tree`` drops both to 0 (the two-level BLAS assignment with
+``_TREE_COARSE_PROBES`` probes) — the eighth-decade lever: past ~20M
+rows auto-k makes the EXACT all-k assignment matmul the dominant term
+(O(n^2/target)), and the coarse/fine search cuts it
+~sqrt(k)/(1+probes)-fold at the cost of coarse-boundary approximation
+(kept counts reported for comparison).
 """
 
 from __future__ import annotations
@@ -24,6 +32,7 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -59,16 +68,24 @@ def main() -> int:
         "est_max_members": SCALE,
         "est_pairwise_salt": est_salt,
     }
+    gates = {
+        "join": {"_SEM_VECTORIZE_MIN_ROWS": n + 1},
+        "vectorized": {
+            "_SEM_VECTORIZE_MIN_ROWS": 0,
+            "_ASSIGN_EXACT_MAX_FLOPS": float("inf"),
+        },
+        "vectorized-tree": {
+            "_SEM_VECTORIZE_MIN_ROWS": 0,
+            "_ASSIGN_EXACT_MAX_FLOPS": 0.0,
+        },
+    }
     for engine in engines:
-        probes = 2 if engine == "vectorized-tree" else None
         t0 = time.monotonic()
-        res = sim.semantic_dedup(
-            emb, num_centroids=None, tau=0.3,
-            collapse_exact=False,
-            pairwise="vectorized" if probes else engine,
-            assignment_probes=probes,
-        )
-        kept = res.filter("keep").count()
+        with patch.multiple(sim, **gates[engine]):
+            res = sim.semantic_dedup(
+                emb, num_centroids=None, tau=0.3, collapse_exact=False
+            )
+            kept = res.filter("keep").count()
         out[engine] = {"sec": round(time.monotonic() - t0, 1), "kept": kept}
         print(f"{engine}: {out[engine]}", file=sys.stderr)
     print(json.dumps(out))

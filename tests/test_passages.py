@@ -266,123 +266,72 @@ def test_semantic_dedup_auto_k_matches_pinned_k_below_floor(spark):
     assert auto == pinned and len(auto) > 0
 
 
-def test_tree_assignment_matches_flat_on_separated_clusters(spark, monkeypatch):
-    """Past the literal budget, with_nearest_centroid switches to the
-    two-level centroid tree.  On well-separated clusters the tree
-    (default 2 coarse probes) must reproduce the flat argmin exactly —
-    and the per-row work drops from k to ~sqrt(k)·(1+probes) cosines."""
+def _sincos_geometry(spark, k=30, dim=6, n=80, step=1.7):
+    """Adversarial assignment geometry: k centroids ``step`` radians
+    apart on a sine curve and n corpus rows on a cosine curve, many of
+    them near a coarse-cell boundary of a two-level centroid tree."""
     import math
 
-    from dump1090_postgis_spark.datapipe import similarity as sim
-
-    # 24 fine centroids on a ring in 8-d (well separated), 120 corpus
-    # rows jittered around them deterministically
-    k, dim = 24, 8
-    cents = []
-    for j in range(k):
-        v = [0.0] * dim
-        v[j % dim] = 1.0 + 0.05 * (j // dim)
-        v[(j + 3) % dim] = 0.3 * (j // dim + 1)
-        cents.append((j, v))
     cdf = spark.createDataFrame(
-        cents, "centroid_id bigint, centroid array<double>"
+        [(j, [math.sin(j * step + d) for d in range(dim)]) for j in range(k)],
+        "centroid_id bigint, centroid array<double>",
     )
-    rows = []
-    for i in range(120):
-        j = i % k
-        base = cents[j][1]
-        rows.append((i, [x + 0.01 * ((i * 7 + d) % 5 - 2) for d, x in enumerate(base)]))
-    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-
-    flat = {
-        (r.vec_id, r.list_id)
-        for r in sim.with_nearest_centroid(corpus, cdf, "embedding").collect()
-    }
-    # force the over-budget path (k*dim=192 < 20k normally)
-    monkeypatch.setattr(sim, "_LITERAL_COMPILE_LIMIT", 1)
-    tree = {
-        (r.vec_id, r.list_id)
-        for r in sim.with_nearest_centroid(
-            corpus, cdf, "embedding", over_budget="tree"
-        ).collect()
-    }
-    assert tree == flat and len(tree) == 120
-    # the over-budget DEFAULT (exact Arrow matmul) must match too
-    exact = {
-        (r.vec_id, r.list_id)
-        for r in sim.with_nearest_centroid(corpus, cdf, "embedding").collect()
-    }
-    assert exact == flat
-
-
-def test_tree_assignment_exhaustive_probes_is_exact(spark, monkeypatch):
-    """With coarse_probes = number of coarse cells the tree search is
-    exhaustive, so it must equal the flat argmin on ANY geometry —
-    including adversarial boundary-straddling vectors."""
-    import math
-
-    from dump1090_postgis_spark.datapipe import similarity as sim
-
-    k, dim = 30, 6
-    cents = [
-        (j, [math.sin(j * 1.7 + d) for d in range(dim)]) for j in range(k)
-    ]
-    cdf = spark.createDataFrame(
-        cents, "centroid_id bigint, centroid array<double>"
+    corpus = spark.createDataFrame(
+        [(i, [math.cos(i * 0.9 + d) for d in range(dim)]) for i in range(n)],
+        "vec_id bigint, embedding array<float>",
     )
-    rows = [
-        (i, [math.cos(i * 0.9 + d) for d in range(dim)]) for i in range(80)
-    ]
-    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    flat = {
-        (r.vec_id, r.list_id)
-        for r in sim.with_nearest_centroid(corpus, cdf, "embedding").collect()
-    }
-    monkeypatch.setattr(sim, "_LITERAL_COMPILE_LIMIT", 1)
-    monkeypatch.setattr(sim, "_TREE_COARSE_PROBES", max(2, math.ceil(math.sqrt(k))))
-    tree = {
-        (r.vec_id, r.list_id)
-        for r in sim.with_nearest_centroid(
-            corpus, cdf, "embedding", over_budget="tree"
-        ).collect()
-    }
-    assert tree == flat
+    return corpus, cdf
 
 
 def test_over_budget_default_assignment_is_exact_on_adversarial_geometry(
     spark, monkeypatch
 ):
-    """Past the literal budget the DEFAULT with_nearest_centroid path
-    is the all-k Arrow matmul — exact on ANY geometry at default
-    settings, including the boundary-straddling vectors where the
-    2-probe tree is only guaranteed with exhaustive probes.  This is
-    what makes the over-budget ivf_topk corpus assignment symmetric
-    with its (exact) query probing."""
-    import math
-
+    """Past the literal budget with_nearest_centroid ranks the same
+    centroids from a broadcast one-row frame: exact on ANY geometry,
+    declarative (no Python node in the plan), and equal to the literal
+    path and to the all-k Arrow matmul the callers' FLOPs gates pick.
+    This is what makes the over-budget ivf_topk query probing
+    symmetric with its corpus assignment."""
     from dump1090_postgis_spark.datapipe import similarity as sim
 
-    k, dim = 30, 6
-    cents = [
-        (j, [math.sin(j * 1.7 + d) for d in range(dim)]) for j in range(k)
-    ]
-    cdf = spark.createDataFrame(
-        cents, "centroid_id bigint, centroid array<double>"
-    )
-    rows = [
-        (i, [math.cos(i * 0.9 + d) for d in range(dim)]) for i in range(80)
-    ]
-    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    corpus, cdf = _sincos_geometry(spark)
     flat = {
         (r.vec_id, r.list_id)
         for r in sim.with_nearest_centroid(corpus, cdf, "embedding").collect()
     }
-    monkeypatch.setattr(sim, "_LITERAL_COMPILE_LIMIT", 1)
-    exact = {
+    vectorized = {
         (r.vec_id, r.list_id)
-        for r in sim.with_nearest_centroid(corpus, cdf, "embedding").collect()
+        for r in sim._assign_nearest_vectorized(corpus, cdf, "embedding").collect()
     }
-    assert exact == flat and len(exact) == 80
+    monkeypatch.setattr(sim, "_LITERAL_COMPILE_LIMIT", 1)
+    over = sim.with_nearest_centroid(corpus, cdf, "embedding")
+    assert "MapInPandas" not in over._jdf.queryExecution().executedPlan().toString()
+    exact = {(r.vec_id, r.list_id) for r in over.collect()}
+    assert exact == flat == vectorized and len(exact) == 80
+
+
+def test_semantic_dedup_over_literal_budget_is_exact(spark, monkeypatch):
+    """Past the literal budget (k·dim > 20,000, e.g. the default k=8 on
+    embeddings wider than 2,500 dims) the default semantic_dedup
+    assignment must stay exact: same list_id and keep flag for every
+    row as the literal path.  On this geometry a two-level tree with 2
+    of its 6 coarse cells probed puts 7 of the 80 rows in another
+    cluster."""
+    from dump1090_postgis_spark.datapipe import similarity as sim
+
+    corpus, cdf = _sincos_geometry(spark, step=0.37)
+
+    def run():
+        return {
+            (r.vec_id, r.list_id, r.keep)
+            for r in sim.semantic_dedup(
+                corpus, centroids=cdf, tau=0.95
+            ).collect()
+        }
+
+    literal = run()
+    monkeypatch.setattr(sim, "_LITERAL_COMPILE_LIMIT", 1)
+    assert run() == literal and len(literal) == 80
 
 
 def test_numpy_tree_assignment_matches_exact_on_separated_clusters(spark):
@@ -391,8 +340,6 @@ def test_numpy_tree_assignment_matches_exact_on_separated_clusters(spark):
     and on ANY geometry with exhaustive probes — including NULL /
     NULL-element / NaN / zero-norm rows (min-centroid-id fallback on
     both paths)."""
-    import math
-
     from dump1090_postgis_spark.datapipe import similarity as sim
 
     k, dim = 24, 8
@@ -435,15 +382,8 @@ def test_numpy_tree_assignment_matches_exact_on_separated_clusters(spark):
         assert (bad_id, 0) in tree  # min-centroid-id fallback
 
     # adversarial geometry: exhaustive probes == exact
-    k2, dim2 = 30, 6
-    cents2 = spark.createDataFrame(
-        [(j, [math.sin(j * 1.7 + d) for d in range(dim2)]) for j in range(k2)],
-        "centroid_id bigint, centroid array<double>",
-    )
-    corpus2 = spark.createDataFrame(
-        [(i, [math.cos(i * 0.9 + d) for d in range(dim2)]) for i in range(80)],
-        "vec_id bigint, embedding array<float>",
-    )
+    k2 = 30
+    corpus2, cents2 = _sincos_geometry(spark, k=k2)
     exact2 = {
         (r.vec_id, r.list_id)
         for r in sim._assign_nearest_vectorized(
@@ -459,35 +399,40 @@ def test_numpy_tree_assignment_matches_exact_on_separated_clusters(spark):
     assert tree2 == exact2
 
 
-def test_semantic_dedup_assignment_probes_contract(spark):
-    """assignment_probes composes with the vectorized engine (same
-    verdicts as exact assignment on separated data) and raises on the
-    join engine rather than silently changing outputs."""
-    import pytest as _pytest
-
+def test_semantic_dedup_assignment_probes_contract(spark, monkeypatch):
+    """Past _ASSIGN_EXACT_MAX_FLOPS the vectorized engine assigns with
+    the numpy tree (_TREE_COARSE_PROBES coarse probes); with probes
+    covering every coarse cell it must give the same verdicts as the
+    exact all-k assignment."""
     from dump1090_postgis_spark.datapipe import similarity as sim
     from dump1090_postgis_spark.schemas import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    exact = {
-        (r.vec_id, r.keep)
-        for r in sim.semantic_dedup(
-            emb, num_centroids=8, tau=0.3, pairwise="vectorized"
-        ).collect()
-    }
-    probed = {
-        (r.vec_id, r.keep)
-        for r in sim.semantic_dedup(
-            emb, num_centroids=8, tau=0.3, pairwise="vectorized",
-            assignment_probes=8,  # 8 cells of 8 fines → exhaustive
-        ).collect()
-    }
-    assert probed == exact and len(probed) > 0
-    with _pytest.raises(ValueError, match="assignment_probes"):
-        sim.semantic_dedup(
-            emb, num_centroids=8, tau=0.3, pairwise="join",
-            assignment_probes=2,
-        )
+    n = emb.count()
+    calls: list = []
+    orig = sim._assign_nearest_vectorized
+
+    def spy(df, centroids, vec, out="list_id", coarse_probes=None):
+        calls.append(coarse_probes)
+        return orig(df, centroids, vec, out, coarse_probes=coarse_probes)
+
+    monkeypatch.setattr(sim, "_assign_nearest_vectorized", spy)
+    monkeypatch.setattr(sim, "_SEM_VECTORIZE_MIN_ROWS", n)
+
+    def run():
+        return {
+            (r.vec_id, r.keep)
+            for r in sim.semantic_dedup(
+                emb, num_centroids=8, tau=0.3, corpus_rows=n
+            ).collect()
+        }
+
+    exact = run()
+    monkeypatch.setattr(sim, "_ASSIGN_EXACT_MAX_FLOPS", 1.0)
+    monkeypatch.setattr(sim, "_TREE_COARSE_PROBES", 8)  # ≥ the 3 coarse cells
+    probed = run()
+    assert calls == [None, 8]
+    assert probed == exact and len(probed) == n
 
 
 def test_ivf_topk_over_budget_matches_literal_plan(spark, monkeypatch):
@@ -513,6 +458,82 @@ def test_ivf_topk_over_budget_matches_literal_plan(spark, monkeypatch):
         for r in sim.ivf_topk(corpus, queries, cents, k=3, probes=2).collect()
     }
     assert over == lit and len(over) > 0
+
+
+def test_over_budget_probing_reads_collected_centroids(spark, sf_dir, monkeypatch):
+    """Past the literal budget the query probes rank the centroid rows
+    the caller already collected (a broadcast one-row LocalRelation),
+    never the lazy centroid frame: the optimized plans of
+    with_probed_centroids and of ivf_topk hold no Aggregate and scan
+    each input once, as under the budget."""
+    import re
+
+    from dump1090_postgis_spark.datapipe import similarity as sim
+    from dump1090_postgis_spark.schemas import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.limit(200)
+    queries = emb.limit(5)
+    cents = sim.build_centroids(corpus, 8)
+
+    def shape(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        aggregates = len(re.findall(r"^[\s:+-]*Aggregate ", plan, re.M))
+        return aggregates, len(re.findall(r"Relation \[[^\]]*\] parquet", plan))
+
+    def plans():
+        return (
+            shape(sim.with_probed_centroids(queries, cents, 2, "embedding")),
+            shape(sim.ivf_topk(corpus, queries, cents, k=3, probes=2)),
+        )
+
+    literal = plans()
+    assert literal == ((0, 1), (0, 2))
+    monkeypatch.setattr(sim, "_LITERAL_COMPILE_LIMIT", 1)
+    assert plans() == literal
+
+
+def _job_descriptions(spark, build):
+    """Descriptions of the Spark jobs ``build()`` runs."""
+    sc = spark.sparkContext
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        listed = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            sc._jsc.sc().statusStore().jobsList(None)
+        )
+        return {
+            j.jobId(): j.description().get() if j.description().isDefined() else ""
+            for j in listed
+        }
+
+    last = max(jobs(), default=-1)
+    build()
+    return [d for i, d in sorted(jobs().items()) if i > last]
+
+
+@pytest.mark.parametrize(
+    "query, scope, eager_jobs",
+    [
+        ("semdedup_prune", "datapipe.similarity.semantic_dedup", 6),
+        ("ann_topk_ivf", "datapipe.similarity.ivf_topk", 4),
+    ],
+)
+def test_similarity_build_jobs_are_pinned_and_named(
+    spark, sf_dir, query, scope, eager_jobs
+):
+    """The jobs an oracle query runs while it builds its plan at sf0.01
+    are pinned: the parquet read's schema job, then the centroid
+    collect and its stages, each named after the similarity entry
+    point that ran it."""
+    import os
+
+    from dump1090_postgis_spark.plans.datapipe_queries import REGISTRY
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    descs = _job_descriptions(spark, lambda: REGISTRY[query][0](spark, sf001))
+    assert len(descs) == eager_jobs, descs
+    assert scope not in descs[0] and all(scope in d for d in descs[1:]), descs
 
 
 def test_ivf_degenerate_corpus_vectors_never_rank_first(spark, monkeypatch):
@@ -640,17 +661,17 @@ def test_semantic_dedup_collapse_exact_on_replicated_corpus(spark):
     assert collapsed == full and len(collapsed) == 108
 
 
-def test_semantic_dedup_vectorized_pairwise_matches_join(spark):
-    """The Arrow/numpy matmul pairwise (pairwise='vectorized') must
-    agree row-for-row with the codegen'd salted self-join
-    (pairwise='join') — including the edge rows where Spark comparison
-    semantics bite: NULL vectors and NULL-element vectors (inert),
+def test_semantic_dedup_vectorized_pairwise_matches_join(spark, monkeypatch):
+    """The Arrow/numpy matmul pairwise (past _SEM_VECTORIZE_MIN_ROWS)
+    must agree row-for-row with the codegen'd salted self-join —
+    including the edge rows where Spark comparison semantics bite:
+    NULL vectors and NULL-element vectors (inert),
     NaN-component vectors (poisonous: NaN >= tau is TRUE under
     nanSafeCompare), exact duplicates, and near-duplicates — in both
     collapse modes."""
     import math
 
-    from dump1090_postgis_spark.datapipe.similarity import semantic_dedup
+    from dump1090_postgis_spark.datapipe import similarity as sim
 
     base = [[math.sin(j * 1.7 + d) for d in range(6)] for j in range(10)]
     rows = []
@@ -667,21 +688,23 @@ def test_semantic_dedup_vectorized_pairwise_matches_join(spark):
         (54, [float("nan"), 1.0, 0.0, 0.0, 0.0, 0.0]),  # identical NaN
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def run(collapse, corpus_rows=None):
+        out = sim.semantic_dedup(
+            emb, num_centroids=3, tau=0.6,
+            collapse_exact=collapse, corpus_rows=corpus_rows,
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = {(r.vec_id, r.list_id, r.keep) for r in out.collect()}
+        return "FlatMapGroupsInPandas" in plan, got
+
+    monkeypatch.setattr(sim, "_SEM_VECTORIZE_MIN_ROWS", len(rows))
     for collapse in (False, True):
-        joined = {
-            (r.vec_id, r.list_id, r.keep)
-            for r in semantic_dedup(
-                emb, num_centroids=3, tau=0.6,
-                collapse_exact=collapse, pairwise="join",
-            ).collect()
-        }
-        vec = {
-            (r.vec_id, r.list_id, r.keep)
-            for r in semantic_dedup(
-                emb, num_centroids=3, tau=0.6,
-                collapse_exact=collapse, pairwise="vectorized",
-            ).collect()
-        }
+        # no hint: no scale signal, the join engine; the accurate
+        # hint reaches the patched gate, the vectorized engine
+        join_pandas, joined = run(collapse)
+        vec_pandas, vec = run(collapse, corpus_rows=len(rows))
+        assert (join_pandas, vec_pandas) == (False, True)
         assert vec == joined and len(vec) == 55, f"collapse={collapse}"
 
 

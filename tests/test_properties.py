@@ -404,15 +404,16 @@ def test_auto_dispatch_flip_point_engines_value_match(spark):
     emb.unpersist()
 
 
-def test_inflated_corpus_rows_hint_cannot_change_semantic_dedup(spark):
+def test_inflated_corpus_rows_hint_cannot_change_semantic_dedup(
+    spark, monkeypatch
+):
     """Round-10 verdict #4: an over-stated ``corpus_rows`` hint used
     to be able to silently flip the vectorized assignment to the
     APPROXIMATE two-level tree past the FLOPs wall — changing
     keep/drop output, not just the plan.  The guard cross-checks a
     hint-driven flip with a bounded probe: for EVERY hint magnitude,
-    output at oracle scale equals the no-hint truth, the flip warns
-    loudly, and only an EXPLICIT assignment_probes int opts into the
-    tree."""
+    output at oracle scale equals the no-hint truth and the flip warns
+    loudly; only a flip the probe confirms runs the tree."""
     import random
     import warnings as _w
 
@@ -448,13 +449,19 @@ def test_inflated_corpus_rows_hint_cannot_change_semantic_dedup(spark):
             assert any(
                 "over-stated" in str(w.message) for w in caught
             ), f"hint={hint} flipped without a loud warning"
-    # explicit int = the unguarded opt-in: the tree runs (approximate
-    # by contract), covering every corpus row exactly once
-    opted = sim.semantic_dedup(
-        emb, num_centroids=4, tau=0.3, pairwise="vectorized",
-        assignment_probes=2,
-    )
-    assert opted.count() == 60
+    # an accurate hint past (patched) gates: the probe confirms the
+    # flip, so the tree runs (approximate by contract) without a
+    # warning, covering every corpus row exactly once
+    monkeypatch.setattr(sim, "_SEM_VECTORIZE_MIN_ROWS", 60)
+    monkeypatch.setattr(sim, "_ASSIGN_EXACT_MAX_FLOPS", 1.0)
+    with _w.catch_warnings(record=True) as caught:
+        _w.simplefilter("always")
+        confirmed = sim.semantic_dedup(
+            emb, num_centroids=4, tau=0.3, corpus_rows=60
+        )
+    assert not any("corpus_rows" in str(w.message) for w in caught)
+    assert "FlatMapGroupsInPandas" in _plan(confirmed)
+    assert confirmed.count() == 60
     emb.unpersist()
 
 
